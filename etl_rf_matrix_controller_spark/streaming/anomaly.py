@@ -35,10 +35,11 @@ from pyspark.sql.types import (
 
 from etl_rf_matrix_controller_spark.plans.registry import declared
 from etl_rf_matrix_controller_spark.plans.scale import adaptive_state_shards
+from etl_rf_matrix_controller_spark.streaming.windows import (
+    _events_stream,
+    run_stream_to_memory,
+)
 
-# superseded by plans/scale.py::adaptive_state_shards (round 11); kept
-# as the documented historical constant for the round-8 measurement.
-ZSCORE_STATE_SHARDS = 1024
 # Scored only once >= ZSCORE_MIN_PRIOR prior events exist (variance of a
 # single point is meaningless); anomaly threshold is |z| > 3.
 ZSCORE_MIN_PRIOR = 2
@@ -110,7 +111,6 @@ def _moment_scorer(key, pdf_iter, state: GroupState):
 def stream_zscore_rows(
     events_stream: DataFrame,
     spark: SparkSession,
-    name: str,
     progress_holder: list | None = None,
 ) -> DataFrame:
     """Run the sharded running-moment scorer to completion (availableNow);
@@ -133,17 +133,7 @@ def stream_zscore_rows(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if progress_holder is not None:
-        progress_holder.extend(q.recentProgress)
-    return spark.table(name)
+    return run_stream_to_memory(out, spark, "update", progress_holder)
 
 
 @declared(
@@ -194,19 +184,7 @@ def stream_zscore_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     Stream == batch pinned across 3 real micro-batches in
     tests/test_round7b_ops.py, including anomalies whose prior
     window STRADDLES a batch boundary."""
-    from etl_rf_matrix_controller_spark.sources.tables import (
-        normalize_events_ts,
-        set_events_read_confs,
-    )
-
-    set_events_read_confs(spark)
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream = normalize_events_ts(
-        spark.readStream.schema(batch.schema).parquet(
-            sf_dir, pathGlobFilter="events.parquet"
-        )
-    )
-    rows = stream_zscore_rows(stream, spark, "zscore_anomaly_stream")
+    rows = stream_zscore_rows(_events_stream(spark, sf_dir), spark)
     return (
         rows.groupBy("user_id")
         .agg(

@@ -81,6 +81,9 @@ from etl_rf_matrix_controller_spark.streaming.neardup import (
     _bands_union_sql,
     _mh_sql,
 )
+from etl_rf_matrix_controller_spark.streaming.windows import (
+    run_stream_to_memory,
+)
 
 _VERDICT_SCHEMA = StructType(
     [
@@ -205,7 +208,6 @@ def stream_admission_records(
     docs_stream: DataFrame,
     spark: SparkSession,
     cap: int,
-    name: str,
     progress_holder: list | None = None,
 ) -> DataFrame:
     """Run the composed admission over a streaming (doc_id, text) frame
@@ -280,17 +282,9 @@ def stream_admission_records(
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    q = (
-        records.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if progress_holder is not None:
-        progress_holder.extend(q.recentProgress)
-    return spark.table(name).distinct()
+    return run_stream_to_memory(
+        records, spark, "update", progress_holder
+    ).distinct()
 
 
 def resolve_admission_counts(
@@ -568,7 +562,5 @@ def stream_curation_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
             sf_dir, pathGlobFilter="documents.parquet"
         )
     )
-    records = stream_admission_records(
-        stream, spark, NEARDUP_DF_CAP, "curation_admission_stream"
-    )
+    records = stream_admission_records(stream, spark, NEARDUP_DF_CAP)
     return resolve_admission_counts(records, fan_out(batch_docs))

@@ -24,12 +24,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from etl_rf_matrix_controller_spark.streaming.windows import (
+    run_stream_to_memory,
+)
+
 
 def dedup_stream_within_watermark(
     spark: SparkSession,
     src_dir: str,
     schema: StructType,
-    query_name: str,
     delay: str = "1 hour",
 ) -> DataFrame:
     """Run a file-fed stream through watermarked exact dedup to completion.
@@ -53,12 +56,4 @@ def dedup_stream_within_watermark(
         .withWatermark("ts", delay)
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return run_stream_to_memory(stream, spark, "append")

@@ -170,7 +170,5 @@ def stream_page_hinkley_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = _events_stream(spark, sf_dir)
-    daily = run_stream_to_memory(
-        ph_daily_sums(ev), "ph_daily_stream", spark
-    )
+    daily = run_stream_to_memory(ph_daily_sums(ev), spark)
     return ph_fold(daily)

@@ -53,19 +53,20 @@ from etl_rf_matrix_controller_spark.operators.dedup import (
 )
 from etl_rf_matrix_controller_spark.plans.registry import declared
 from etl_rf_matrix_controller_spark.plans.scale import adaptive_state_shards
+from etl_rf_matrix_controller_spark.streaming.windows import (
+    run_stream_to_memory,
+)
 
 # First-`cap` docs retained per (band, bkey): the near-dup ingest df-cap.
 NEARDUP_DF_CAP = 50
-# State keys are SHARDED: hash(band, bkey) % NEARDUP_STATE_SHARDS is the
+# State keys are SHARDED: hash(band, bkey) % the shard count from
+# plans/scale.py::adaptive_state_shards is the
 # applyInPandasWithState group key, each shard's state holding a map of
 # its bucket keys -> retained ids.  Keying state by raw bkey made one
 # Python/pandas group per bucket: ~140k singleton groups at sf0.1 cost
 # ~0.2 ms of per-group overhead each (30.8 s measured, vs 2 s sharded).
 # Sharding bounds group count at any corpus size; per-bucket semantics
 # are untouched (buckets are processed independently inside the shard).
-# Superseded by plans/scale.py::adaptive_state_shards (round 11); kept
-# as the documented historical constant for the round-8 measurement.
-NEARDUP_STATE_SHARDS = 1024
 
 _PAIR_SCHEMA = StructType(
     [StructField("doc_a", LongType()), StructField("doc_b", LongType())]
@@ -121,7 +122,6 @@ def stream_band_candidates(
     docs_stream: DataFrame,
     spark: SparkSession,
     cap: int,
-    name: str,
     progress_holder: list | None = None,
 ) -> DataFrame:
     """Run the banded admission state op over a streaming (doc_id, text)
@@ -156,17 +156,9 @@ def stream_band_candidates(
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    q = (
-        pairs.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if progress_holder is not None:
-        progress_holder.extend(q.recentProgress)
-    return spark.table(name).distinct()
+    return run_stream_to_memory(
+        pairs, spark, "update", progress_holder
+    ).distinct()
 
 
 def batch_band_candidates(docs: DataFrame, cap: int) -> DataFrame:
@@ -314,9 +306,7 @@ def stream_near_dup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
             sf_dir, pathGlobFilter="documents.parquet"
         )
     )
-    cand = stream_band_candidates(
-        stream, spark, NEARDUP_DF_CAP, "near_dup_admission_stream"
-    )
+    cand = stream_band_candidates(stream, spark, NEARDUP_DF_CAP)
     # batch-side verification over the candidate-scaled pair set: only
     # docs that appear in a candidate pair need token sets, so semi-join
     # the fan-out down to the candidate ids (collision-scaled,

@@ -28,6 +28,10 @@ from pyspark.sql.types import (
 )
 
 from etl_rf_matrix_controller_spark.plans.registry import declared
+from etl_rf_matrix_controller_spark.streaming.windows import (
+    _events_stream,
+    run_stream_to_memory,
+)
 
 # Admission cap per stratum (event_type).
 STRAT_SAMPLE_K = 100
@@ -80,7 +84,6 @@ def stream_stratified_rows(
     events_stream: DataFrame,
     spark: SparkSession,
     k: int,
-    name: str,
     progress_holder: list | None = None,
 ) -> DataFrame:
     """Run the admission sampler over a streaming events frame to
@@ -99,17 +102,7 @@ def stream_stratified_rows(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if progress_holder is not None:
-        progress_holder.extend(q.recentProgress)
-    return spark.table(name)
+    return run_stream_to_memory(out, spark, "update", progress_holder)
 
 
 @declared(
@@ -146,20 +139,8 @@ def stream_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     entire sink volume.  Stream == batch across time-ordered
     micro-batches pinned in tests/test_streaming_sampling.py, including
     a stratum that FILLS mid-stream and admits nothing after."""
-    from etl_rf_matrix_controller_spark.sources.tables import (
-        normalize_events_ts,
-        set_events_read_confs,
-    )
-
-    set_events_read_confs(spark)
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream = normalize_events_ts(
-        spark.readStream.schema(batch.schema).parquet(
-            sf_dir, pathGlobFilter="events.parquet"
-        )
-    )
     rows = stream_stratified_rows(
-        stream, spark, STRAT_SAMPLE_K, "stratified_sample_stream"
+        _events_stream(spark, sf_dir), spark, STRAT_SAMPLE_K
     )
     return rows.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_sampled"),

@@ -19,7 +19,10 @@ the same layout the batch window-dedup shuffle uses.
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
@@ -29,12 +32,16 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+from pyspark.sql.window import Window
 
 from etl_rf_matrix_controller_spark.sources.tables import (
     normalize_events_ts,
     set_events_read_confs,
 )
-from etl_rf_matrix_controller_spark.streaming.windows import _events_stream
+from etl_rf_matrix_controller_spark.streaming.windows import (
+    _events_stream,
+    run_stream_to_memory,
+)
 
 STATE_SCHEMA = StructType(
     [
@@ -53,6 +60,16 @@ OUTPUT_SCHEMA = StructType(
         StructField("last_ts", TimestampType()),
     ]
 )
+
+
+def _last_emission(tbl: DataFrame, key: str, *order: str) -> DataFrame:
+    """Update mode appends one row per key per micro-batch; the row that
+    sorts first on ``order`` (each column descending) is the key's final
+    state."""
+    w = Window.partitionBy(key).orderBy(*[F.col(c).desc() for c in order])
+    return tbl.withColumn("rn", F.row_number().over(w)).filter(
+        F.col("rn") == 1
+    )
 
 
 def _update_latest(key, pdf_iter, state: GroupState):
@@ -100,28 +117,11 @@ def stream_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        updates.writeStream.format("memory")
-        .queryName("latest_state_stream")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # update mode appends one row per key per batch; the LAST row per key
-    # is the final state (micro-batches arrive in order).
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    tbl = spark.table("latest_state_stream")
+    tbl = run_stream_to_memory(updates, spark, "update")
     # (last_ts, last_event_id) is the same total order the state update
     # used, so the newest emission per key wins even under ts ties.
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("last_ts").desc(), F.col("last_event_id").desc()
-    )
     return (
-        tbl.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        _last_emission(tbl, "user_id", "last_ts", "last_event_id")
         .select(
             "user_id",
             "last_event_type",
@@ -182,25 +182,11 @@ def stream_ema_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        updates.writeStream.format("memory")
-        .queryName("ema_stream")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    tbl = spark.table("ema_stream")
+    tbl = run_stream_to_memory(updates, spark, "update")
     # n_events is strictly increasing per key across emissions, so the
     # max-n row per key is the final state.
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        tbl.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "n_events", "ema_value")
+    return _last_emission(tbl, "user_id", "n_events").select(
+        "user_id", "n_events", "ema_value"
     )
 
 
@@ -272,23 +258,9 @@ def stream_ema_user_value_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="Update",
         timeMode="None",
     )
-    q = (
-        updates.writeStream.format("memory")
-        .queryName("ema_tws_stream")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    tbl = spark.table("ema_tws_stream")
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        tbl.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "n_events", "ema_value")
+    tbl = run_stream_to_memory(updates, spark, "update")
+    return _last_emission(tbl, "user_id", "n_events").select(
+        "user_id", "n_events", "ema_value"
     )
 
 
@@ -350,8 +322,6 @@ def _update_route(key, pdf_iter, state: GroupState):
 def parse_frames(df: DataFrame) -> DataFrame:
     """frame string -> (out_id, in_id, weight, door_open); shared by the
     batch and streaming forms so the two can never diverge."""
-    from pyspark.sql import functions as F
-
     from etl_rf_matrix_controller_spark.functions.regex_extract import _FRAME_RE
 
     g = lambda i: F.regexp_extract("frame", _FRAME_RE, i)  # noqa: E731
@@ -376,10 +346,12 @@ def stream_route_state_from_frames(
     incrementally, exactly as the controller applies each polled frame
     to its route matrix; the batch twin (read the same feed, window
     argmax) must agree row-for-row, pinned in tests.
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
+    The one memory-sink drain not on ``run_stream_to_memory``: under an
+    ``availableNow`` trigger this Python simple stream reader delivers
+    only its first ``read()`` (``batch_size`` frames, one micro-batch, on
+    Spark 4.1.2), so the query drains with processAllAvailable instead.
+    """
     from etl_rf_matrix_controller_spark.sources.frame_source import register
 
     register(spark)
@@ -396,23 +368,20 @@ def stream_route_state_from_frames(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
+    name = f"sink_{uuid.uuid4().hex}"
     q = (
         updates.writeStream.format("memory")
-        .queryName("frame_route_state")
+        .queryName(name)
         .outputMode("update")
         .start()
     )
     try:
         q.processAllAvailable()
+        tbl = spark.table(name)
     finally:
         q.stop()
-    tbl = spark.table("frame_route_state")
-    w = Window.partitionBy("out_id").orderBy(F.col("frame_id").desc())
-    return (
-        tbl.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
+        spark.catalog.dropTempView(name)
+    return _last_emission(tbl, "out_id", "frame_id").drop("rn")
 
 
 TTL_STATE_SCHEMA = StructType(
@@ -475,7 +444,6 @@ def stream_state_ttl_expiry(
     spark: SparkSession,
     events_dir: str,
     ttl_seconds: int,
-    query_name: str = "ttl_expiry_stream",
 ) -> DataFrame:
     """Keyed state with event-time TTL expiry (GroupStateTimeout.
     EventTimeTimeout) -- the reference's deferred-verification timeout
@@ -509,15 +477,7 @@ def stream_state_ttl_expiry(
         outputMode="update",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    q = (
-        updates.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return run_stream_to_memory(updates, spark, "update")
 
 
 HOLT_STATE_SCHEMA = StructType(
@@ -608,8 +568,6 @@ def stream_holt_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators.behavior.holt_linear_daily_value.  Day index and the
     scaled integer value are computed JVM-SIDE before the stream enters
     Python, so day bucketing and rounding are bit-identical to batch."""
-    from pyspark.sql import functions as F
-
     events = _events_stream(spark, sf_dir).select(
         "event_type",
         "ts",
@@ -624,22 +582,9 @@ def stream_holt_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        updates.writeStream.format("memory")
-        .queryName("holt_stream")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from pyspark.sql.window import Window
-
-    tbl = spark.table("holt_stream")
-    w = Window.partitionBy("event_type").orderBy(F.col("n_events").desc())
-    return (
-        tbl.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("event_type", "n_days", "level", "trend", "forecast_next")
+    tbl = run_stream_to_memory(updates, spark, "update")
+    return _last_emission(tbl, "event_type", "n_events").select(
+        "event_type", "n_days", "level", "trend", "forecast_next"
     )
 
 
@@ -704,8 +649,6 @@ def stream_event_transition_counts(
     chain across batches through the per-user last-event state; the
     wrapper sums the partials -- comparable to
     operators.behavior.event_transition_counts."""
-    from pyspark.sql import functions as F
-
     events = _events_stream(spark, sf_dir).select(
         "user_id", "ts", "event_id", "event_type"
     )
@@ -716,16 +659,8 @@ def stream_event_transition_counts(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        updates.writeStream.format("memory")
-        .queryName("trans_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table("trans_stream")
+        run_stream_to_memory(updates, spark, "append")
         .groupBy("prev_type", "cur_type")
         .agg(F.sum("n").cast("bigint").alias("n_transitions"))
     )
@@ -799,8 +734,6 @@ def stream_twap_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     scaled integer value are computed JVM-side before the stream enters
     Python, the accumulators are exact integers, and the one float
     division happens once at emission with identical operands."""
-    from pyspark.sql import functions as F
-
     events = _events_stream(spark, sf_dir).select(
         "user_id",
         "ts",
@@ -815,22 +748,9 @@ def stream_twap_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        updates.writeStream.format("memory")
-        .queryName("twap_stream")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from pyspark.sql.window import Window
-
-    tbl = spark.table("twap_stream")
-    w = Window.partitionBy("user_id").orderBy(F.col("n_intervals").desc())
-    return (
-        tbl.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "n_intervals", "total_s", "twap")
+    tbl = run_stream_to_memory(updates, spark, "update")
+    return _last_emission(tbl, "user_id", "n_intervals").select(
+        "user_id", "n_intervals", "total_s", "twap"
     )
 
 
@@ -891,8 +811,6 @@ def stream_clamped_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     year-long event stream never materializes per-user arrays here).
     Returns the final per-key emission for the batch==stream contract
     test."""
-    from pyspark.sql import functions as F
-
     events = (
         _events_stream(spark, sf_dir)
         .filter(F.col("event_type").isin("purchase", "error"))
@@ -915,22 +833,9 @@ def stream_clamped_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        updates.writeStream.format("memory")
-        .queryName("balance_stream")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from pyspark.sql.window import Window
-
-    tbl = spark.table("balance_stream")
-    w = Window.partitionBy("user_id").orderBy(F.col("n_rows").desc())
-    return (
-        tbl.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "balance_s", "n_clamps")
+    tbl = run_stream_to_memory(updates, spark, "update")
+    return _last_emission(tbl, "user_id", "n_rows").select(
+        "user_id", "balance_s", "n_clamps"
     )
 
 
@@ -990,8 +895,6 @@ def stream_cms_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     full keyed shuffle at 100 TB.  Returns the final (row_id, cell, c)
     frame for non-zero cells, directly comparable to the batch build
     (tests/test_streaming.py pins cells bit-equal)."""
-    from pyspark.sql import functions as F
-
     from etl_rf_matrix_controller_spark.operators.aggregates import CMS_ROWS
 
     state_schema, output_schema = _cms_schemas()
@@ -1006,21 +909,9 @@ def stream_cms_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        updates.writeStream.format("memory")
-        .queryName("cms_stream")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from pyspark.sql.window import Window
-
-    tbl = spark.table("cms_stream")
-    w = Window.partitionBy("row_id").orderBy(F.col("n_seen").desc())
-    final = (
-        tbl.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+    tbl = run_stream_to_memory(updates, spark, "update")
+    return (
+        _last_emission(tbl, "row_id", "n_seen")
         .select("row_id", F.posexplode("counts").alias("cell", "c"))
         .filter(F.col("c") > 0)
         .select(
@@ -1029,4 +920,3 @@ def stream_cms_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c").cast("bigint").alias("c"),
         )
     )
-    return final

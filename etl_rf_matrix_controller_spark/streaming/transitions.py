@@ -14,7 +14,8 @@ Design (scale story first):
   * State is ONE logical row per user -- (ts_us, event_id, event_type) of
     the latest event -- the minimum any cross-batch sequence operator can
     hold; bounded by user cardinality at any event throughput.
-  * Users are SHARDED (hash(user_id) % TRANSITION_STATE_SHARDS) into the
+  * Users are SHARDED (hash(user_id) % the shard count from
+    plans/scale.py::adaptive_state_shards) into the
     applyInPandasWithState group key, the neardup.py discipline: per-user
     keying made one pandas group per user (~15k singleton groups at
     sf0.1, ~0.2 ms each); sharding bounds the group count while the
@@ -46,11 +47,10 @@ from pyspark.sql.types import (
 
 from etl_rf_matrix_controller_spark.plans.registry import declared
 from etl_rf_matrix_controller_spark.plans.scale import adaptive_state_shards
-
-# One pandas group per shard, not per user (see module docstring).
-# Superseded by plans/scale.py::adaptive_state_shards (round 11); kept
-# as the documented historical constant for the round-8 measurement.
-TRANSITION_STATE_SHARDS = 1024
+from etl_rf_matrix_controller_spark.streaming.windows import (
+    _events_stream,
+    run_stream_to_memory,
+)
 
 _OUT_SCHEMA = StructType(
     [
@@ -116,7 +116,6 @@ def _transition_tracker(key, pdf_iter, state: GroupState):
 def stream_transitions(
     events_stream: DataFrame,
     spark: SparkSession,
-    name: str,
     progress_holder: list | None = None,
 ) -> DataFrame:
     """Run the sharded last-event state op over a streaming events frame
@@ -140,17 +139,7 @@ def stream_transitions(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if progress_holder is not None:
-        progress_holder.extend(q.recentProgress)
-    return spark.table(name)
+    return run_stream_to_memory(out, spark, "update", progress_holder)
 
 
 def _batch_oracle() -> str:
@@ -178,19 +167,7 @@ def stream_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-side partial agg.  The update-mode sink emits each transition
     once, so the rollup is additive across batches -- the same
     accumulate-then-read-off split as the streaming sketch trio."""
-    from etl_rf_matrix_controller_spark.sources.tables import (
-        normalize_events_ts,
-        set_events_read_confs,
-    )
-
-    set_events_read_confs(spark)
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream = normalize_events_ts(
-        spark.readStream.schema(batch.schema).parquet(
-            sf_dir, pathGlobFilter="events.parquet"
-        )
-    )
-    raw = stream_transitions(stream, spark, "event_transitions_stream")
+    raw = stream_transitions(_events_stream(spark, sf_dir), spark)
     return raw.groupBy("prev_type", "cur_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_transitions")
     )

@@ -16,6 +16,8 @@ notion (it overwrites state wholesale each poll).
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -236,31 +238,46 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def run_stream_to_memory(
-    agg_df: DataFrame, query_name: str, spark: SparkSession
+    df: DataFrame,
+    spark: SparkSession,
+    mode: str = "complete",
+    progress_holder: list | None = None,
 ) -> DataFrame:
-    """Run a streaming aggregation to completion (availableNow) into an
-    in-memory sink and return the result as a batch DataFrame."""
+    """Run a streaming query to completion (availableNow) into an
+    in-memory sink and return the result as a batch DataFrame.
+
+    The sink name is unique per call, so concurrent runs of one query on
+    a shared session never collide.  The sink's temp view is dropped on
+    return: the returned frame keeps the sink's rows alive, the catalog
+    does not.  Pass ``progress_holder`` to receive the per-batch
+    StreamingQueryProgress dicts."""
+    name = f"sink_{uuid.uuid4().hex}"
     q = (
-        agg_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
-    return spark.table(query_name)
+    try:
+        q.awaitTermination()
+        if progress_holder is not None:
+            progress_holder.extend(q.recentProgress)
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def tumbling_hour_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T1 under real Structured Streaming with a 1-day watermark."""
     events = _events_stream(spark, sf_dir).withWatermark("ts", "1 day")
-    return run_stream_to_memory(_tumbling_agg(events), "tumbling_stream", spark)
+    return run_stream_to_memory(_tumbling_agg(events), spark)
 
 
 def session_windows_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T3 under real Structured Streaming with a 1-day watermark."""
     events = _events_stream(spark, sf_dir).withWatermark("ts", "1 day")
-    return run_stream_to_memory(_session_agg(events), "session_stream", spark)
+    return run_stream_to_memory(_session_agg(events), spark)
 
 
 def interval_join_clicks_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -305,15 +322,7 @@ def interval_join_clicks_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") > F.col("error_ts") - F.expr("INTERVAL 1 HOUR")),
         "inner",
     ).select("error_id", "user_id", "error_ts", "c_id")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("interval_join_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table("interval_join_stream")
+    return run_stream_to_memory(joined, spark, "append")
 
 
 def interval_join_outer(errors: DataFrame, clicks: DataFrame) -> DataFrame:
@@ -357,7 +366,7 @@ def sliding_window_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    return run_stream_to_memory(agg, "sliding_stream", spark)
+    return run_stream_to_memory(agg, spark)
 
 
 def _severity_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -433,7 +442,7 @@ def stream_static_enriched_counts_stream(
     broadcast stream-static join -> windowed agg, availableNow."""
     events = _events_stream(spark, sf_dir).withWatermark("ts", "1 day")
     agg = _enriched_agg(events, _severity_dim(spark, sf_dir))
-    return run_stream_to_memory(agg, "stream_static_enriched", spark)
+    return run_stream_to_memory(agg, spark)
 
 
 def interval_join_full(errors: DataFrame, clicks: DataFrame) -> DataFrame:
@@ -527,7 +536,7 @@ def stream_hdr_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist = ev.select(F.expr(hdr_bucket_expr("v")).alias("bucket")).groupBy(
         "bucket"
     ).agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-    histb = run_stream_to_memory(hist, "hdr_value_stream", spark)
+    histb = run_stream_to_memory(hist, spark)
 
     wc = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
     cum = histb.select(
@@ -641,7 +650,7 @@ def stream_hll_distinct_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("day", "bucket")
         .agg(F.max("rank").cast("bigint").alias("mx"))
     )
-    regsb = run_stream_to_memory(regs, "hll_regs_stream", spark)
+    regsb = run_stream_to_memory(regs, spark)
     return regsb.groupBy("day").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_buckets_used"),
         F.expr(
@@ -692,6 +701,6 @@ def stream_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("row_id", "cell")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
-    cells = run_stream_to_memory(cells_stream, "cms_cells_stream", spark)
+    cells = run_stream_to_memory(cells_stream, spark)
     ev_batch = load_table(spark, sf_dir, "events").select("user_id")
     return cms_hh_readoff(cells, ev_batch)

@@ -242,7 +242,7 @@ def test_event_transitions_stream_eq_batch_multibatch(spark, tmp_path):
         .parquet(src)
     )
     progress: list = []
-    raw = stream_transitions(stream, spark, "transitions_mb", progress)
+    raw = stream_transitions(stream, spark, progress)
     got = sorted((r.prev_type, r.cur_type) for r in raw.collect())
     from pyspark.sql.window import Window
 
@@ -404,9 +404,7 @@ def test_stratified_sample_stream_eq_batch_multibatch(spark, tmp_path):
     progress: list = []
     got = sorted(
         (r.event_type, r.event_id)
-        for r in stream_stratified_rows(
-            stream, spark, k, "strat_sample_mb", progress
-        ).collect()
+        for r in stream_stratified_rows(stream, spark, k, progress).collect()
     )
     from pyspark.sql.window import Window
 
@@ -593,7 +591,7 @@ def test_zscore_anomalies_stream_eq_batch_multibatch(spark, tmp_path):
         .parquet(src)
     )
     progress: list = []
-    raw = stream_zscore_rows(stream, spark, "zscore_mb", progress)
+    raw = stream_zscore_rows(stream, spark, progress)
     got = {
         r.user_id: (r.n_scored, r.n_anomalies)
         for r in raw.groupBy("user_id")

@@ -433,9 +433,7 @@ def test_ph_stream_eq_batch_multibatch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    daily_s = run_stream_to_memory(
-        ph_daily_sums(stream), "ph_mb_stream", spark
-    )
+    daily_s = run_stream_to_memory(ph_daily_sums(stream), spark)
     got = {
         r.event_type: (r.n_days, r.final_ph, r.max_drift, r.drift_day)
         for r in ph_fold(daily_s).collect()

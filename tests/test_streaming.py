@@ -508,7 +508,7 @@ def test_stream_dedup_within_watermark(spark, tmp_path):
 
     schema = spark.read.parquet(str(src / "b1.parquet")).schema
     got = dedup_stream_within_watermark(
-        spark, str(src), schema, "dedup_stream_test", delay="1 hour"
+        spark, str(src), schema, delay="1 hour"
     )
     rows = sorted((r.event_id, r.ts) for r in got.collect())
 
@@ -1058,7 +1058,7 @@ def test_near_dup_admission_stream_eq_batch_multibatch(spark, tmp_path):
     got = {
         (r.doc_a, r.doc_b)
         for r in stream_band_candidates(
-            stream, spark, cap, "near_dup_mb_stream", progress_holder=progress
+            stream, spark, cap, progress_holder=progress
         ).collect()
     }
     want = {
@@ -1145,7 +1145,7 @@ def test_curation_admission_stream_eq_batch_multibatch(spark, tmp_path):
     )
     progress: list = []
     srec = stream_admission_records(
-        stream, spark, cap, "curation_admission_mb", progress_holder=progress
+        stream, spark, cap, progress_holder=progress
     )
     got = {tuple(r) for r in srec.collect()}
     want = {
@@ -1198,3 +1198,34 @@ def test_curation_admission_stream_eq_batch_multibatch(spark, tmp_path):
         n_mkeys,
         n_xkeys,
     )
+
+
+def test_concurrent_runs_of_one_stream_query(spark):
+    """Four threads run one memory-sink streaming query on the shared
+    session at once.  Each run must hash to the manifest entry, and no run
+    may leave its sink's temp view in the catalog."""
+    import json
+    from concurrent.futures import ThreadPoolExecutor
+
+    from etl_rf_matrix_controller_spark.streaming.windows import (
+        stream_cms_heavy_hitters,
+    )
+    from tests.conftest import result_hash
+    from tests.test_result_manifest import MANIFEST
+
+    with open(MANIFEST) as f:
+        want = json.load(f)["stream_cms_heavy_hitters"]
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        hashes = list(
+            pool.map(
+                lambda _: result_hash(stream_cms_heavy_hitters(spark, SF_DIR)),
+                range(4),
+            )
+        )
+    assert hashes == [want] * 4
+    assert temp_views() <= before

@@ -387,7 +387,7 @@ def main() -> None:
             .agg(F.max("rank").cast("bigint").alias("mx"))
         )
         t0 = time.perf_counter()
-        out = run_stream_to_memory(regs, f"stress_hll_x{mult}", spark)
+        out = run_stream_to_memory(regs, spark)
         n_state = out.count()
         dt = time.perf_counter() - t0
         rows = ev_rows * mult
