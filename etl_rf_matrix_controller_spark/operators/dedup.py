@@ -1570,40 +1570,29 @@ def incremental_span_append_check(
         )
 
     m = m_of(base).unionByName(m_of(delta))
-    w = Window.partitionBy("doc_a", "doc_b", "diag").orderBy("pos_a")
-    isl = m.select(
-        "doc_a",
-        "doc_b",
-        "diag",
-        "pos_a",
-        (F.col("pos_a") - F.row_number().over(w)).alias("island"),
-    )
-    return (
-        isl.groupBy("doc_a", "doc_b", "diag", "island")
-        .agg(
-            F.min("pos_a").cast("bigint").alias("start_a"),
-            (F.min("pos_a") - F.first("diag"))
-            .cast("bigint")
-            .alias("start_b"),
-            (F.max("pos_a") - F.min("pos_a") + SPAN_K)
-            .cast("bigint")
-            .alias("span_chars"),
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            "start_a",
-            "start_b",
-            "span_chars",
-            (F.col("doc_a") >= 4000000).alias("matched_in_delta"),
-        )
+    return span_islands(m, SPAN_K, "span_chars").withColumn(
+        "matched_in_delta", F.col("doc_a") >= 4000000
     )
 
 
-def positional_gram_df(docs: DataFrame, k: int) -> DataFrame:
-    """Positional k-char gram fan-out: (doc_id, pos, gram), one row per
-    character position.  Shared by the ad-hoc span path (checkpointed
-    per-run) and the persistent bucketed index builder.
+def positional_gram_df(
+    docs: DataFrame, k: int, unit: str = "char"
+) -> DataFrame:
+    """Positional k-gram fan-out: (doc_id, pos, gram), one row per unit
+    position with a full k-unit window -- the ONE gram builder behind
+    every span and winnow index, the ad-hoc span paths and the stress
+    probes.  ``unit="char"`` grams are k-char substrings of the trimmed
+    text; ``unit="token"`` grams are k whitespace tokens
+    (split(trim(text), '\\s+')) joined by single spaces.
+
+    Both units build in-row: transform(sequence(1, n-k+1), slice) over
+    the unit sequence, behind the n >= k guard (Spark's sequence(1, 0)
+    counts DOWN, so an unguarded short doc would emit phantom grams).
+    The unit sequence is projected into a column BEFORE the transform:
+    an expression captured in the lambda is re-evaluated per element,
+    so an inline regex split would run once per gram.
+    No window over the token stream -- the only Exchange is the
+    pre-fan-out repartition.
 
     The pre-fan-out repartition is sized from spark.sql.shuffle.partitions,
     not defaultParallelism: the ~650x gram explode lands in these
@@ -1618,19 +1607,37 @@ def positional_gram_df(docs: DataFrame, k: int) -> DataFrame:
         docs.sparkSession.sparkContext.defaultParallelism,
         int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions")),
     )
-    t = F.trim("text")
+    if unit == "char":
+        units, n = F.trim("text"), F.length("u")
+        gram = lambda i: F.col("u").substr(i, F.lit(k))  # noqa: E731
+    elif unit == "token":
+        units, n = F.split(F.trim("text"), r"\s+"), F.size("u")
+        gram = lambda i: F.array_join(F.slice("u", i, k), " ")  # noqa: E731
+    else:
+        raise ValueError(f"positional_gram_df: unknown unit {unit!r}")
     grams = F.when(
-        F.length(t) >= k,
-        F.transform(
-            F.sequence(F.lit(1), F.length(t) - (k - 1)),
-            lambda i: t.substr(i, F.lit(k)),
-        ),
+        n >= k, F.transform(F.sequence(F.lit(1), n - (k - 1)), gram)
     ).otherwise(F.array().cast("array<string>"))
     return (
         docs
-        .repartition(spark_para)  # rebalance BEFORE the ~650x fan-out
+        .repartition(spark_para)  # rebalance BEFORE the gram fan-out
+        .select("doc_id", units.alias("u"))
         .select("doc_id", F.posexplode(grams).alias("pos0", "gram"))
         .select("doc_id", (F.col("pos0") + 1).alias("pos"), "gram")
+    )
+
+
+def gram_hash_df(pg: DataFrame) -> DataFrame:
+    """(doc_id, pos, gram) -> (doc_id, pos, h): the winnow hash stream,
+    h = the md5 prefix's first 32 bits -- the one place the hash format
+    the winnow oracles mirror ('0x' || substring(md5(gram), 1, 8))
+    lives."""
+    return pg.select(
+        "doc_id",
+        "pos",
+        F.conv(F.substring(F.md5("gram"), 1, 8), 16, 10)
+        .cast("bigint")
+        .alias("h"),
     )
 
 
@@ -1668,6 +1675,17 @@ def positional_span_pairs(
         F.col("a.pos").alias("pos_a"),
         (F.col("a.pos") - F.col("b.pos")).alias("diag"),
     )
+    return span_islands(m, k, span_col)
+
+
+def span_islands(m: DataFrame, k: int, span_col: str) -> DataFrame:
+    """Diagonal gaps-and-islands merge: gram matches
+    (doc_a, doc_b, pos_a, diag) -> maximal spans
+    (doc_a, doc_b, start_a, start_b, span_col).  Consecutive matched
+    positions on one (doc pair, diagonal) are one verbatim run of
+    (last - first + k) units.  Shared by the self-join span queries and
+    the incremental probe, whose match frame unions several index legs
+    BEFORE this merge so a span never splits at a leg boundary."""
     w = Window.partitionBy("doc_a", "doc_b", "diag").orderBy("pos_a")
     isl = m.select(
         "doc_a",
@@ -2197,12 +2215,12 @@ def token_span_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same positional-index + diagonal-islands machinery
     (positional_span_pairs -- shared with the char version, pinned by the
     shared-machinery test in tests/test_round5_ops.py); only the gram
-    unit changes: token k-grams are built with ONE window of k-1 leads
-    over the exploded token stream (no per-row array slicing -- the
-    window shuffles on doc_id once and the gram never re-touches the
-    text).  At 100 TB, join on a 128-bit gram hash and substitute the
-    real tokenizer's ids for whitespace tokens; cost stays bounded by
-    true matches exactly as in the char version.
+    unit changes: positional_gram_df(unit="token") slices k-token grams
+    in-row out of the split token array (no window over the token
+    stream, so no doc_id shuffle and no sort).  At 100 TB, join on a
+    128-bit gram hash and substitute the real tokenizer's ids for
+    whitespace tokens; cost stays bounded by true matches exactly as in
+    the char version.
 
     Round 7: like the char sibling, the token-gram postings live in the
     PERSISTENT bucketBy(N, gram) index (plans/gram_index.py) -- written
@@ -2222,43 +2240,20 @@ def span_token_gram_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "spantok",
-        lambda s, d: token_positional_gram_df(dup_corpus(s, d), TOK_SPAN_K),
+        lambda s, d: positional_gram_df(
+            dup_corpus(s, d), TOK_SPAN_K, unit="token"
+        ),
         ["gram"],
         version="v1",
-    )
-
-
-def token_positional_gram_df(docs: DataFrame, k: int) -> DataFrame:
-    """Positional token k-gram postings: (doc_id, pos, gram), one row per
-    token position with a full k-token window.  Shared by the ad-hoc path
-    and the persistent bucketed index builder."""
-    spark_para = docs.sparkSession.sparkContext.defaultParallelism
-    tok = (
-        docs.repartition(spark_para)  # rebalance BEFORE the ~56x fan-out
-        .select(
-            "doc_id",
-            F.posexplode(F.split(F.trim("text"), r"\s+")).alias("pos0", "tok"),
-        )
-        .select("doc_id", (F.col("pos0") + 1).alias("pos"), "tok")
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    leads = [F.col("tok")] + [F.lead("tok", j).over(w) for j in range(1, k)]
-    return (
-        tok.select(
-            "doc_id",
-            "pos",
-            F.concat_ws(" ", *leads).alias("gram"),
-            F.lead("tok", k - 1).over(w).alias("t_last"),
-        )
-        .filter(F.col("t_last").isNotNull())
-        .select("doc_id", "pos", "gram")
     )
 
 
 def token_span_pairs_df(docs: DataFrame, k: int = TOK_SPAN_K) -> DataFrame:
     """Core of token_span_dups over an arbitrary (doc_id, text) frame
     (exposed for the shared-machinery edge tests)."""
-    pg = token_positional_gram_df(docs, k).localCheckpoint(eager=False)
+    pg = positional_gram_df(docs, k, unit="token").localCheckpoint(
+        eager=False
+    )
     return positional_span_pairs(pg, k, span_col="span_tokens")
 
 
@@ -2365,32 +2360,6 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def winnow_gram_hash_df(docs: DataFrame) -> DataFrame:
-    """Positional char-WINNOW_K-gram hash stream (doc_id, pos, h) --
-    the winnow selection's input, shared by the ad-hoc path and the
-    persistent index builder."""
-    spark_para = docs.sparkSession.sparkContext.defaultParallelism
-    t = F.trim("text")
-    grams = F.when(
-        F.length(t) >= WINNOW_K,
-        F.transform(
-            F.sequence(F.lit(1), F.length(t) - (WINNOW_K - 1)),
-            lambda i: t.substr(i, F.lit(WINNOW_K)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return (
-        docs.repartition(spark_para)
-        .select("doc_id", F.posexplode(grams).alias("pos0", "gram"))
-        .select(
-            "doc_id",
-            (F.col("pos0") + 1).alias("pos"),
-            F.conv(F.substring(F.md5("gram"), 1, 8), 16, 10)
-            .cast("bigint")
-            .alias("h"),
-        )
-    )
-
-
 def winnow_gram_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persistent bucketBy(N, doc_id).sortBy(doc_id, pos) char winnow
     hash postings over the dup corpus: the per-doc selection windows
@@ -2399,7 +2368,9 @@ def winnow_gram_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "win8",
-        lambda s, d: winnow_gram_hash_df(dup_corpus(s, d)),
+        lambda s, d: gram_hash_df(
+            positional_gram_df(dup_corpus(s, d), WINNOW_K)
+        ),
         ["doc_id"],
         version="v1",
         sort_cols=["doc_id", "pos"],
@@ -2521,32 +2492,22 @@ def winnow_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size.  Mirrored in the oracle (fpd/rare CTEs, materialized
     so DuckDB does not re-inline the document-scale chain per leg).
     """
-    pg = winnow_gram_index(spark, sf_dir)
-    wd = Window.partitionBy("doc_id")
-    enc = pg.select(
-        "doc_id",
-        "pos",
-        _winnow_enc().alias("e"),
-        F.count(F.lit(1)).over(wd).alias("n_grams"),
+    return winnow_fp_pairs(
+        winnow_select_fps_df(winnow_gram_index(spark, sf_dir))
     )
-    wf = wd.orderBy("pos").rowsBetween(0, WINNOW_W - 1)
-    fps = (
-        enc.select(
-            "doc_id",
-            "pos",
-            "n_grams",
-            F.min("e").over(wf).alias("enc_min"),
-        )
-        .filter(F.col("pos") <= F.col("n_grams") - (WINNOW_W - 1))
-        .select("doc_id", F.expr(f"enc_min DIV {_WIN_ENC}").alias("fp"))
-        .distinct()
-    )
+
+
+def winnow_fp_pairs(fps: DataFrame) -> DataFrame:
+    """Shared winnow pair detector over a selection (doc_id, fp, ...):
+    distinct (doc_id, fp) -> df-capped at WINNOW_FP_DF_CAP -> fp
+    self-join -> pairs sharing >= WINNOW_PAIR_MIN fingerprints, for the
+    char and token units alike."""
     # Hot-fingerprint cap: window df count rides the fp-hash shuffle the
     # self-join needs anyway; > CAP fingerprints never reach the join.
     fps = (
-        fps.withColumn(
-            "df", F.count(F.lit(1)).over(Window.partitionBy("fp"))
-        )
+        fps.select("doc_id", "fp")
+        .distinct()
+        .withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("fp")))
         .filter(F.col("df") <= WINNOW_FP_DF_CAP)
         .select("doc_id", "fp")
         .localCheckpoint(eager=False)  # feeds both sides of the pair join
@@ -2648,8 +2609,9 @@ def token_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary.  Positions are TOKEN positions.
 
     Composition, not duplication: the token-gram stream is the one
-    window-of-leads build token_span_pairs_df uses (one doc_id shuffle,
-    no array slicing), and the selection is the identical
+    positional_gram_df(unit="token") build token_span_pairs_df uses
+    (in-row, no shuffle beyond the pre-fan-out repartition), hashed by
+    gram_hash_df, and the selection is the identical
     winnow_select_fps_df machinery behind winnowing_fingerprints --
     only the gram unit differs (shared-machinery pinned by
     tests/test_round6_ops.py).  Scale: token fan-out is ~8x smaller
@@ -2667,42 +2629,6 @@ def token_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def token_winnow_gram_hash_df(
-    docs: DataFrame, k: int = TOK_WINNOW_K
-) -> DataFrame:
-    """Positional token k-gram hash stream (doc_id, pos, h) -- the
-    token winnow selection's input (the token_span_pairs_df
-    window-of-leads build), shared by the ad-hoc path and the
-    persistent index builder."""
-    spark_para = docs.sparkSession.sparkContext.defaultParallelism
-    tok = (
-        docs.repartition(spark_para)  # rebalance BEFORE the token fan-out
-        .select(
-            "doc_id",
-            F.posexplode(F.split(F.trim("text"), r"\s+")).alias("pos0", "tok"),
-        )
-        .select("doc_id", (F.col("pos0") + 1).alias("pos"), "tok")
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    leads = [F.col("tok")] + [F.lead("tok", j).over(w) for j in range(1, k)]
-    return (
-        tok.select(
-            "doc_id",
-            "pos",
-            F.concat_ws(" ", *leads).alias("gram"),
-            F.lead("tok", k - 1).over(w).alias("t_last"),
-        )
-        .filter(F.col("t_last").isNotNull())
-        .select(
-            "doc_id",
-            "pos",
-            F.conv(F.substring(F.md5("gram"), 1, 8), 16, 10)
-            .cast("bigint")
-            .alias("h"),
-        )
-    )
-
-
 def token_winnow_gram_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persistent bucketBy(N, doc_id).sortBy(doc_id, pos) token winnow
     hash postings over the dup corpus."""
@@ -2710,7 +2636,9 @@ def token_winnow_gram_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "wintok",
-        lambda s, d: token_winnow_gram_hash_df(dup_corpus(s, d)),
+        lambda s, d: gram_hash_df(
+            positional_gram_df(dup_corpus(s, d), TOK_WINNOW_K, unit="token")
+        ),
         ["doc_id"],
         version="v1",
         sort_cols=["doc_id", "pos"],
@@ -2720,10 +2648,13 @@ def token_winnow_gram_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 def token_winnow_fps_df(docs: DataFrame, k: int = TOK_WINNOW_K) -> DataFrame:
     """Core of token_winnow_fingerprints over an arbitrary
     (doc_id, text) frame: token-gram hash stream (the
-    token_span_pairs_df window-of-leads build) -> winnow_select_fps_df
-    selection.  Returns distinct (doc_id, fp, fp_pos) in token space
-    (exposed for the span-boundary guarantee test)."""
-    return winnow_select_fps_df(token_winnow_gram_hash_df(docs, k))
+    positional_gram_df(unit="token") build token_span_pairs_df uses)
+    -> winnow_select_fps_df selection.  Returns distinct
+    (doc_id, fp, fp_pos) in token space (exposed for the span-boundary
+    guarantee test)."""
+    return winnow_select_fps_df(
+        gram_hash_df(positional_gram_df(docs, k, unit="token"))
+    )
 
 
 @declared(
@@ -2756,42 +2687,18 @@ def token_winnow_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenizer ids (Lee et al. 2022): the pair join consumes the
     ~2/(w+1) winnowed sample, never the raw gram stream.
 
-    Scale discipline carried over verbatim from the char detector
-    (dedup.py winnow_overlap_pairs -- the round-5 weak item): the
-    fingerprint frame is df-capped at {WINNOW_FP_DF_CAP} docs BEFORE
-    the self-join (one window count riding the fp shuffle the join
-    needs anyway), bounding any fingerprint's pair fan-out at CAP^2
-    regardless of corpus size; checkpointed once to feed both join
-    sides, shuffle-hash pinned (no SMJ on the stat-less frame).  The
-    oracle materializes the selection chain and both postings legs so
-    DuckDB cannot re-inline the corpus-scale subquery per leg.
+    Scale discipline is the char detector's, through the one shared
+    winnow_fp_pairs (the round-5 weak item): the fingerprint frame is
+    df-capped at {WINNOW_FP_DF_CAP} docs BEFORE the self-join (one
+    window count riding the fp shuffle the join needs anyway), bounding
+    any fingerprint's pair fan-out at CAP^2 regardless of corpus size;
+    checkpointed once to feed both join sides, shuffle-hash pinned (no
+    SMJ on the stat-less frame).  The oracle materializes the selection
+    chain and both postings legs so DuckDB cannot re-inline the
+    corpus-scale subquery per leg.
     """
-    fps = (
+    return winnow_fp_pairs(
         winnow_select_fps_df(token_winnow_gram_index(spark, sf_dir))
-        .select("doc_id", "fp")
-        .distinct()
-    )
-    fps = (
-        fps.withColumn(
-            "df", F.count(F.lit(1)).over(Window.partitionBy("fp"))
-        )
-        .filter(F.col("df") <= WINNOW_FP_DF_CAP)
-        .select("doc_id", "fp")
-        .localCheckpoint(eager=False)  # feeds both sides of the pair join
-    )
-    a, b = fps.alias("a"), fps.alias("b")
-    return (
-        a.join(
-            b.hint("shuffle_hash"),
-            (F.col("a.fp") == F.col("b.fp"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("shared_fps"))
-        .filter(F.col("shared_fps") >= WINNOW_PAIR_MIN)
     )
 
 

@@ -161,6 +161,24 @@ def test_winnow_selection_zero_exchange_zero_sort(spark):
         assert plan.count("Window") == 2, plan
 
 
+def test_token_gram_build_no_hash_exchange_no_sort(spark):
+    """The token unit of positional_gram_df builds its k-token grams
+    in-row (transform over the split token array), so the fan-out plans
+    NO hash Exchange and NO Sort -- only the pre-fan-out round-robin
+    repartition.  A window over the token stream would add a doc_id
+    hash Exchange plus a Sort."""
+    from etl_rf_matrix_controller_spark.operators.dedup import (
+        TOK_SPAN_K,
+        positional_gram_df,
+    )
+
+    docs = dup_corpus(spark, SF_DIR)
+    plan = plan_of(positional_gram_df(docs, TOK_SPAN_K, unit="token"))
+    assert "Exchange hashpartitioning" not in plan, plan
+    assert "Sort " not in plan, plan
+    assert "Exchange RoundRobinPartitioning" in plan, plan
+
+
 def test_incremental_probe_shuffles_only_the_batch(spark):
     """incremental_near_dup_check's probe join: the corpus-scaled band
     index is a bucketed scan with NO exchange; the only exchange feeding

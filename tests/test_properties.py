@@ -8,6 +8,8 @@ islands partition invariants pin the gaps-and-islands core.
 
 from __future__ import annotations
 
+import re
+
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -131,15 +133,27 @@ doc_texts = st.lists(
 )
 
 
-def _ref_spans(docs: list[tuple[int, str]], k: int) -> set[tuple]:
+def _chars(text: str) -> list[str]:
+    """positional_gram_df's char unit: the trimmed text's characters."""
+    return list(text.strip())
+
+
+def _tokens(text: str) -> list[str]:
+    """positional_gram_df's token unit: split(trim(text), '\\s+')."""
+    return re.split(r"\s+", text.strip())
+
+
+def _ref_spans(
+    docs: list[tuple[int, str]], k: int, split=_chars
+) -> set[tuple]:
     """Brute-force maximal shared-span reference (definitionally: matching
     k-gram positions grouped by (pair, diagonal), consecutive runs
-    merged)."""
+    merged), over the units ``split`` cuts each text into."""
     pg = []
     for did, text in docs:
-        t = text.strip()
+        t = split(text)
         for i in range(1, max(len(t) - k + 1, 0) + 1):
-            pg.append((did, i, t[i - 1: i - 1 + k]))
+            pg.append((did, i, tuple(t[i - 1: i - 1 + k])))
     out = set()
     matches: dict[tuple[int, int, int], set[int]] = {}
     for da, pa, ga in pg:
@@ -159,11 +173,15 @@ def _ref_spans(docs: list[tuple[int, str]], k: int) -> set[tuple]:
 @given(texts=doc_texts)
 @SETTINGS
 def test_substring_spans_match_bruteforce(spark, texts):
-    """substring_span_pairs_df == the brute-force positional-gram
-    reference for any small corpus (tiny 'ab ' alphabet forces heavy
-    overlap, repeated grams, and multi-diagonal matches)."""
+    """substring_span_pairs_df (char unit, k=8) and token_span_pairs_df
+    (token unit, k=3) == the brute-force positional-gram reference for
+    any small corpus (tiny 'ab ' alphabet forces heavy overlap, repeated
+    grams, and multi-diagonal matches; for tokens it also yields runs of
+    spaces, empty and whitespace-only documents).  Both units run on
+    every drawn corpus, so the test id stays one test."""
     from etl_rf_matrix_controller_spark.operators.dedup import (
         substring_span_pairs_df,
+        token_span_pairs_df,
     )
 
     docs = list(enumerate(texts))
@@ -175,6 +193,11 @@ def test_substring_spans_match_bruteforce(spark, texts):
         for r in substring_span_pairs_df(df, k=8).collect()
     }
     assert got == _ref_spans(docs, 8), (texts, got)
+    got = {
+        (r.doc_a, r.doc_b, r.start_a, r.start_b, r.span_tokens)
+        for r in token_span_pairs_df(df, k=3).collect()
+    }
+    assert got == _ref_spans(docs, 3, _tokens), (texts, got)
 
 
 word_tables = st.dictionaries(

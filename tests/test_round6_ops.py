@@ -137,8 +137,8 @@ def test_token_winnow_guarantee_at_span_boundary(spark):
     run SHORTER than k = {TOK_WINNOW_K} tokens has zero shared grams,
     hence structurally zero shared fingerprints; the 8-token pair
     shares >= 1 fingerprint AND is found by token_span_dups on the
-    same frame (shared machinery: same window-of-leads gram build,
-    same winnow_select_fps_df selection)."""
+    same frame (shared machinery: same positional_gram_df(unit="token")
+    gram build, same winnow_select_fps_df selection)."""
     assert TOK_WINNOW_K + WINNOW_W - 1 == 8
     run8 = "t1 t2 t3 t4 t5 t6 t7 t8"
     run4 = "s1 s2 s3 s4"  # < k tokens: zero shared grams

@@ -214,7 +214,8 @@ def main() -> None:
     # pure scan+window throughput.  Build (fan-out + md5 + bucket write)
     # timed separately, same split as the span shape.
     from etl_rf_matrix_controller_spark.operators.dedup import (
-        winnow_gram_hash_df,
+        WINNOW_K,
+        gram_hash_df,
         winnow_select_fps_df,
     )
 
@@ -226,7 +227,9 @@ def main() -> None:
             spark,
             SF_DIR,
             "stresswin",
-            lambda s, d, m=mult: winnow_gram_hash_df(amplify_docs(m)),
+            lambda s, d, m=mult: gram_hash_df(
+                positional_gram_df(amplify_docs(m), WINNOW_K)
+            ),
             ["doc_id"],
             version=f"m{mult}",
             n_buckets=n_buckets,
