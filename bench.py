@@ -2,11 +2,12 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
 compact JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "sf": ..., "n_queries": N, "n_errors": E, "median_query_sec": ...,
-"max_query_sec": ..., "detail_file": "BENCH_DETAIL.json"}.
+"max_query_sec": ..., "detail_file": "BENCH_DETAIL_c<cpus>.json"}.
 
 The driver captures only a bounded tail of stdout, so the final line MUST
 stay small (headline fields only, <300 chars): the full per-query map goes
-to the sidecar file BENCH_DETAIL.json (next to this script).
+to the sidecar file BENCH_DETAIL_c<cpus>.json (next to this script), one
+per core count, so a run at one core count never overwrites another's.
 
 Each query is forced end-to-end with the JVM-side noop sink (count() would
 let Catalyst prune the whole projection; noop executes the full plan but
@@ -22,6 +23,7 @@ import time
 
 from etl_rf_matrix_controller_spark.plans import registry
 from etl_rf_matrix_controller_spark.session import get_spark
+from etl_rf_matrix_controller_spark.sources.tables import load_table
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -32,7 +34,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     # Warm the JVM + file listing outside the timed region.
-    spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()
+    load_table(spark, SF_DIR, "lineitem").count()
 
     # Deterministic HASH order, not alphabetical (round-9 verdict): the
     # host is co-tenant, so a multi-minute load window sweeping a
@@ -83,15 +85,16 @@ def main() -> None:
     }
     if errors:
         detail["errors"] = errors
+    detail_file = f"BENCH_DETAIL_c{spark.sparkContext.defaultParallelism}.json"
     detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH_DETAIL.json")
+                               detail_file)
     with open(detail_path, "w") as fh:
         json.dump(detail, fh, indent=1, sort_keys=True)
 
     # Final stdout line: headline fields only (<300 chars). The driver tails
     # ~2000 chars of stdout and stores the parsed line verbatim; embedding any
     # per-query subset makes that stored copy look truncated, so the full map
-    # lives exclusively in BENCH_DETAIL.json.
+    # lives exclusively in the detail file.
     out = {
         "metric": "declared_queries_total_wall",
         "value": total,
@@ -101,7 +104,7 @@ def main() -> None:
         "n_errors": len(errors),
         "median_query_sec": median,
         "max_query_sec": max(ordered) if ordered else 0.0,
-        "detail_file": "BENCH_DETAIL.json",
+        "detail_file": detail_file,
     }
     print(json.dumps(out))
     spark.stop()

@@ -5,11 +5,18 @@ Mirrors the reference's source surface (SURVEY.md SS2.1): full-state scans
 are plain ``spark.read.parquet`` scans -- Catalyst pushes predicates and
 prunes columns into the parquet footer reader, which is the whole
 optimization story for 100 TB: never read what the query doesn't need.
+
+Each table's schema is inferred once per file version (``read_parquet``)
+and supplied to every later scan: an unsupplied schema costs a one-task
+inference job per read.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -30,6 +37,8 @@ TABLES = (
 # are unconditionally broadcast-safe; customer/part we leave to AQE).
 BROADCAST_SAFE = ("region", "nation", "supplier")
 
+_NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
+
 
 def set_events_read_confs(spark: SparkSession) -> None:
     """Session confs required to read events.parquet's TIMESTAMP(NANOS) `ts`.
@@ -40,7 +49,7 @@ def set_events_read_confs(spark: SparkSession) -> None:
     DuckDB reports) when the session timezone is UTC -- a foreign non-UTC
     session would otherwise silently shift every event by its TZ offset.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set(_NANOS_CONF, "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
@@ -70,6 +79,57 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _file_version(path: str) -> tuple:
+    """``(size, mtime_ns)`` of a file, or the sorted ``(name, size,
+    mtime_ns)`` of a directory's entries: the staleness key
+    plans/gram_index.py::corpus_fingerprint trusts.  Raises OSError for a
+    path that cannot be stat-ed (a URI)."""
+    st = os.stat(path)
+    if not os.path.isdir(path):
+        return (st.st_size, st.st_mtime_ns)
+    with os.scandir(path) as it:
+        return tuple(
+            sorted((e.name, e.stat().st_size, e.stat().st_mtime_ns) for e in it)
+        )
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple | None:
+    """Path, file version and the session's ``nanosAsLong`` setting (it
+    changes how ``events.ts`` is inferred); None for a path that cannot be
+    stat-ed (a URI), which is never kept."""
+    try:
+        version = _file_version(path)
+    except OSError:
+        return None
+    return (os.path.abspath(path), version, spark.conf.get(_NANOS_CONF, "false"))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that runs the schema-inference job only
+    on the first read of a file version: its schema is kept in a
+    module-level dict and supplied to every later read.  A rewritten file
+    gets a new key and so a fresh inference.  Threads racing on a new key
+    may each infer, but they store equal values, so no lock."""
+    key = _schema_key(spark, path)
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    if key is not None:
+        _SCHEMAS[key] = df.schema
+    return df
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, inferred once per
+    file version (``read_parquet``)."""
+    schema = _SCHEMAS.get(_schema_key(spark, path))
+    return schema if schema is not None else read_parquet(spark, path).schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one testdata table. Column pruning + predicate pushdown are
     applied by Catalyst on top of this (verify with .explain: PushedFilters,
@@ -78,7 +138,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     if name == "events":
         set_events_read_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = normalize_events_ts(df)
     return df

@@ -76,6 +76,7 @@ from etl_rf_matrix_controller_spark.operators.dedup import (
 from etl_rf_matrix_controller_spark.plans.conventions import ratio4, ratio4_sql
 from etl_rf_matrix_controller_spark.plans.registry import declared
 from etl_rf_matrix_controller_spark.plans.scale import adaptive_state_shards
+from etl_rf_matrix_controller_spark.sources.tables import load_table
 from etl_rf_matrix_controller_spark.streaming.neardup import (
     NEARDUP_DF_CAP,
     _bands_union_sql,
@@ -525,7 +526,7 @@ def stream_curation_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     verification.  Stream == batch per-stage counts pinned across >= 3
     real micro-batches in tests/test_streaming.py.
     """
-    batch_docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    batch_docs = load_table(spark, sf_dir, "documents")
     variants = F.filter(
         F.array(
             F.struct(F.col("doc_id"), F.col("text")),

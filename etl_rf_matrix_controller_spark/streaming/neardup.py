@@ -53,6 +53,7 @@ from etl_rf_matrix_controller_spark.operators.dedup import (
 )
 from etl_rf_matrix_controller_spark.plans.registry import declared
 from etl_rf_matrix_controller_spark.plans.scale import adaptive_state_shards
+from etl_rf_matrix_controller_spark.sources.tables import load_table
 from etl_rf_matrix_controller_spark.streaming.windows import (
     run_stream_to_memory,
 )
@@ -276,7 +277,7 @@ def stream_near_dup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     Stream == batch pinned across >= 3 real micro-batches (including a
     hot bucket past the cap) in tests/test_streaming.py.
     """
-    batch_docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    batch_docs = load_table(spark, sf_dir, "documents")
     variants = F.filter(
         F.array(
             F.struct(F.col("doc_id"), F.col("text")),

@@ -36,6 +36,7 @@ from pyspark.sql.window import Window
 
 from etl_rf_matrix_controller_spark.sources.tables import (
     normalize_events_ts,
+    parquet_schema,
     set_events_read_confs,
 )
 from etl_rf_matrix_controller_spark.streaming.windows import (
@@ -463,9 +464,8 @@ def stream_state_ttl_expiry(
     pinning.
     """
     set_events_read_confs(spark)
-    batch = spark.read.parquet(events_dir)
     stream = (
-        spark.readStream.schema(batch.schema)
+        spark.readStream.schema(parquet_schema(spark, events_dir))
         .option("maxFilesPerTrigger", "1")
         .parquet(events_dir)
     )

@@ -33,6 +33,7 @@ from etl_rf_matrix_controller_spark.plans.registry import declared
 from etl_rf_matrix_controller_spark.sources.tables import (
     load_table,
     normalize_events_ts,
+    parquet_schema,
     set_events_read_confs,
 )
 
@@ -230,8 +231,8 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalizer as the batch reader (sources.tables.normalize_events_ts) so
     the two can never diverge on a Spark parquet-timestamp quirk again."""
     set_events_read_confs(spark)
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream = spark.readStream.schema(batch.schema).parquet(
+    schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
+    stream = spark.readStream.schema(schema).parquet(
         f"{sf_dir}", pathGlobFilter="events.parquet"
     )
     return normalize_events_ts(stream)

@@ -13,6 +13,7 @@ sys.path.insert(0, ".")
 
 from etl_rf_matrix_controller_spark.plans import registry  # noqa: E402
 from etl_rf_matrix_controller_spark.session import get_spark  # noqa: E402
+from etl_rf_matrix_controller_spark.sources.tables import load_table  # noqa: E402
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 
@@ -68,7 +69,7 @@ def main() -> None:
     )
 
     emb = (
-        spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+        load_table(spark, SF_DIR, "embeddings")
         .select("vec_id", "embedding")
         .localCheckpoint(eager=True)
     )

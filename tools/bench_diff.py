@@ -5,7 +5,8 @@ Usage:
     python tools/bench_diff.py [BASE_DETAIL.json] [CURRENT_DETAIL.json]
 
 Defaults: base = BENCH_BASE.json (the previous round's checked-in detail),
-current = BENCH_DETAIL.json (what ``python bench.py`` just wrote).  Both
+current = BENCH_DETAIL_c<cpus>.json (what ``python bench.py`` just wrote at
+$SPARK_GRAFT_CPUS cores, else at the host's core count).  Both
 files are the bench.py sidecar format ({"queries": {name: sec}, ...}).
 
 Host is co-tenant (multi-second timing noise), so only ratios > 1.5x on
@@ -36,12 +37,13 @@ def _remeasure(names: list[str]) -> dict[str, float]:
     sys.path.insert(0, repo)
     from etl_rf_matrix_controller_spark.plans import registry
     from etl_rf_matrix_controller_spark.session import get_spark
+    from etl_rf_matrix_controller_spark.sources.tables import load_table
 
     registry.load_all()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="bench-diff-adjudicate")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()  # warm
+    load_table(spark, sf_dir, "lineitem").count()  # warm
     valid = [n for n in names if n in registry.QUERIES]
     # FULL untimed warm-up pass over every query first: base numbers
     # were taken mid-bench in a JIT-mature JVM, and the maturity builds
@@ -74,7 +76,10 @@ def _remeasure(names: list[str]) -> dict[str, float]:
 def main() -> int:
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     base_path = sys.argv[1] if len(sys.argv) > 1 else os.path.join(repo, "BENCH_BASE.json")
-    cur_path = sys.argv[2] if len(sys.argv) > 2 else os.path.join(repo, "BENCH_DETAIL.json")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
+    cur_path = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
+        repo, f"BENCH_DETAIL_c{cpus}.json"
+    )
     if not os.path.exists(base_path):
         print(f"no base file at {base_path}; nothing to diff")
         return 0

@@ -41,6 +41,7 @@ def main() -> None:
     sys.path.insert(0, repo)
     from etl_rf_matrix_controller_spark.plans import registry
     from etl_rf_matrix_controller_spark.session import get_spark
+    from etl_rf_matrix_controller_spark.sources.tables import load_table
 
     registry.load_all()
 
@@ -57,7 +58,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     ui = spark.sparkContext.uiWebUrl
     app_id = spark.sparkContext.applicationId
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()  # warm
+    load_table(spark, sf_dir, "lineitem").count()  # warm
 
     for name in names:
         fn = registry.QUERIES[name]

@@ -22,7 +22,10 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from etl_rf_matrix_controller_spark.plans.conventions import exact_avg, exact_sum  # noqa: E402
 from etl_rf_matrix_controller_spark.session import get_spark  # noqa: E402
-from etl_rf_matrix_controller_spark.sources.tables import load_table  # noqa: E402
+from etl_rf_matrix_controller_spark.sources.tables import (  # noqa: E402
+    load_table,
+    parquet_schema,
+)
 
 SF_DIR = "/root/testdata/sf0.1"
 MULT = int(sys.argv[1]) if len(sys.argv) > 1 else 10
@@ -366,7 +369,7 @@ def main() -> None:
                 "overwrite"
             ).parquet(path)
         stream = (
-            spark.readStream.schema(spark.read.parquet(path).schema)
+            spark.readStream.schema(parquet_schema(spark, path))
             .option("maxFilesPerTrigger", max(4, mult))
             .parquet(path)
         )
