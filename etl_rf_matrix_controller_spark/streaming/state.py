@@ -588,84 +588,6 @@ def stream_holt_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TRANS_STATE_SCHEMA = StructType(
-    [
-        StructField("last_type", StringType()),
-        StructField("last_ts_micros", LongType()),
-        StructField("last_event_id", LongType()),
-    ]
-)
-TRANS_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("prev_type", StringType()),
-        StructField("cur_type", StringType()),
-        StructField("n", LongType()),
-    ]
-)
-
-
-def _update_transitions(key, pdf_iter, state: GroupState):
-    """Per-user last-event carry: each micro-batch emits its (prev ->
-    cur) pair counts, chaining across batches through the single
-    remembered (last_type, last_ts, last_event_id) -- O(1) state per
-    key, the streaming form of the lag() window."""
-    import pandas as pd
-
-    last_type, last_ts, last_eid = (
-        state.get if state.exists else (None, None, None)
-    )
-    counts: dict[tuple[str, str], int] = {}
-    for pdf in pdf_iter:
-        if pdf.empty:
-            continue
-        pdf = pdf.sort_values(["ts", "event_id"])
-        for et, ts, eid in zip(
-            pdf["event_type"], pdf["ts"], pdf["event_id"]
-        ):
-            if last_type is not None:
-                k = (last_type, et)
-                counts[k] = counts.get(k, 0) + 1
-            last_type = et
-            last_ts, last_eid = int(ts.value), int(eid)
-    if last_type is not None:
-        state.update((last_type, last_ts, last_eid))
-    if counts:
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]] * len(counts),
-                "prev_type": [k[0] for k in counts],
-                "cur_type": [k[1] for k in counts],
-                "n": list(counts.values()),
-            }
-        )
-
-
-def stream_event_transition_counts(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Custom stateful streaming op: first-order transition counts via
-    applyInPandasWithState; each batch emits partial pair counts that
-    chain across batches through the per-user last-event state; the
-    wrapper sums the partials -- comparable to
-    operators.behavior.event_transition_counts."""
-    events = _events_stream(spark, sf_dir).select(
-        "user_id", "ts", "event_id", "event_type"
-    )
-    updates = events.groupBy("user_id").applyInPandasWithState(
-        _update_transitions,
-        outputStructType=TRANS_OUTPUT_SCHEMA,
-        stateStructType=TRANS_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    return (
-        run_stream_to_memory(updates, spark, "append")
-        .groupBy("prev_type", "cur_type")
-        .agg(F.sum("n").cast("bigint").alias("n_transitions"))
-    )
-
-
 TWAP_STATE_SCHEMA = StructType(
     [
         StructField("last_t", LongType()),

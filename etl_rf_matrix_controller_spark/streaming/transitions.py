@@ -21,9 +21,13 @@ Design (scale story first):
     sf0.1, ~0.2 ms each); sharding bounds the group count while the
     per-user semantics are untouched (users are processed independently
     inside a shard).
-  * Transitions stream OUT (update mode, each emitted exactly once);
-    the final (prev, cur) count is a batch rollup over the sink -- the
-    same sink-side-aggregate split as stream_cms_heavy_hitters.
+  * Transitions leave the state function as PARTIAL COUNTS: each shard
+    emits (prev_type, cur_type, n) for its micro-batch, at most |types|^2
+    rows, never one row per event (100,000 per sf0.1 drain would cross
+    Arrow, result serialization and the memory sink only to be counted).
+    Update mode emits each partial exactly once; the final count is
+    sum(n) over the sink -- the same sink-side-aggregate split as
+    stream_cms_heavy_hitters.
 
 batch == stream by construction: within a micro-batch rows are processed
 in (ts, event_id) order -- the batch twin's window ORDER BY -- and the
@@ -56,6 +60,7 @@ _OUT_SCHEMA = StructType(
     [
         StructField("prev_type", StringType()),
         StructField("cur_type", StringType()),
+        StructField("n", LongType()),
     ]
 )
 # Parallel arrays: this shard's users and their latest (ts_us, event_id,
@@ -72,36 +77,36 @@ _STATE_SCHEMA = StructType(
 
 
 def _transition_tracker(key, pdf_iter, state: GroupState):
-    """One SHARD of the last-event index: emit (prev, cur) transition rows
-    for every consecutive event pair per user, seeding each user's chain
-    from the stored cross-batch last event."""
+    """One SHARD of the last-event index: count this micro-batch's
+    (prev, cur) transitions per consecutive event pair of each user,
+    seeding each user's chain from the stored cross-batch last event, and
+    emit the shard's partial counts -- at most |types|^2 rows."""
     import pandas as pd
 
     if state.exists:
         users, ts, eids, types = state.get
-        index = {
-            u: (t, e, ty) for u, t, e, ty in zip(users, ts, eids, types)
-        }
+        index = dict(zip(users, zip(ts, eids, types)))
     else:
         index = {}
-    prevs: list[str] = []
-    curs: list[str] = []
     batch = [pdf for pdf in pdf_iter if not pdf.empty]
-    if batch:
-        rows = pd.concat(batch).sort_values(["ts_us", "event_id"])
-        for user, grp in rows.groupby("user_id", sort=False):
-            user = int(user)
-            typs = grp["event_type"].tolist()
-            last = index.get(user)
-            chain = ([last[2]] if last is not None else []) + typs
-            prevs.extend(chain[:-1])
-            curs.extend(chain[1:])
-            tail = grp.iloc[-1]
-            index[user] = (
-                int(tail["ts_us"]),
-                int(tail["event_id"]),
-                typs[-1],
-            )
+    if not batch:
+        return
+    rows = pd.concat(batch).sort_values(["user_id", "ts_us", "event_id"])
+    user = rows["user_id"]
+    first = user.ne(user.shift())
+    prev = rows["event_type"].shift()
+    prev[first] = user[first].map({u: v[2] for u, v in index.items()})
+    tail = rows[user.ne(user.shift(-1))]
+    index.update(
+        zip(
+            tail["user_id"].tolist(),
+            zip(
+                tail["ts_us"].tolist(),
+                tail["event_id"].tolist(),
+                tail["event_type"].tolist(),
+            ),
+        )
+    )
     state.update(
         (
             list(index.keys()),
@@ -110,7 +115,13 @@ def _transition_tracker(key, pdf_iter, state: GroupState):
             [v[2] for v in index.values()],
         )
     )
-    yield pd.DataFrame({"prev_type": prevs, "cur_type": curs})
+    pairs = pd.DataFrame({"prev_type": prev, "cur_type": rows["event_type"]})
+    yield (
+        pairs[prev.notna()]
+        .groupby(["prev_type", "cur_type"], dropna=False)
+        .size()
+        .reset_index(name="n")
+    )
 
 
 def stream_transitions(
@@ -119,8 +130,9 @@ def stream_transitions(
     progress_holder: list | None = None,
 ) -> DataFrame:
     """Run the sharded last-event state op over a streaming events frame
-    to completion (availableNow); returns the raw transition rows as a
-    batch frame from the memory sink."""
+    to completion (availableNow); returns the per-shard, per-batch
+    partial counts (prev_type, cur_type, n) as a batch frame from the
+    memory sink.  Summing ``n`` per pair gives the transition counts."""
     keyed = events_stream.select(
         F.col("user_id").cast("bigint").alias("user_id"),
         F.unix_micros("ts").alias("ts_us"),
@@ -164,10 +176,11 @@ def stream_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB posture: state is exactly one (ts, event_id, type) per user
     (entity-bounded, not throughput-bounded); the only shuffle ahead of
     the state op is the shard hash; transition rows collapse in the
-    batch-side partial agg.  The update-mode sink emits each transition
-    once, so the rollup is additive across batches -- the same
+    state function: each shard emits its batch's partial counts, at most
+    |types|^2 rows.  The update-mode sink emits each partial once, so
+    the sum is additive across batches -- the same
     accumulate-then-read-off split as the streaming sketch trio."""
-    raw = stream_transitions(_events_stream(spark, sf_dir), spark)
-    return raw.groupBy("prev_type", "cur_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_transitions")
+    partials = stream_transitions(_events_stream(spark, sf_dir), spark)
+    return partials.groupBy("prev_type", "cur_type").agg(
+        F.sum("n").cast("bigint").alias("n_transitions")
     )

@@ -25,6 +25,7 @@ from etl_rf_matrix_controller_spark.operators.curate_run import (
 from etl_rf_matrix_controller_spark.operators.curation import gopher_flags_df
 from etl_rf_matrix_controller_spark.operators.dedup import dup_corpus
 from etl_rf_matrix_controller_spark.operators.pipeline import hash_bucket
+from etl_rf_matrix_controller_spark.sources.tables import load_table
 
 E2E_SF = "/root/testdata/sf0.01"
 
@@ -50,7 +51,7 @@ def test_curate_training_set_end_to_end(spark, tmp_path):
 
     # stage cross-checks against independent recomputation
     corpus = dup_corpus(spark, E2E_SF).localCheckpoint(eager=True)
-    n_docs = spark.read.parquet(f"{E2E_SF}/documents.parquet").count()
+    n_docs = load_table(spark, E2E_SF, "documents").count()
     n_exact_dups = corpus.filter(
         (F.col("doc_id") >= 1000000) & (F.col("doc_id") < 2000000)
     ).count()

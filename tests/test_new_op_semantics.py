@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from etl_rf_matrix_controller_spark.sources.tables import load_table
 from tests.conftest import SF_DIR
 
 
@@ -23,7 +24,7 @@ def test_chunk_boundaries_and_short_doc(spark):
         by_doc.setdefault(r.doc_id, []).append(r)
     docs = {
         r.doc_id: len(r.txt)
-        for r in spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        for r in load_table(spark, SF_DIR, "documents")
         .select("doc_id", F.trim("text").alias("txt"))
         .collect()
     }
@@ -49,7 +50,7 @@ def test_ema_single_event_is_identity(spark):
     out = {r.user_id: r for r in ema_user_value(spark, SF_DIR).collect()}
     vals = {
         r.user_id: [float(v) for v in r.vs]
-        for r in spark.read.parquet(f"{SF_DIR}/events.parquet")
+        for r in load_table(spark, SF_DIR, "events")
         .groupBy("user_id")
         .agg(F.collect_list("value").alias("vs"))
         .collect()
@@ -68,7 +69,6 @@ def test_bloom_has_no_false_negatives(spark):
     from etl_rf_matrix_controller_spark.operators.layout import (
         bloom_prefilter_join,
     )
-    from etl_rf_matrix_controller_spark.sources.tables import load_table
 
     row = bloom_prefilter_join(spark, SF_DIR).collect()[0]
     cust = load_table(spark, SF_DIR, "customer")
@@ -183,7 +183,7 @@ def test_ivf_list_shares_sum_to_one(spark):
     )
 
     rows = ivf_list_balance(spark, SF_DIR).collect()
-    n_vecs = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").count()
+    n_vecs = load_table(spark, SF_DIR, "embeddings").count()
     assert sum(r.list_size for r in rows) == n_vecs
     total_ppm = sum(r.share_ppm for r in rows)
     assert 1_000_000 - len(rows) < total_ppm <= 1_000_000
@@ -199,7 +199,7 @@ def test_hard_negatives_never_share_query_label(spark):
 
     emb = {
         r.vec_id: r.label
-        for r in spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+        for r in load_table(spark, SF_DIR, "embeddings")
         .select("vec_id", "label")
         .collect()
     }
@@ -244,7 +244,6 @@ def test_interval_overlap_bucket_blocking_is_lossless(spark):
         OVERLAP_WINDOW_US,
         interval_overlap_pairs,
     )
-    from etl_rf_matrix_controller_spark.sources.tables import load_table
 
     got = {r.day: r for r in interval_overlap_pairs(spark, SF_DIR).collect()}
     ev = load_table(spark, SF_DIR, "events")
@@ -284,7 +283,7 @@ def test_incremental_dedup_finds_planted_pairs_only_from_new_batch(spark):
     rows = incremental_near_dup_check(spark, SF_DIR).collect()
     docs = {
         r.doc_id
-        for r in spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        for r in load_table(spark, SF_DIR, "documents")
         .select("doc_id")
         .collect()
     }
@@ -388,7 +387,7 @@ def test_real_ppm_decode_roundtrip(spark):
     rows = multimodal_real_decode(spark, SF_DIR).collect()
     texts = {
         r.doc_id: r.text
-        for r in spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        for r in load_table(spark, SF_DIR, "documents")
         .select("doc_id", "text")
         .limit(2000)
         .collect()

@@ -9,6 +9,7 @@ import hashlib
 
 from pyspark.sql import functions as F
 
+from etl_rf_matrix_controller_spark.sources.tables import load_table
 from tests.conftest import SF_DIR
 
 
@@ -26,7 +27,7 @@ def test_bm25_matches_pure_python_reference(spark):
 
     docs = {
         r.doc_id: [t for t in r.txt.split(" ") if t]
-        for r in spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        for r in load_table(spark, SF_DIR, "documents")
         .select("doc_id", F.trim("text").alias("txt"))
         .collect()
     }
@@ -66,7 +67,7 @@ def test_bpe_pairs_are_true_bigrams(spark):
 
     counts = {}
     for r in (
-        spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        load_table(spark, SF_DIR, "documents")
         .select(F.trim("text").alias("txt"))
         .collect()
     ):
@@ -88,7 +89,7 @@ def test_semantic_contamination_finds_every_straddling_leak(spark):
 
     vec_ids = [
         r.vec_id
-        for r in spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+        for r in load_table(spark, SF_DIR, "embeddings")
         .select("vec_id")
         .collect()
     ]
@@ -120,7 +121,7 @@ def test_user_event_sequences_cap_and_order(spark):
 
     raw = {}
     for r in (
-        spark.read.parquet(f"{SF_DIR}/events.parquet")
+        load_table(spark, SF_DIR, "events")
         .select("user_id", "ts", "event_id", "event_type")
         .collect()
     ):
@@ -162,7 +163,7 @@ def test_percentile_cont_identities(spark):
         got.setdefault(r.l_returnflag, {})[r.pct] = r.price_cont
     vals = {}
     for r in (
-        spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
+        load_table(spark, SF_DIR, "lineitem")
         .select("l_returnflag", "l_extendedprice")
         .collect()
     ):
@@ -185,7 +186,6 @@ def test_incremental_merge_equals_direct_monthly_avg(spark):
         incremental_agg_merge,
     )
     from etl_rf_matrix_controller_spark.plans.conventions import exact_avg
-    from etl_rf_matrix_controller_spark.sources.tables import load_table
 
     direct = {
         r.month: r.avg_value
@@ -223,7 +223,7 @@ def test_centroid_matrix_shape_and_range(spark):
 
     rows = centroid_similarity_matrix(spark, SF_DIR).collect()
     k = len(
-        spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+        load_table(spark, SF_DIR, "embeddings")
         .select("label")
         .distinct()
         .collect()
@@ -242,7 +242,7 @@ def test_encoding_advisor_sane(spark):
     )
 
     rows = {r.column_name: r for r in column_encoding_advisor(spark, SF_DIR).collect()}
-    total = spark.read.parquet(f"{SF_DIR}/events.parquet").count()
+    total = load_table(spark, SF_DIR, "events").count()
     for r in rows.values():
         assert r.n_distinct <= total
     assert rows["event_id"].advice == "plain"
@@ -281,7 +281,7 @@ def test_ks_drift_bounds_and_self_zero(spark):
     import collections
 
     raw = (
-        spark.read.parquet(f"{SF_DIR}/events.parquet")
+        load_table(spark, SF_DIR, "events")
         .selectExpr(
             "event_type",
             "CAST(round(value * 100) AS BIGINT) AS v",
@@ -328,7 +328,7 @@ def test_corr_matrix_matches_builtin_and_bounds(spark):
 
     got = {r.pair: r.corr for r in lineitem_corr_matrix(spark, SF_DIR).collect()}
     assert len(got) == 6
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
+    li = load_table(spark, SF_DIR, "lineitem")
     ref = li.agg(
         F.corr("l_quantity", "l_extendedprice").alias("qp"),
         F.corr("l_discount", "l_tax").alias("dt"),
@@ -348,7 +348,6 @@ def test_division_counts_are_consistent(spark):
     from etl_rf_matrix_controller_spark.operators.analytics_suite2 import (
         order_fully_shipped_sla,
     )
-    from etl_rf_matrix_controller_spark.sources.tables import load_table
 
     rows = order_fully_shipped_sla(spark, SF_DIR).collect()
     assert rows
@@ -372,7 +371,7 @@ def test_equidepth_sampled_boundary_path(spark):
     produces bands within a reasonable balance tolerance of fair share."""
     from pyspark.sql import functions as F
 
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet").select("value")
+    ev = load_table(spark, SF_DIR, "events").select("value")
     n = ev.count()
     cuts = ev.agg(
         F.percentile_approx(
@@ -405,7 +404,7 @@ def test_cusum_changepoint_matches_python(spark):
 
     raw = collections.defaultdict(list)
     for r in (
-        spark.read.parquet(f"{SF_DIR}/events.parquet")
+        load_table(spark, SF_DIR, "events")
         .selectExpr(
             "event_type", "ts", "event_id",
             "CAST(round(value * 100) AS BIGINT) AS v",
@@ -471,7 +470,7 @@ def test_oov_rate_monotone_and_totals(spark):
 
     rows = sorted(tokenizer_oov_rate(spark, SF_DIR).collect(), key=lambda r: r.vocab_k)
     total_direct = (
-        spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        load_table(spark, SF_DIR, "documents")
         .select(F.explode(F.split(F.trim("text"), " ")).alias("t"))
         .filter(F.col("t") != "")
         .count()
@@ -496,7 +495,7 @@ def test_grouped_corr_matches_numpy(spark):
     q = {r.doc_id: r.quality_score for r in doc_quality_score(spark, SF_DIR).collect()}
     feats = {}
     for r in (
-        spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        load_table(spark, SF_DIR, "documents")
         .select("doc_id", "source", "n_chars")
         .collect()
     ):
@@ -520,7 +519,7 @@ def test_tv_distance_matches_python(spark):
 
     counts = collections.defaultdict(lambda: collections.Counter())
     for r in (
-        spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        load_table(spark, SF_DIR, "documents")
         .select("doc_id", "lang")
         .collect()
     ):
@@ -553,7 +552,7 @@ def test_gram_matrix_matches_numpy(spark):
     X = np.array(
         [
             r.embedding[:GRAM_DIMS]
-            for r in spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+            for r in load_table(spark, SF_DIR, "embeddings")
             .orderBy("vec_id")
             .collect()
         ],
@@ -583,7 +582,7 @@ def test_power_iteration_improves_rayleigh_quotient(spark):
     X = np.array(
         [
             r.embedding[:GRAM_DIMS]
-            for r in spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+            for r in load_table(spark, SF_DIR, "embeddings")
             .orderBy("vec_id")
             .collect()
         ],
@@ -623,7 +622,7 @@ def test_pca_projection_is_true_topk(spark):
     v = np.zeros(GRAM_DIMS)
     for r in gram_top_eigvec(spark, SF_DIR).collect():
         v[r.pos - 1] = r.comp
-    rows = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").collect()
+    rows = load_table(spark, SF_DIR, "embeddings").collect()
     proj = {r.vec_id: float(np.array(r.embedding[:GRAM_DIMS]) @ v) for r in rows}
     expect = sorted(proj, key=lambda k: (-abs(proj[k]), k))[:10]
     got = [
@@ -643,7 +642,7 @@ def test_flap_detection_matches_python(spark):
 
     seqs = collections.defaultdict(list)
     for r in (
-        spark.read.parquet(f"{SF_DIR}/events.parquet")
+        load_table(spark, SF_DIR, "events")
         .select("user_id", "ts", "event_id", "event_type")
         .collect()
     ):
@@ -679,7 +678,7 @@ def test_trigram_paths_match_python(spark):
 
     seqs = collections.defaultdict(list)
     for r in (
-        spark.read.parquet(f"{SF_DIR}/events.parquet")
+        load_table(spark, SF_DIR, "events")
         .select("user_id", "ts", "event_id", "event_type")
         .collect()
     ):
@@ -711,7 +710,7 @@ def test_bootstrap_ci_brackets_true_mean(spark):
     assert row.n_replicas == BOOT_B
     assert row.ci_lo <= row.ci_hi
     true_mean = (
-        spark.read.parquet(f"{SF_DIR}/events.parquet")
+        load_table(spark, SF_DIR, "events")
         .agg(F.avg("value"))
         .collect()[0][0]
     )

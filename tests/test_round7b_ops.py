@@ -30,6 +30,7 @@ from etl_rf_matrix_controller_spark.operators.search import (
     rbo_rankings_compare,
     tfidf_retrieval_topk,
 )
+from etl_rf_matrix_controller_spark.sources.tables import load_table
 from tests.conftest import SF_DIR
 
 
@@ -88,7 +89,7 @@ def test_prefix_filter_planted_pairs(spark):
 def test_phrase_query_is_global_argmax(spark):
     """The returned phrase is the corpus's most frequent trigram (ties
     lexicographic) and the per-doc counts/positions are exact."""
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").collect()
+    docs = load_table(spark, SF_DIR, "documents").collect()
     counts: dict[str, int] = {}
     per_doc: dict[tuple[int, str], list[int]] = {}
     for r in docs:
@@ -147,7 +148,6 @@ def test_temporal_embargo_split_invariants(spark):
     """Splits partition the events exactly; the embargo quarantines the
     full gap (train max <= cutoff < embargo rows <= cutoff + gap < test
     min); straddle count is shared across rows."""
-    from etl_rf_matrix_controller_spark.sources.tables import load_table
 
     rows = {r.split: r for r in temporal_embargo_split(spark, SF_DIR).collect()}
     ev = load_table(spark, SF_DIR, "events")
@@ -171,7 +171,7 @@ def test_cdc_tombstone_semantics(spark):
     """Python recompute of the changelog compaction: a user whose LAST
     change is a tombstone is absent; resurrections (D then later U)
     survive; counts are per-user exact."""
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet").collect()
+    ev = load_table(spark, SF_DIR, "events").collect()
     last: dict[int, tuple] = {}
     n_changes: dict[int, int] = {}
     n_tomb: dict[int, int] = {}
@@ -203,6 +203,7 @@ def test_event_transitions_stream_eq_batch_multibatch(spark, tmp_path):
     row class a per-batch lag window structurally drops) and the state
     bound pinned from the query's own metrics."""
     import os
+    from collections import Counter
 
     from etl_rf_matrix_controller_spark.streaming.transitions import (
         stream_transitions,
@@ -242,12 +243,14 @@ def test_event_transitions_stream_eq_batch_multibatch(spark, tmp_path):
         .parquet(src)
     )
     progress: list = []
-    raw = stream_transitions(stream, spark, progress)
-    got = sorted((r.prev_type, r.cur_type) for r in raw.collect())
+    partials = stream_transitions(stream, spark, progress)
+    got: Counter = Counter()
+    for r in partials.collect():
+        got[(r.prev_type, r.cur_type)] += r.n
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    want = sorted(
+    want = Counter(
         (r.prev_type, r.cur_type)
         for r in ev_batch.select(
             F.lag("event_type").over(w).alias("prev_type"),
@@ -278,7 +281,6 @@ def test_median_of_means_python_recompute(spark):
         MOM_BUCKETS,
         median_of_means_value,
     )
-    from etl_rf_matrix_controller_spark.sources.tables import load_table
     import hashlib
 
     ev = load_table(spark, SF_DIR, "events").select("event_id", "value").collect()
@@ -311,7 +313,7 @@ def test_kn_continuation_python_recompute(spark):
         kn_continuation_counts,
     )
 
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").collect()
+    docs = load_table(spark, SF_DIR, "documents").collect()
     types: set[tuple[str, str]] = set()
     c_tok: dict[str, int] = {}
     for r in docs:
@@ -340,9 +342,9 @@ def test_pii_delete_cascade_python_recompute(spark):
         pii_delete_cascade,
     )
 
-    cust = spark.read.parquet(f"{SF_DIR}/customer.parquet").collect()
-    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet").collect()
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").collect()
+    cust = load_table(spark, SF_DIR, "customer").collect()
+    orders = load_table(spark, SF_DIR, "orders").collect()
+    li = load_table(spark, SF_DIR, "lineitem").collect()
     erased = {r.c_custkey for r in cust if r.c_acctbal < 0}
     del_orders = {r.o_orderkey for r in orders if r.o_custkey in erased}
     del_li = sum(1 for r in li if r.l_orderkey in del_orders)
@@ -514,8 +516,8 @@ def test_join_size_kmv_python_recompute(spark):
     )
     import hashlib
 
-    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet").collect()
-    events = spark.read.parquet(f"{SF_DIR}/events.parquet").collect()
+    orders = load_table(spark, SF_DIR, "orders").collect()
+    events = load_table(spark, SF_DIR, "events").collect()
 
     def h(k) -> int:
         return int(hashlib.md5(str(k).encode()).hexdigest()[:8], 16)

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from etl_rf_matrix_controller_spark.sources.tables import load_table
 from etl_rf_matrix_controller_spark.streaming.windows import (
     session_windows,
     session_windows_stream,
@@ -159,7 +160,7 @@ def test_dedup_ids_batch_eq_stream(spark):
     q.awaitTermination()
     got = spark.table("dedup_stream")
     batch = (
-        spark.read.parquet(f"{SF_DIR}/events.parquet")
+        load_table(spark, SF_DIR, "events")
         .select("event_id")
         .distinct()
     )
@@ -172,7 +173,6 @@ def test_interval_join_batch_eq_stream(spark):
     the matched (error, click) pairs.  The batch declared query is the
     left-outer + count form; the stream twin produces the matched pairs,
     so the batch side is re-derived as the inner pair set here."""
-    from etl_rf_matrix_controller_spark.sources.tables import load_table
     from etl_rf_matrix_controller_spark.streaming.windows import (
         interval_join_clicks_stream,
     )
@@ -617,7 +617,6 @@ def test_state_ttl_expiry_event_time_timeout(spark, tmp_path):
     the later batch never time out."""
     import os
 
-    from etl_rf_matrix_controller_spark.sources.tables import load_table
     from etl_rf_matrix_controller_spark.streaming.state import (
         stream_state_ttl_expiry,
     )
@@ -871,14 +870,36 @@ def test_transition_counts_batch_eq_stream(spark):
     from etl_rf_matrix_controller_spark.operators.behavior import (
         event_transition_counts,
     )
-    from etl_rf_matrix_controller_spark.streaming.state import (
-        stream_event_transition_counts,
+    from etl_rf_matrix_controller_spark.streaming.transitions import (
+        stream_event_transitions,
     )
 
     _assert_same(
         event_transition_counts(spark, SF_DIR),
-        stream_event_transition_counts(spark, SF_DIR),
+        stream_event_transitions(spark, SF_DIR),
         "event_transition_counts",
+    )
+
+
+def test_transition_partials_bounded_by_pairs_not_events(spark):
+    """The state function counts transitions itself: the sink holds at
+    most one (prev, cur, n) row per shard and type pair, far fewer than
+    the events it folded -- never one row per event."""
+    from etl_rf_matrix_controller_spark.plans.scale import adaptive_state_shards
+    from etl_rf_matrix_controller_spark.streaming.transitions import (
+        stream_transitions,
+    )
+    from etl_rf_matrix_controller_spark.streaming.windows import _events_stream
+
+    events = load_table(spark, SF_DIR, "events")
+    n_events = events.count()
+    n_types = events.select("event_type").distinct().count()
+    partials = stream_transitions(_events_stream(spark, SF_DIR), spark)
+    n_partials = partials.count()
+    assert n_partials <= adaptive_state_shards(spark) * n_types**2
+    assert 2 * n_partials < n_events, (n_partials, n_events)
+    assert partials.agg(F.sum("n")).first()[0] == (
+        n_events - events.select("user_id").distinct().count()
     )
 
 
@@ -933,7 +954,6 @@ def test_cms_cells_batch_eq_stream(spark):
         CMS_CELLS,
         CMS_ROWS,
     )
-    from etl_rf_matrix_controller_spark.sources.tables import load_table
     from etl_rf_matrix_controller_spark.streaming.state import stream_cms_cells
 
     ev = load_table(spark, SF_DIR, "events").select("user_id")
