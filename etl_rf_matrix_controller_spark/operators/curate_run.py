@@ -37,11 +37,13 @@ from etl_rf_matrix_controller_spark.operators.curation import (
     export_training_shards,
     gopher_flags_df,
 )
-from etl_rf_matrix_controller_spark.operators.dedup import dup_corpus
+from etl_rf_matrix_controller_spark.operators.dedup import (
+    doc_tokset_col,
+    dup_corpus,
+)
 from etl_rf_matrix_controller_spark.operators.pipeline import hash_bucket
 from etl_rf_matrix_controller_spark.streaming.neardup import (
     NEARDUP_DF_CAP,
-    _toks_col,
     batch_band_candidates,
 )
 
@@ -54,9 +56,9 @@ def near_dup_drop_ids(docs: DataFrame, cap: int = NEARDUP_DF_CAP) -> DataFrame:
     index, the admission-control discipline) verified by exact Jaccard
     >= 0.6 on the candidate-scaled pair set."""
     cand = batch_band_candidates(docs, cap)
-    toksets = docs.select("doc_id", _toks_col().alias("toks")).localCheckpoint(
-        eager=False
-    )
+    toksets = docs.select(
+        "doc_id", doc_tokset_col().alias("toks")
+    ).localCheckpoint(eager=False)
     ta, tb = toksets.alias("ta"), toksets.alias("tb")
     jacc = F.size(
         F.array_intersect(F.col("ta.toks"), F.col("tb.toks"))

@@ -70,7 +70,13 @@ def adaptive_state_shards(spark, per_core: int = 4, floor: int = 32) -> int:
     (~1-2 ms each) is not: the former fixed 1024 shards cost ~1-2 s per
     micro-batch at local core counts, while a 1000-core cluster wants
     thousands of shards for parallelism.  per_core x cores keeps every
-    core busy with a few groups; the floor guards tiny test sessions."""
+    core busy with a few groups; the floor guards tiny test sessions.
+
+    Called only by streaming/keyed_state.py.  The count is not
+    persisted: state checkpointed under one count would be misrouted
+    under another, but no sharded op takes a durable checkpointLocation
+    -- all drain through run_stream_to_memory's temporary checkpoint --
+    so no shard-keyed state outlives its session."""
     return max(per_core * spark.sparkContext.defaultParallelism, floor)
 
 

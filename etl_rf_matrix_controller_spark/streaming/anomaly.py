@@ -13,7 +13,8 @@ bit-for-bit with no sqrt or division anywhere.  The batch twin is the
 running-window spelling (ROWS BETWEEN UNBOUNDED PRECEDING AND 1
 PRECEDING), which is exactly the declared oracle -- stream == batch
 across any time-ordered micro-batch split, the streaming/transitions.py
-contract.
+contract.  The state is sharded by streaming/keyed_state.py: one state
+row per shard, holding its users' triples.
 
 Complements the batch drift family (`value_zscore_outliers` scores
 against the GLOBAL mean; `ewma_control_chart` / `page_hinkley_drift` /
@@ -25,16 +26,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import LongType, StructField, StructType
 
 from etl_rf_matrix_controller_spark.plans.registry import declared
-from etl_rf_matrix_controller_spark.plans.scale import adaptive_state_shards
+from etl_rf_matrix_controller_spark.streaming.keyed_state import (
+    apply_keyed_state,
+    per_entity,
+)
 from etl_rf_matrix_controller_spark.streaming.windows import (
     _events_stream,
     run_stream_to_memory,
@@ -53,59 +51,25 @@ _OUT_SCHEMA = StructType(
 )
 _MOMENT_STATE_SCHEMA = StructType(
     [
-        StructField("users", ArrayType(LongType())),
-        StructField("ns", ArrayType(LongType())),
-        StructField("sums", ArrayType(LongType())),
-        StructField("sumsqs", ArrayType(LongType())),
+        StructField("ns", LongType()),
+        StructField("sums", LongType()),
+        StructField("sumsqs", LongType()),
     ]
 )
 
 
-def _moment_scorer(key, pdf_iter, state: GroupState):
-    """One SHARD of the running-moment index: score each event against
-    its user's prior (n, S, Q), then fold it in."""
-    import pandas as pd
-
-    if state.exists:
-        users, ns, sums, sumsqs = state.get
-        index = {
-            u: [n, s, q] for u, n, s, q in zip(users, ns, sums, sumsqs)
-        }
-    else:
-        index = {}
-    out: dict[int, list[int]] = {}
-    batch = [pdf for pdf in pdf_iter if not pdf.empty]
-    if batch:
-        rows = pd.concat(batch).sort_values(["ts_us", "event_id"])
-        for user, grp in rows.groupby("user_id", sort=False):
-            user = int(user)
-            st = index.setdefault(user, [0, 0, 0])
-            acc = out.setdefault(user, [0, 0])
-            for x in grp["x"].astype("int64"):
-                x = int(x)
-                n, s, q = st
-                if n >= ZSCORE_MIN_PRIOR:
-                    acc[0] += 1
-                    if (x * n - s) ** 2 > 9 * (n * q - s * s):
-                        acc[1] += 1
-                st[0] = n + 1
-                st[1] = s + x
-                st[2] = q + x * x
-    state.update(
-        (
-            list(index.keys()),
-            [v[0] for v in index.values()],
-            [v[1] for v in index.values()],
-            [v[2] for v in index.values()],
-        )
-    )
-    yield pd.DataFrame(
-        {
-            "user_id": list(out.keys()),
-            "d_scored": [v[0] for v in out.values()],
-            "d_anomalies": [v[1] for v in out.values()],
-        }
-    )
+def _moment_scorer(user, prev, rows):
+    """One user's running moments: score each event against the prior
+    (n, S, Q), then fold it in."""
+    n, s, q = prev or (0, 0, 0)
+    scored = anomalies = 0
+    for x in rows["x"].tolist():
+        if n >= ZSCORE_MIN_PRIOR:
+            scored += 1
+            if (x * n - s) ** 2 > 9 * (n * q - s * s):
+                anomalies += 1
+        n, s, q = n + 1, s + x, q + x * x
+    return (n, s, q), [(user, scored, anomalies)]
 
 
 def stream_zscore_rows(
@@ -120,18 +84,10 @@ def stream_zscore_rows(
         F.unix_micros("ts").alias("ts_us"),
         F.col("event_id").cast("bigint").alias("event_id"),
         F.round(F.col("value") * 10000).cast("bigint").alias("x"),
-    ).withColumn(
-        # scale-adaptive shard count (round 11): results are shard-
-        # invariant; see plans/scale.py::adaptive_state_shards
-        "shard",
-        F.pmod(F.xxhash64("user_id"), F.lit(adaptive_state_shards(spark))),
     )
-    out = keyed.groupBy("shard").applyInPandasWithState(
-        _moment_scorer,
-        outputStructType=_OUT_SCHEMA,
-        stateStructType=_MOMENT_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    out = apply_keyed_state(
+        keyed, "user_id", ("ts_us", "event_id"), per_entity(_moment_scorer),
+        _OUT_SCHEMA, _MOMENT_STATE_SCHEMA,
     )
     return run_stream_to_memory(out, spark, "update", progress_holder)
 

@@ -19,7 +19,8 @@ Design (single stateful operator, one pass):
     hash, retaining ONE exemplar (dedup-exact semantics).  The near
     tier's minhash bands use skey ``m|<band>|<bkey>`` with the
     first-NEARDUP_DF_CAP retention discipline.  Both kinds of bucket
-    live in the same sharded applyInPandasWithState index, so the whole
+    live in the same admission index (neardup.py::admission_fold, sharded
+    by streaming/keyed_state.py), so the whole
     pipeline is ONE stateful operator -- no multi-stateful-operator
     restrictions, no second shuffle.
   * Near candidates are exact-Jaccard-verified batch-side (candidate-
@@ -45,14 +46,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from etl_rf_matrix_controller_spark.operators.curation import (
     RULE_MAX_MWL,
@@ -75,29 +68,20 @@ from etl_rf_matrix_controller_spark.operators.dedup import (
 )
 from etl_rf_matrix_controller_spark.plans.conventions import ratio4, ratio4_sql
 from etl_rf_matrix_controller_spark.plans.registry import declared
-from etl_rf_matrix_controller_spark.plans.scale import adaptive_state_shards
 from etl_rf_matrix_controller_spark.sources.tables import load_table
+from etl_rf_matrix_controller_spark.streaming.keyed_state import (
+    apply_keyed_state,
+)
 from etl_rf_matrix_controller_spark.streaming.neardup import (
     NEARDUP_DF_CAP,
+    RETAINED_SCHEMA,
+    VERDICT_SCHEMA,
     _bands_union_sql,
     _mh_sql,
+    admission_fold,
 )
 from etl_rf_matrix_controller_spark.streaming.windows import (
     run_stream_to_memory,
-)
-
-_VERDICT_SCHEMA = StructType(
-    [
-        StructField("kind", StringType()),
-        StructField("doc_a", LongType()),
-        StructField("doc_b", LongType()),
-    ]
-)
-_INDEX_STATE_SCHEMA = StructType(
-    [
-        StructField("bkeys", ArrayType(StringType())),
-        StructField("retained", ArrayType(ArrayType(LongType()))),
-    ]
 )
 
 
@@ -146,63 +130,6 @@ def quality_keep_sql(toks: str | None = None) -> str:
 def quality_keep_col(toks: str | None = None) -> F.Column:
     """Column view of :func:`quality_keep_sql` (one py4j call)."""
     return F.expr(quality_keep_sql(toks))
-
-
-def _make_admission_op(cap: int):
-    """The IN-MEMORY admission index (applyInPandasWithState shards):
-    right for a long-lived low-latency stream whose state fits
-    executors.  Its persistent twin is streaming/ingest.py, where the
-    bucketed on-disk index IS the state (same tiers, same retention
-    discipline, pinned equal by tests/test_ingest_unification.py) --
-    the path to use when batch consumers must see what the stream
-    admitted."""
-
-    def _admit(key, pdf_iter, state: GroupState):
-        """One SHARD of the admission index.  Buckets keyed ``x|<hash>``
-        retain one exemplar (exact tier), ``m|<band>|<bkey>`` retain the
-        first ``cap`` (near tier); ``q|<doc_id>`` rows pass through as
-        quality-rejection records without touching the index."""
-        import pandas as pd
-
-        if state.exists:
-            bkeys, lists = state.get
-            index = {k: list(v) for k, v in zip(bkeys, lists)}
-        else:
-            index = {}
-        kinds: list[str] = []
-        out_a: list = []
-        out_b: list = []
-        batch = [pdf for pdf in pdf_iter if not pdf.empty]
-        if batch:
-            rows = pd.concat(batch).sort_values("doc_id")
-            for skey, grp in rows.groupby("skey", sort=False):
-                if skey.startswith("q|"):
-                    for doc in grp["doc_id"].astype("int64"):
-                        kinds.append("q")
-                        out_a.append(None)
-                        out_b.append(int(doc))
-                    continue
-                kind = "x" if skey.startswith("x|") else "m"
-                cap_eff = 1 if kind == "x" else cap
-                retained = index.setdefault(skey, [])
-                for doc in grp["doc_id"].astype("int64"):
-                    doc = int(doc)
-                    for a in retained:
-                        kinds.append(kind)
-                        out_a.append(a)
-                        out_b.append(doc)
-                    if len(retained) < cap_eff:
-                        retained.append(doc)
-        # shards that only ever saw quality-rejection pass-throughs have
-        # an empty index: writing it would grow state with one empty row
-        # per such shard (rejects must cost zero state)
-        if index:
-            state.update((list(index.keys()), list(index.values())))
-        yield pd.DataFrame(
-            {"kind": kinds, "doc_a": out_a, "doc_b": out_b}
-        )
-
-    return _admit
 
 
 def stream_admission_records(
@@ -264,24 +191,10 @@ def stream_admission_records(
     skeys = F.when(F.col("q_ok"), F.array(xkey, *band_keys)).otherwise(
         F.array(qkey)
     )
-    records = (
-        sig.select("doc_id", F.explode(skeys).alias("skey"))
-        .withColumn(
-            # scale-adaptive shard count (round 11): results are shard-
-            # invariant; see plans/scale.py::adaptive_state_shards
-            "shard",
-            F.pmod(
-                F.xxhash64("skey"), F.lit(adaptive_state_shards(spark))
-            ),
-        )
-        .groupBy("shard")
-        .applyInPandasWithState(
-            _make_admission_op(cap),
-            outputStructType=_VERDICT_SCHEMA,
-            stateStructType=_INDEX_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    records = apply_keyed_state(
+        sig.select("doc_id", F.explode(skeys).alias("skey")),
+        "skey", ("doc_id",), admission_fold(cap),
+        VERDICT_SCHEMA, RETAINED_SCHEMA,
     )
     return run_stream_to_memory(
         records, spark, "update", progress_holder

@@ -23,7 +23,7 @@ tier is folded into the band space as the reserved band ``-1`` with
 ``bkey = md5(trim(text))`` and an effective cap of 1 (one exemplar per
 content hash); MinHash bands ``0..N_BANDS-1`` keep the first-``cap``
 retention discipline.  Retention matches the in-memory stateful op
-(streaming/curation.py::_make_admission_op) exactly: a quality-passing
+(streaming/neardup.py::admission_fold) exactly: a quality-passing
 doc is retained in a bucket iff fewer than ``cap_eff`` docs were
 retained there before it (across the base, earlier deltas, and earlier
 rows of the same batch, in arrival order), and every arriving doc emits

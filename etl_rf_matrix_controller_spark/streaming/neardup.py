@@ -12,12 +12,14 @@ Design (scale story first):
     aggregation, no shuffle before the keyed state op.  A document's
     MinHash is array_min over its (distinct-gram, permutation) transform,
     identical values to the batch groupBy(doc).min spelling.
-  * The stream is keyed by (band, bkey); applyInPandasWithState holds, per
-    band bucket, the FIRST ``cap`` arrival doc_ids (the df-cap discipline
-    from winnow_overlap_pairs): state is bounded at n_bucket_keys x cap
-    rows at ANY throughput, and a viral boilerplate bucket degrades
-    gracefully (later members still PROBE and get flagged against the
-    first ``cap`` exemplars; they just stop growing the index).
+  * The stream is keyed by ``m|<band>|<bkey>`` bucket keys, sharded by
+    streaming/keyed_state.py; the admission fold (shared with
+    curation.py) holds, per band bucket, the FIRST ``cap`` arrival
+    doc_ids (the df-cap discipline from winnow_overlap_pairs): state is
+    bounded at n_bucket_keys x cap ids at ANY throughput, and a viral
+    boilerplate bucket degrades gracefully (later members still PROBE
+    and get flagged against the first ``cap`` exemplars; they just stop
+    growing the index).
   * Candidate pairs stream out in update mode; the exact-Jaccard
     verification is a batch join against the (tiny, candidate-scaled)
     pair set -- the same two-tier LSH/verify split as the batch family.
@@ -33,7 +35,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     LongType,
@@ -52,71 +53,60 @@ from etl_rf_matrix_controller_spark.operators.dedup import (
     per_row_band_rows,
 )
 from etl_rf_matrix_controller_spark.plans.registry import declared
-from etl_rf_matrix_controller_spark.plans.scale import adaptive_state_shards
 from etl_rf_matrix_controller_spark.sources.tables import load_table
+from etl_rf_matrix_controller_spark.streaming.keyed_state import (
+    apply_keyed_state,
+    per_entity,
+)
 from etl_rf_matrix_controller_spark.streaming.windows import (
     run_stream_to_memory,
 )
 
 # First-`cap` docs retained per (band, bkey): the near-dup ingest df-cap.
 NEARDUP_DF_CAP = 50
-# State keys are SHARDED: hash(band, bkey) % the shard count from
-# plans/scale.py::adaptive_state_shards is the
-# applyInPandasWithState group key, each shard's state holding a map of
-# its bucket keys -> retained ids.  Keying state by raw bkey made one
-# Python/pandas group per bucket: ~140k singleton groups at sf0.1 cost
-# ~0.2 ms of per-group overhead each (30.8 s measured, vs 2 s sharded).
-# Sharding bounds group count at any corpus size; per-bucket semantics
-# are untouched (buckets are processed independently inside the shard).
 
-_PAIR_SCHEMA = StructType(
-    [StructField("doc_a", LongType()), StructField("doc_b", LongType())]
-)
-_BUCKET_STATE_SCHEMA = StructType(
+VERDICT_SCHEMA = StructType(
     [
-        StructField("bkeys", ArrayType(StringType())),
-        StructField("retained", ArrayType(ArrayType(LongType()))),
+        StructField("kind", StringType()),
+        StructField("doc_a", LongType()),
+        StructField("doc_b", LongType()),
     ]
 )
+# Per bucket key: its retained (first-arrival) doc_ids.
+RETAINED_SCHEMA = StructType(
+    [StructField("retained", ArrayType(LongType()))]
+)
 
 
-# _toks_col / per_row_band_rows moved to operators/dedup.py in round 7
-# (the persistent incremental band index builds from the same machinery);
-# re-exported here for the streaming twin's callers.
-_toks_col = doc_tokset_col
+def admission_fold(cap: int):
+    """The IN-MEMORY admission index over bucket keys, shared by this
+    module's band index and streaming/curation.py's composed admission:
+    right for a long-lived low-latency stream whose state fits
+    executors.  Its persistent twin is streaming/ingest.py, where the
+    bucketed on-disk index IS the state (same tiers, same retention,
+    pinned equal by tests/test_ingest_unification.py).  Keys
+    ``m|...`` (near tier) retain their first ``cap`` arrivals, ``x|...``
+    (exact tier) one; each arrival emits a (kind, exemplar, doc) record
+    per doc already retained in its bucket.  ``q|<doc_id>`` keys are
+    quality rejections: one ("q", None, doc) record each, and no state.
+    Rows arrive in doc_id order per bucket (the batch twin's ORDER BY
+    doc_id contract)."""
 
+    def step(skey, prev, rows):
+        docs = rows["doc_id"].tolist()
+        kind = skey[0]
+        if kind == "q":
+            return None, [("q", None, doc) for doc in docs]
+        keep = 1 if kind == "x" else cap
+        retained = prev[0] if prev else []
+        out = []
+        for doc in docs:
+            out.extend((kind, a, doc) for a in retained)
+            if len(retained) < keep:
+                retained.append(doc)
+        return (retained,), out
 
-def _make_band_admitter(cap: int):
-    def _admit(key, pdf_iter, state: GroupState):
-        """One SHARD of the band index: state is (bkeys, retained-lists)
-        parallel arrays -- a map of this shard's bucket keys to their
-        first-``cap`` arrival doc_ids.  Buckets are independent; rows are
-        processed in doc_id order per bucket (the batch twin's ORDER BY
-        doc_id contract)."""
-        import pandas as pd
-
-        if state.exists:
-            bkeys, lists = state.get
-            index = {k: list(v) for k, v in zip(bkeys, lists)}
-        else:
-            index = {}
-        out_a: list[int] = []
-        out_b: list[int] = []
-        batch = [pdf for pdf in pdf_iter if not pdf.empty]
-        if batch:
-            rows = pd.concat(batch).sort_values("doc_id")
-            for bk, grp in rows.groupby("skey", sort=False):
-                retained = index.setdefault(bk, [])
-                for doc in grp["doc_id"].astype("int64"):
-                    doc = int(doc)
-                    out_a.extend(retained)
-                    out_b.extend([doc] * len(retained))
-                    if len(retained) < cap:
-                        retained.append(doc)
-        state.update((list(index.keys()), list(index.values())))
-        yield pd.DataFrame({"doc_a": out_a, "doc_b": out_b})
-
-    return _admit
+    return per_entity(step)
 
 
 def stream_band_candidates(
@@ -132,34 +122,22 @@ def stream_band_candidates(
     keeps the streaming query single-stateful-operator).  Pass
     ``progress_holder`` to receive the per-batch StreamingQueryProgress
     dicts (the state-bound assertion reads numRowsTotal from them)."""
-    pairs = (
-        per_row_band_rows(docs_stream)
-        .select(
-            "doc_id",
-            F.concat_ws("|", F.col("band").cast("string"), "bkey").alias(
-                "skey"
-            ),
-        )
-        .withColumn(
-            # scale-adaptive shard count (round 11): results are shard-
-            # invariant; see plans/scale.py::adaptive_state_shards
-            "shard",
-            F.pmod(
-                F.xxhash64("skey"), F.lit(adaptive_state_shards(spark))
-            ),
-        )
-        .groupBy("shard")
-        .applyInPandasWithState(
-            _make_band_admitter(cap),
-            outputStructType=_PAIR_SCHEMA,
-            stateStructType=_BUCKET_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    skeys = per_row_band_rows(docs_stream).select(
+        "doc_id",
+        F.concat_ws(
+            "|", F.lit("m"), F.col("band").cast("string"), "bkey"
+        ).alias("skey"),
     )
-    return run_stream_to_memory(
-        pairs, spark, "update", progress_holder
-    ).distinct()
+    records = apply_keyed_state(
+        skeys, "skey", ("doc_id",), admission_fold(cap),
+        VERDICT_SCHEMA, RETAINED_SCHEMA,
+    )
+    return (
+        run_stream_to_memory(records, spark, "update", progress_holder)
+        .filter(F.col("kind") == "m")
+        .select("doc_a", "doc_b")
+        .distinct()
+    )
 
 
 def batch_band_candidates(docs: DataFrame, cap: int) -> DataFrame:
@@ -322,7 +300,7 @@ def stream_near_dup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         fan_out(batch_docs)
         .join(F.broadcast(pair_ids), "doc_id", "left_semi")
         .repartition(spark.sparkContext.defaultParallelism)
-        .select("doc_id", _toks_col().alias("toks"))
+        .select("doc_id", doc_tokset_col().alias("toks"))
         .localCheckpoint(eager=False)
     )
     ta, tb = toksets.alias("ta"), toksets.alias("tb")

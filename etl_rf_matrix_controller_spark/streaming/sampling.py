@@ -19,7 +19,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     LongType,
     StringType,
@@ -28,6 +27,10 @@ from pyspark.sql.types import (
 )
 
 from etl_rf_matrix_controller_spark.plans.registry import declared
+from etl_rf_matrix_controller_spark.streaming.keyed_state import (
+    apply_keyed_state,
+    per_entity,
+)
 from etl_rf_matrix_controller_spark.streaming.windows import (
     _events_stream,
     run_stream_to_memory,
@@ -48,36 +51,14 @@ _COUNT_STATE_SCHEMA = StructType([StructField("n_admitted", LongType())])
 
 
 def _make_admitter(k: int):
-    def _admit(key, pdf_iter, state: GroupState):
+    def _admit(stratum, prev, rows):
         """One stratum: admit rows in (ts_us, event_id) order until the
         cross-batch counter reaches ``k``; emit ONLY admitted rows."""
-        import pandas as pd
+        n = prev[0] if prev else 0
+        take = rows.head(max(k - n, 0))[_OUT_SCHEMA.fieldNames()]
+        return (n + len(take),), take.itertuples(index=False, name=None)
 
-        n = state.get[0] if state.exists else 0
-        out = []
-        if n < k:
-            batch = [pdf for pdf in pdf_iter if not pdf.empty]
-            if batch:
-                rows = pd.concat(batch).sort_values(["ts_us", "event_id"])
-                take = rows.head(k - n)
-                n += len(take)
-                out.append(
-                    take[["event_type", "ts_us", "event_id", "user_id"]]
-                )
-        else:
-            # drain the iterator (required by the contract) without work
-            for _ in pdf_iter:
-                pass
-        state.update((n,))
-        yield (
-            pd.concat(out)
-            if out
-            else pd.DataFrame(
-                {"event_type": [], "ts_us": [], "event_id": [], "user_id": []}
-            )
-        )
-
-    return _admit
+    return per_entity(_admit)
 
 
 def stream_stratified_rows(
@@ -95,12 +76,9 @@ def stream_stratified_rows(
         F.col("event_id").cast("bigint").alias("event_id"),
         F.col("user_id").cast("bigint").alias("user_id"),
     )
-    out = keyed.groupBy("event_type").applyInPandasWithState(
-        _make_admitter(k),
-        outputStructType=_OUT_SCHEMA,
-        stateStructType=_COUNT_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    out = apply_keyed_state(
+        keyed, "event_type", ("ts_us", "event_id"), _make_admitter(k),
+        _OUT_SCHEMA, _COUNT_STATE_SCHEMA,
     )
     return run_stream_to_memory(out, spark, "update", progress_holder)
 
@@ -135,10 +113,10 @@ def stream_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB posture: state is stratum-cardinality-bounded (a counter per
     type -- nothing grows with throughput); the only pre-state shuffle
-    is the stratum key; admitted rows (<= K per stratum, ever) are the
-    entire sink volume.  Stream == batch across time-ordered
-    micro-batches pinned in tests/test_streaming_sampling.py, including
-    a stratum that FILLS mid-stream and admits nothing after."""
+    is the shard hash of the stratum key; admitted rows (<= K per
+    stratum, ever) are the entire sink volume.  Stream == batch across
+    time-ordered micro-batches pinned in tests/test_round7b_ops.py,
+    including a stratum that FILLS mid-stream and admits nothing after."""
     rows = stream_stratified_rows(
         _events_stream(spark, sf_dir), spark, STRAT_SAMPLE_K
     )

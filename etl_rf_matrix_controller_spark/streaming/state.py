@@ -1,20 +1,23 @@
-"""Stateful streaming: last-write-wins keyed state via applyInPandasWithState.
+"""Stateful streaming: last-write-wins keyed state, sharded per key.
 
 Reference semantics: the background poller replaces the route map wholesale
 every 5 s (etl_controller.py:2793-2807, 3040-3084); a point write
 overwrites one key (:2444).
 
 Spark re-expression (T2): a keyed state store updated per micro-batch --
-``applyInPandasWithState`` keeps, per key, the (ts, event_id)-max record;
-each batch emits the key's current best in update mode.  With the
-``availableNow`` trigger over the same parquet, the final emission per key
-must equal the batch ``route_latest_state`` -- asserted in
-tests/test_streaming.py (the batch==stream contract for state ops, which
-have no SQL oracle).
+the sharded keyed-state adapter (streaming/keyed_state.py) keeps, per
+key, the (ts, event_id)-max record; each batch emits the key's current
+best in update mode.  With the ``availableNow`` trigger over the same
+parquet, the final emission per key must equal the batch
+``route_latest_state`` -- asserted in tests/test_streaming.py (the
+batch==stream contract for state ops, which have no SQL oracle).
 
-Scale: state is hash-partitioned by key across executors (RocksDB-backed
-state store in production) -- memory per executor is O(keys/executors),
-the same layout the batch window-dedup shuffle uses.
+Scale: state is hash-partitioned by key into a bounded number of shards
+(one state row and one pandas group per shard, not per key) across
+executors -- memory per executor is O(keys/executors), the same layout
+the batch window-dedup shuffle uses.  Every op here runs through that
+adapter except stream_state_ttl_expiry, whose event-time timeout is per
+key.
 """
 
 from __future__ import annotations
@@ -38,6 +41,10 @@ from etl_rf_matrix_controller_spark.sources.tables import (
     normalize_events_ts,
     parquet_schema,
     set_events_read_confs,
+)
+from etl_rf_matrix_controller_spark.streaming.keyed_state import (
+    apply_keyed_state,
+    per_entity,
 )
 from etl_rf_matrix_controller_spark.streaming.windows import (
     _events_stream,
@@ -73,50 +80,32 @@ def _last_emission(tbl: DataFrame, key: str, *order: str) -> DataFrame:
     )
 
 
-def _update_latest(key, pdf_iter, state: GroupState):
+def _update_latest(user, best, rows):
     """Keep the (ts, event_id)-max record per key; emit current best."""
     import pandas as pd
 
-    best = state.get if state.exists else None  # (ts_micros, event_id, type, value)
-    for pdf in pdf_iter:
-        if pdf.empty:
-            continue
-        pdf = pdf.assign(_tsm=pdf["ts"].astype("int64") // 1000)
-        top = pdf.sort_values(["_tsm", "event_id"], ascending=False).iloc[0]
-        cand = (
-            int(top["_tsm"]),
-            int(top["event_id"]),
-            str(top["event_type"]),
-            float(top["value"]),
-        )
-        if best is None or (cand[0], cand[1]) > (best[0], best[1]):
-            best = cand
-    if best is not None:
-        state.update(best)
-        # value emitted RAW: Python round() is half-to-even on binary
-        # doubles and diverges from Spark's F.round on .xx5 boundaries;
-        # the batch-parity caller applies Spark-side rounding itself.
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "last_event_id": [best[1]],
-                "last_event_type": [best[2]],
-                "last_value": [best[3]],
-                "last_ts": [pd.Timestamp(best[0], unit="us")],
-            }
-        )
+    top = rows.iloc[-1]
+    cand = (
+        top["ts"].value // 1000,
+        int(top["event_id"]),
+        str(top["event_type"]),
+        float(top["value"]),
+    )
+    if best is None or (cand[0], cand[1]) > (best[0], best[1]):
+        best = cand
+    # value emitted RAW: Python round() is half-to-even on binary
+    # doubles and diverges from Spark's F.round on .xx5 boundaries;
+    # the batch-parity caller applies Spark-side rounding itself.
+    ts = pd.Timestamp(best[0], unit="us")
+    return best, [(user, best[1], best[2], best[3], ts)]
 
 
 def stream_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T2 under real Structured Streaming: keyed state, update mode,
     availableNow; returns the final per-key state as a batch DataFrame."""
-    events = _events_stream(spark, sf_dir)
-    updates = events.groupBy("user_id").applyInPandasWithState(
-        _update_latest,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    updates = apply_keyed_state(
+        _events_stream(spark, sf_dir), "user_id", ("ts", "event_id"),
+        per_entity(_update_latest), OUTPUT_SCHEMA, STATE_SCHEMA,
     )
     tbl = run_stream_to_memory(updates, spark, "update")
     # (last_ts, last_event_id) is the same total order the state update
@@ -144,122 +133,34 @@ EMA_OUTPUT_SCHEMA = StructType(
 )
 
 
-def _update_ema(key, pdf_iter, state: GroupState):
+def _update_ema(user, prev, rows):
     """Fold alpha=0.3 EMA over (ts, event_id)-ordered values; state holds
     one (ema, count) scalar pair per key -- O(1) state per key, the shape
     that scales where the batch collect_list cannot."""
-    import pandas as pd
-
-    ema, n = state.get if state.exists else (None, 0)
-    for pdf in pdf_iter:
-        if pdf.empty:
-            continue
-        pdf = pdf.sort_values(["ts", "event_id"])
-        for v in pdf["value"].astype("float64"):
-            v = float(v)
-            # Identical double recurrence to the batch/oracle fold
-            # (0.3e0 * x + (1e0 - 0.3e0) * acc): same literals, same
-            # order, bit-identical result.
-            ema = v if ema is None else 0.3 * v + (1 - 0.3) * ema
-            n += 1
-    if n:
-        state.update((float(ema), int(n)))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "ema_value": [ema]}
-        )
+    ema, n = prev or (None, 0)
+    for v in rows["value"].astype("float64").tolist():
+        # Identical double recurrence to the batch/oracle fold
+        # (0.3e0 * x + (1e0 - 0.3e0) * acc): same literals, same
+        # order, bit-identical result.
+        ema = v if ema is None else 0.3 * v + (1 - 0.3) * ema
+        n += 1
+    return (ema, n), [(user, n, ema)]
 
 
 def stream_ema_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful streaming op: per-user EMA via applyInPandasWithState
+    """Custom stateful streaming op: per-user EMA as sharded keyed state
     (update mode, availableNow); returns the final per-key emission as a
     batch DataFrame, comparable to operators.behavior.ema_user_value."""
     events = _events_stream(spark, sf_dir).select(
         "user_id", "ts", "event_id", "value"
     )
-    updates = events.groupBy("user_id").applyInPandasWithState(
-        _update_ema,
-        outputStructType=EMA_OUTPUT_SCHEMA,
-        stateStructType=EMA_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    updates = apply_keyed_state(
+        events, "user_id", ("ts", "event_id"), per_entity(_update_ema),
+        EMA_OUTPUT_SCHEMA, EMA_STATE_SCHEMA,
     )
     tbl = run_stream_to_memory(updates, spark, "update")
     # n_events is strictly increasing per key across emissions, so the
     # max-n row per key is the final state.
-    return _last_emission(tbl, "user_id", "n_events").select(
-        "user_id", "n_events", "ema_value"
-    )
-
-
-class EmaProcessor:
-    """transformWithStateInPandas processor: the Spark-4 arbitrary-state
-    API form of the EMA fold (same recurrence as _update_ema; ValueState
-    holds the (ema, n) scalar pair per key).  Class body defined lazily
-    to keep module import working if the API is absent."""
-
-
-def _make_ema_processor():
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _EmaProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("ema", "ema double, n bigint")
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            if self._state.exists():
-                prev = self._state.get()
-                ema, n = float(prev[0]), int(prev[1])
-            else:
-                ema, n = None, 0
-            for pdf in rows:
-                if pdf.empty:
-                    continue
-                pdf = pdf.sort_values(["ts", "event_id"])
-                for v in pdf["value"].astype("float64"):
-                    v = float(v)
-                    # Same double recurrence as _update_ema / the oracle.
-                    ema = v if ema is None else 0.3 * v + (1 - 0.3) * ema
-                    n += 1
-            if n:
-                self._state.update((float(ema), int(n)))
-                yield pd.DataFrame(
-                    {"user_id": [key[0]], "n_events": [n], "ema_value": [ema]}
-                )
-
-        def close(self) -> None:
-            pass
-
-    return _EmaProcessor()
-
-
-def stream_ema_user_value_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EMA via transformWithStateInPandas (Spark 4 arbitrary-state API,
-    RocksDB state store): the modern twin of stream_ema_user_value.
-    Returns the final per-key emission as a batch DataFrame.
-
-    NOTE: the TWS state protocol imports google.protobuf at runtime; in
-    containers without it the query fails at initialization (the pytest
-    twin importorskips).  stream_ema_user_value (applyInPandasWithState)
-    is the dependency-free fallback with identical semantics."""
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    events = _events_stream(spark, sf_dir).select(
-        "user_id", "ts", "event_id", "value"
-    )
-    updates = events.groupBy("user_id").transformWithStateInPandas(
-        _make_ema_processor(),
-        outputStructType=EMA_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-    tbl = run_stream_to_memory(updates, spark, "update")
     return _last_emission(tbl, "user_id", "n_events").select(
         "user_id", "n_events", "ema_value"
     )
@@ -288,36 +189,20 @@ FRAME_OUT_SCHEMA = StructType(
 )
 
 
-def _update_route(key, pdf_iter, state: GroupState):
+def _update_route(out_id, best, rows):
     """Last-writer-wins per out_id, ordered by frame_id -- the
     reference's route map update loop (etl_controller.py:615-623) as
     keyed streaming state."""
-    import pandas as pd
-
-    best = state.get if state.exists else None
-    for pdf in pdf_iter:
-        if pdf.empty:
-            continue
-        top = pdf.sort_values("frame_id", ascending=False).iloc[0]
-        cand = (
-            int(top["frame_id"]),
-            int(top["in_id"]),
-            int(top["weight"]),
-            str(top["door_open"]),
-        )
-        if best is None or cand[0] > best[0]:
-            best = cand
-    if best is not None:
-        state.update(best)
-        yield pd.DataFrame(
-            {
-                "out_id": [key[0]],
-                "frame_id": [best[0]],
-                "in_id": [best[1]],
-                "weight": [best[2]],
-                "door_open": [best[3]],
-            }
-        )
+    top = rows.iloc[-1]
+    cand = (
+        int(top["frame_id"]),
+        int(top["in_id"]),
+        int(top["weight"]),
+        str(top["door_open"]),
+    )
+    if best is None or cand[0] > best[0]:
+        best = cand
+    return best, [(out_id, *best)]
 
 
 def parse_frames(df: DataFrame) -> DataFrame:
@@ -341,7 +226,7 @@ def stream_route_state_from_frames(
     """The reference's whole ingest loop, Spark-shaped end to end:
     frame-protocol STREAM (custom SimpleDataSourceStreamReader) ->
     checksummed-frame regex parse -> keyed last-writer-wins state
-    (applyInPandasWithState) -> final route map.
+    (streaming/keyed_state.py) -> final route map.
 
     Micro-batches of ``batch_size`` frames update per-route state
     incrementally, exactly as the controller applies each polled frame
@@ -362,12 +247,9 @@ def stream_route_state_from_frames(
         .option("batchSize", batch_size)
         .load()
     )
-    updates = parse_frames(raw).groupBy("out_id").applyInPandasWithState(
-        _update_route,
-        outputStructType=FRAME_OUT_SCHEMA,
-        stateStructType=FRAME_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    updates = apply_keyed_state(
+        parse_frames(raw), "out_id", ("frame_id",),
+        per_entity(_update_route), FRAME_OUT_SCHEMA, FRAME_STATE_SCHEMA,
     )
     name = f"sink_{uuid.uuid4().hex}"
     q = (
@@ -513,57 +395,37 @@ def _holt_step(l: float, b: float, n_closed: int, total: int):
     return lp, bn
 
 
-def _update_holt(key, pdf_iter, state: GroupState):
+def _update_holt(event_type, prev, rows):
     """Two-component Holt state per event_type: (level, trend) over the
     CLOSED days plus the open day's running integer total -- O(1) state
     per key regardless of history length (the property the batch
     collect-the-series form gives up).  Day totals accumulate as exact
     scaled ints (the rounding already happened JVM-side), so only the
     per-day fold is float -- same order, same literals as batch."""
-    import pandas as pd
-
     l, b, n_closed, cur_day, cur_total, n_events = (
-        state.get if state.exists else (0.0, 0.0, 0, -1, 0, 0)
+        prev or (0.0, 0.0, 0, -1, 0, 0)
     )
-    for pdf in pdf_iter:
-        if pdf.empty:
-            continue
-        pdf = pdf.sort_values(["day_idx", "ts", "event_id"])
-        for day, v in zip(pdf["day_idx"].astype("int64"),
-                          pdf["v_s"].astype("int64")):
-            day, v = int(day), int(v)
-            if cur_day == -1:
-                cur_day = day
-            elif day != cur_day:
-                l, b = _holt_step(l, b, n_closed, cur_total)
-                n_closed += 1
-                cur_day, cur_total = day, 0
-            cur_total += v
-            n_events += 1
-    if n_events:
-        state.update(
-            (float(l), float(b), int(n_closed), int(cur_day),
-             int(cur_total), int(n_events))
-        )
-        # Emission closes the open day tentatively (not committed to
-        # state): the final emission therefore equals the batch fold
-        # over ALL days.
-        lt, bt = _holt_step(l, b, n_closed, cur_total)
-        yield pd.DataFrame(
-            {
-                "event_type": [key[0]],
-                "n_days": [n_closed + 1],
-                "level": [lt / 10000.0],
-                "trend": [bt / 10000.0],
-                "forecast_next": [(lt + bt) / 10000.0],
-                "n_events": [n_events],
-            }
-        )
+    for day, v in zip(rows["day_idx"].tolist(), rows["v_s"].tolist()):
+        if cur_day == -1:
+            cur_day = day
+        elif day != cur_day:
+            l, b = _holt_step(l, b, n_closed, cur_total)
+            n_closed += 1
+            cur_day, cur_total = day, 0
+        cur_total += v
+        n_events += 1
+    # Emission closes the open day tentatively (not committed to
+    # state): the final emission therefore equals the batch fold over
+    # ALL days.
+    lt, bt = _holt_step(l, b, n_closed, cur_total)
+    state = (float(l), float(b), n_closed, cur_day, cur_total, n_events)
+    out = (lt / 10000.0, bt / 10000.0, (lt + bt) / 10000.0)
+    return state, [(event_type, n_closed + 1, *out, n_events)]
 
 
 def stream_holt_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful streaming op: per-event-type Holt linear smoothing
-    via applyInPandasWithState (update mode, availableNow); returns the
+    as sharded keyed state (update mode, availableNow); returns the
     final per-key emission as a batch DataFrame, comparable to
     operators.behavior.holt_linear_daily_value.  Day index and the
     scaled integer value are computed JVM-SIDE before the stream enters
@@ -575,12 +437,9 @@ def stream_holt_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_timestamp(F.date_trunc("day", "ts")).alias("day_idx"),
         F.round(F.col("value") * 10000).cast("long").alias("v_s"),
     )
-    updates = events.groupBy("event_type").applyInPandasWithState(
-        _update_holt,
-        outputStructType=HOLT_OUTPUT_SCHEMA,
-        stateStructType=HOLT_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    updates = apply_keyed_state(
+        events, "event_type", ("day_idx", "ts", "event_id"),
+        per_entity(_update_holt), HOLT_OUTPUT_SCHEMA, HOLT_STATE_SCHEMA,
     )
     tbl = run_stream_to_memory(updates, spark, "update")
     return _last_emission(tbl, "event_type", "n_events").select(
@@ -607,7 +466,7 @@ TWAP_OUTPUT_SCHEMA = StructType(
 )
 
 
-def _update_twap(key, pdf_iter, state: GroupState):
+def _update_twap(user, prev, rows):
     """Per-user time-weighted-average state: carry (last_t, last_v) plus
     the exact integer accumulators (wsum, total_s, n_intervals) -- O(1)
     state per key.  Each arriving event closes the held interval
@@ -616,41 +475,24 @@ def _update_twap(key, pdf_iter, state: GroupState):
     user's time SPAN, so wsum <= span * max_scaled_value (~3e13 for a
     year at value 100) -- exact, and exactly representable when cast to
     double for the final division."""
-    import pandas as pd
-
-    last_t, last_v, wsum, total_s, n_iv = (
-        state.get if state.exists else (None, None, 0, 0, 0)
-    )
-    seen = False
-    for pdf in pdf_iter:
-        if pdf.empty:
-            continue
-        seen = True
-        pdf = pdf.sort_values(["ts", "event_id"])
-        for t, v in zip(pdf["t_s"].astype("int64"), pdf["v_s"].astype("int64")):
-            t, v = int(t), int(v)
-            if last_t is not None:
-                dur = t - last_t
-                wsum += last_v * dur
-                total_s += dur
-                n_iv += 1
-            last_t, last_v = t, v
-    if seen:
-        state.update((last_t, last_v, int(wsum), int(total_s), int(n_iv)))
-        if total_s > 0:
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_intervals": [n_iv],
-                    "total_s": [total_s],
-                    "twap": [float(wsum) / (float(total_s) * 10000.0)],
-                }
-            )
+    last_t, last_v, wsum, total_s, n_iv = prev or (None, None, 0, 0, 0)
+    for t, v in zip(rows["t_s"].tolist(), rows["v_s"].tolist()):
+        if last_t is not None:
+            dur = t - last_t
+            wsum += last_v * dur
+            total_s += dur
+            n_iv += 1
+        last_t, last_v = t, v
+    state = (last_t, last_v, wsum, total_s, n_iv)
+    if total_s <= 0:
+        return state, []
+    twap = float(wsum) / (float(total_s) * 10000.0)
+    return state, [(user, n_iv, total_s, twap)]
 
 
 def stream_twap_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful streaming op: per-user time-weighted average via
-    applyInPandasWithState (update mode, availableNow); the final
+    """Custom stateful streaming op: per-user time-weighted average as
+    sharded keyed state (update mode, availableNow); the final
     per-key emission is comparable bit-for-bit to
     operators.behavior.time_weighted_avg_value -- epoch seconds and the
     scaled integer value are computed JVM-side before the stream enters
@@ -663,12 +505,9 @@ def stream_twap_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_timestamp("ts").alias("t_s"),
         F.round(F.col("value") * 10000).cast("long").alias("v_s"),
     )
-    updates = events.groupBy("user_id").applyInPandasWithState(
-        _update_twap,
-        outputStructType=TWAP_OUTPUT_SCHEMA,
-        stateStructType=TWAP_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    updates = apply_keyed_state(
+        events, "user_id", ("ts", "event_id"), per_entity(_update_twap),
+        TWAP_OUTPUT_SCHEMA, TWAP_STATE_SCHEMA,
     )
     tbl = run_stream_to_memory(updates, spark, "update")
     return _last_emission(tbl, "user_id", "n_intervals").select(
@@ -693,37 +532,21 @@ BALANCE_OUTPUT_SCHEMA = StructType(
 )
 
 
-def _update_balance(key, pdf_iter, state: GroupState):
+def _update_balance(user, prev, rows):
     """Clamped-balance fold (max(0, bal + delta) per step, counting clamp
     hits) over (ts, event_id)-ordered integer deltas; state is three
     int64 scalars per key.  All-integer arithmetic, so the streaming fold
     is bit-identical to the batch F.aggregate fold and the oracle's
     recursive CTE regardless of how rows split across micro-batches --
     the state carries everything the remaining fold needs."""
-    import pandas as pd
-
-    bal, clamps, n = state.get if state.exists else (0, 0, 0)
-    for pdf in pdf_iter:
-        if pdf.empty:
-            continue
-        pdf = pdf.sort_values(["ts", "event_id"])
-        for d in pdf["d"].astype("int64"):
-            d = int(d)
-            if bal + d < 0:
-                bal, clamps = 0, clamps + 1
-            else:
-                bal += d
-            n += 1
-    if n:
-        state.update((int(bal), int(clamps), int(n)))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_rows": [n],
-                "balance_s": [bal],
-                "n_clamps": [clamps],
-            }
-        )
+    bal, clamps, n = prev or (0, 0, 0)
+    for d in rows["d"].tolist():
+        if bal + d < 0:
+            bal, clamps = 0, clamps + 1
+        else:
+            bal += d
+        n += 1
+    return (bal, clamps, n), [(user, n, bal, clamps)]
 
 
 def stream_clamped_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -748,12 +571,9 @@ def stream_clamped_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("d"),
         )
     )
-    updates = events.groupBy("user_id").applyInPandasWithState(
-        _update_balance,
-        outputStructType=BALANCE_OUTPUT_SCHEMA,
-        stateStructType=BALANCE_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    updates = apply_keyed_state(
+        events, "user_id", ("ts", "event_id"), per_entity(_update_balance),
+        BALANCE_OUTPUT_SCHEMA, BALANCE_STATE_SCHEMA,
     )
     tbl = run_stream_to_memory(updates, spark, "update")
     return _last_emission(tbl, "user_id", "n_rows").select(
@@ -780,7 +600,7 @@ def _cms_schemas():
     return state, output
 
 
-def _update_cms(key, pdf_iter, state: GroupState):
+def _update_cms(row_id, prev, rows):
     """Count-min-sketch row as streaming state: one int64 cell array per
     sketch row, incremented per event -- the mergeable-sketch property
     demonstrated IN the state store (cell-wise addition commutes with
@@ -788,25 +608,15 @@ def _update_cms(key, pdf_iter, state: GroupState):
     build no matter how rows split across batches)."""
     import hashlib
 
-    import pandas as pd
-
     from etl_rf_matrix_controller_spark.operators.aggregates import CMS_CELLS
 
-    row_id = int(key[0])
-    counts, n_seen = (
-        state.get if state.exists else ([0] * CMS_CELLS, 0)
-    )
+    counts, n_seen = prev or ([0] * CMS_CELLS, 0)
     counts = list(counts)
-    for pdf in pdf_iter:
-        for uid in pdf["user_id"]:
-            h = hashlib.md5(f"{row_id}_{int(uid)}".encode()).hexdigest()[:8]
-            counts[int(h, 16) % CMS_CELLS] += 1
-            n_seen += 1
-    if n_seen:
-        state.update((counts, int(n_seen)))
-        yield pd.DataFrame(
-            {"row_id": [row_id], "n_seen": [n_seen], "counts": [counts]}
-        )
+    for uid in rows["user_id"].tolist():
+        h = hashlib.md5(f"{row_id}_{uid}".encode()).hexdigest()[:8]
+        counts[int(h, 16) % CMS_CELLS] += 1
+        n_seen += 1
+    return (counts, n_seen), [(row_id, n_seen, counts)]
 
 
 def stream_cms_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -824,12 +634,9 @@ def stream_cms_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.explode(F.sequence(F.lit(0), F.lit(CMS_ROWS - 1))).alias("rid"),
     ).select("user_id", F.col("rid").cast("long").alias("row_id"))
-    updates = events.groupBy("row_id").applyInPandasWithState(
-        _update_cms,
-        outputStructType=output_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    updates = apply_keyed_state(
+        events, "row_id", (), per_entity(_update_cms), output_schema,
+        state_schema,
     )
     tbl = run_stream_to_memory(updates, spark, "update")
     return (

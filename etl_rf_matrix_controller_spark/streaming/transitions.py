@@ -14,13 +14,11 @@ Design (scale story first):
   * State is ONE logical row per user -- (ts_us, event_id, event_type) of
     the latest event -- the minimum any cross-batch sequence operator can
     hold; bounded by user cardinality at any event throughput.
-  * Users are SHARDED (hash(user_id) % the shard count from
-    plans/scale.py::adaptive_state_shards) into the
-    applyInPandasWithState group key, the neardup.py discipline: per-user
-    keying made one pandas group per user (~15k singleton groups at
-    sf0.1, ~0.2 ms each); sharding bounds the group count while the
-    per-user semantics are untouched (users are processed independently
-    inside a shard).
+  * Users are SHARDED by streaming/keyed_state.py (the adapter every
+    keyed-state op runs through): per-user keying made one pandas group
+    per user (1,500 groups per micro-batch at sf0.1, ~0.2 ms each);
+    sharding bounds the group count while the per-user semantics are
+    untouched (users are processed independently inside a shard).
   * Transitions leave the state function as PARTIAL COUNTS: each shard
     emits (prev_type, cur_type, n) for its micro-batch, at most |types|^2
     rows, never one row per event (100,000 per sf0.1 drain would cross
@@ -40,17 +38,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from etl_rf_matrix_controller_spark.plans.registry import declared
-from etl_rf_matrix_controller_spark.plans.scale import adaptive_state_shards
+from etl_rf_matrix_controller_spark.streaming.keyed_state import (
+    apply_keyed_state,
+)
 from etl_rf_matrix_controller_spark.streaming.windows import (
     _events_stream,
     run_stream_to_memory,
@@ -63,43 +56,31 @@ _OUT_SCHEMA = StructType(
         StructField("n", LongType()),
     ]
 )
-# Parallel arrays: this shard's users and their latest (ts_us, event_id,
-# event_type).  Arrays (not maps) -- applyInPandasWithState state rows
-# round-trip through Arrow, where parallel primitive arrays are cheapest.
+# Per user: the latest (ts_us, event_id, event_type).
 _STATE_SCHEMA = StructType(
     [
-        StructField("users", ArrayType(LongType())),
-        StructField("ts_us", ArrayType(LongType())),
-        StructField("eids", ArrayType(LongType())),
-        StructField("types", ArrayType(StringType())),
+        StructField("ts_us", LongType()),
+        StructField("eids", LongType()),
+        StructField("types", StringType()),
     ]
 )
 
 
-def _transition_tracker(key, pdf_iter, state: GroupState):
+def _transition_tracker(index: dict, rows, key: str):
     """One SHARD of the last-event index: count this micro-batch's
     (prev, cur) transitions per consecutive event pair of each user,
     seeding each user's chain from the stored cross-batch last event, and
-    emit the shard's partial counts -- at most |types|^2 rows."""
+    return the shard's partial counts -- at most |types|^2 rows."""
     import pandas as pd
 
-    if state.exists:
-        users, ts, eids, types = state.get
-        index = dict(zip(users, zip(ts, eids, types)))
-    else:
-        index = {}
-    batch = [pdf for pdf in pdf_iter if not pdf.empty]
-    if not batch:
-        return
-    rows = pd.concat(batch).sort_values(["user_id", "ts_us", "event_id"])
-    user = rows["user_id"]
+    user = rows[key]
     first = user.ne(user.shift())
     prev = rows["event_type"].shift()
     prev[first] = user[first].map({u: v[2] for u, v in index.items()})
     tail = rows[user.ne(user.shift(-1))]
     index.update(
         zip(
-            tail["user_id"].tolist(),
+            tail[key].tolist(),
             zip(
                 tail["ts_us"].tolist(),
                 tail["event_id"].tolist(),
@@ -107,21 +88,13 @@ def _transition_tracker(key, pdf_iter, state: GroupState):
             ),
         )
     )
-    state.update(
-        (
-            list(index.keys()),
-            [v[0] for v in index.values()],
-            [v[1] for v in index.values()],
-            [v[2] for v in index.values()],
-        )
-    )
     pairs = pd.DataFrame({"prev_type": prev, "cur_type": rows["event_type"]})
-    yield (
+    counts = (
         pairs[prev.notna()]
         .groupby(["prev_type", "cur_type"], dropna=False)
         .size()
-        .reset_index(name="n")
     )
+    return list(counts.reset_index().itertuples(index=False, name=None))
 
 
 def stream_transitions(
@@ -138,18 +111,10 @@ def stream_transitions(
         F.unix_micros("ts").alias("ts_us"),
         F.col("event_id").cast("bigint").alias("event_id"),
         "event_type",
-    ).withColumn(
-        # scale-adaptive shard count (round 11): results are shard-
-        # invariant; see plans/scale.py::adaptive_state_shards
-        "shard",
-        F.pmod(F.xxhash64("user_id"), F.lit(adaptive_state_shards(spark))),
     )
-    out = keyed.groupBy("shard").applyInPandasWithState(
-        _transition_tracker,
-        outputStructType=_OUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    out = apply_keyed_state(
+        keyed, "user_id", ("ts_us", "event_id"), _transition_tracker,
+        _OUT_SCHEMA, _STATE_SCHEMA,
     )
     return run_stream_to_memory(out, spark, "update", progress_holder)
 

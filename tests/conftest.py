@@ -86,6 +86,17 @@ def duck_rows(con, sql):
     )
 
 
+def state_row_counts(progress: list) -> list:
+    """``numRowsTotal`` of every state operator in every
+    StreamingQueryProgress dict of ``progress``."""
+    return [
+        op["numRowsTotal"]
+        for pr in progress
+        for op in pr.get("stateOperators", [])
+        if "numRowsTotal" in op
+    ]
+
+
 def result_hash(df) -> str:
     """Stable digest of (sorted columns, canonicalized sorted rows) --
     the same canonical form the oracle gate compares, so manifest

@@ -31,7 +31,7 @@ from etl_rf_matrix_controller_spark.operators.search import (
     tfidf_retrieval_topk,
 )
 from etl_rf_matrix_controller_spark.sources.tables import load_table
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, state_row_counts
 
 
 def _shingles(text: str) -> frozenset[str]:
@@ -265,12 +265,7 @@ def test_event_transitions_stream_eq_batch_multibatch(spark, tmp_path):
     assert ("view", "error") in got and ("error", "signup") in got
     # state bound: <= one state row per distinct user (shard rows can
     # only merge users, never split them)
-    state_rows = [
-        op["numRowsTotal"]
-        for pr in progress
-        for op in pr.get("stateOperators", [])
-        if "numRowsTotal" in op
-    ]
+    state_rows = state_row_counts(progress)
     assert state_rows and max(state_rows) <= 3, (state_rows, progress)
 
 
@@ -424,12 +419,7 @@ def test_stratified_sample_stream_eq_batch_multibatch(spark, tmp_path):
     # stratum 'b' filled across the batch boundary: 5 (b1), 7, 8 (b2)
     assert [e for (t, e) in got if t == "b"] == [5, 7, 8]
     assert [e for (t, e) in got if t == "c"] == [12]
-    state_rows = [
-        op["numRowsTotal"]
-        for pr in progress
-        for op in pr.get("stateOperators", [])
-        if "numRowsTotal" in op
-    ]
+    state_rows = state_row_counts(progress)
     assert state_rows and max(state_rows) <= 3, state_rows
 
 
@@ -621,12 +611,7 @@ def test_zscore_anomalies_stream_eq_batch_multibatch(spark, tmp_path):
     # the straddling spike is flagged; the calm user is not
     assert got[1] == (2, 1)
     assert got[2][1] == 0
-    state_rows = [
-        op["numRowsTotal"]
-        for pr in progress
-        for op in pr.get("stateOperators", [])
-        if "numRowsTotal" in op
-    ]
+    state_rows = state_row_counts(progress)
     assert state_rows and max(state_rows) <= 2, state_rows
 
 

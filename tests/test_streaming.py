@@ -12,7 +12,7 @@ from etl_rf_matrix_controller_spark.streaming.windows import (
     tumbling_hour_counts,
     tumbling_hour_counts_stream,
 )
-from tests.conftest import SF_DIR, spark_rows
+from tests.conftest import SF_DIR, spark_rows, state_row_counts
 
 
 def _assert_same(batch_df, stream_df, name):
@@ -353,108 +353,6 @@ def test_ema_batch_eq_stream(spark):
         ema_user_value(spark, SF_DIR),
         stream_ema_user_value(spark, SF_DIR),
         "ema_user_value",
-    )
-
-
-def test_ema_tws_pipeline_constructs_and_processor_folds(spark):
-    """The transformWithStateInPandas path, validated as far as this
-    container allows WITHOUT executing the state protocol (google.protobuf
-    is absent; only the runtime state server needs it):
-
-    1. the full streaming pipeline BUILDS -- analyzed plan carries the
-       TransformWithStateInPySpark node, output schema is the declared
-       contract, the frame is streaming;
-    2. the processor itself (the code TWS would run per key) produces the
-       bit-exact EMA fold when driven through its init/handleInputRows
-       contract with a stub ValueState.
-
-    Together with the importorskip'd execution twin below, the code path
-    is constructed in CI here and executes wherever protobuf exists.
-    """
-    import pandas as pd
-
-    from etl_rf_matrix_controller_spark.streaming.state import (
-        EMA_OUTPUT_SCHEMA,
-        _events_stream,
-        _make_ema_processor,
-    )
-
-    events = _events_stream(spark, SF_DIR).select(
-        "user_id", "ts", "event_id", "value"
-    )
-    updates = events.groupBy("user_id").transformWithStateInPandas(
-        _make_ema_processor(),
-        outputStructType=EMA_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-    assert updates.isStreaming
-    assert [f.name for f in updates.schema.fields] == [
-        "user_id",
-        "n_events",
-        "ema_value",
-    ]
-    analyzed = updates._jdf.queryExecution().analyzed().toString()
-    assert "TransformWithStateInPySpark" in analyzed, analyzed[:500]
-
-    # Drive the processor through its stateful contract with a stub
-    # ValueState: two batches for one key must continue the fold across
-    # the state handoff exactly like the batch recurrence.
-    class _StubState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class _StubHandle:
-        def __init__(self):
-            self.state = _StubState()
-
-        def getValueState(self, name, schema):
-            return self.state
-
-    proc = _make_ema_processor()
-    handle = _StubHandle()
-    proc.init(handle)
-    b1 = pd.DataFrame(
-        {"ts": [1, 2], "event_id": [10, 11], "value": [1.0, 2.0]}
-    )
-    b2 = pd.DataFrame({"ts": [3], "event_id": [12], "value": [4.0]})
-    out1 = list(proc.handleInputRows((7,), [b1], None))
-    out2 = list(proc.handleInputRows((7,), [b2], None))
-    proc.close()
-    ema = 1.0
-    ema = 0.3 * 2.0 + (1 - 0.3) * ema
-    assert out1[0]["ema_value"][0] == ema and out1[0]["n_events"][0] == 2
-    ema = 0.3 * 4.0 + (1 - 0.3) * ema
-    assert out2[0]["ema_value"][0] == ema and out2[0]["n_events"][0] == 3
-    assert handle.state.get() == (ema, 3)
-
-
-def test_ema_transform_with_state_eq_batch(spark):
-    """Spark-4 transformWithStateInPandas (RocksDB state store) produces
-    the same bit-exact EMA as the batch ordered fold.  The TWS state
-    protocol needs google.protobuf, which this container lacks -- skip
-    (the applyInPandasWithState twin above covers the semantics)."""
-    import pytest
-
-    pytest.importorskip("google.protobuf.descriptor")
-    from etl_rf_matrix_controller_spark.operators.behavior import ema_user_value
-    from etl_rf_matrix_controller_spark.streaming.state import (
-        stream_ema_user_value_tws,
-    )
-
-    _assert_same(
-        ema_user_value(spark, SF_DIR),
-        stream_ema_user_value_tws(spark, SF_DIR),
-        "ema_user_value_tws",
     )
 
 
@@ -1098,12 +996,7 @@ def test_near_dup_admission_stream_eq_batch_multibatch(spark, tmp_path):
     # state bound: one state row per distinct bucket key (each array
     # holds <= cap retained ids), read from the query's own metrics
     n_keys = per_row_band_rows(docs_batch).select("band", "bkey").distinct().count()
-    state_rows = [
-        op["numRowsTotal"]
-        for pr in progress
-        for op in pr.get("stateOperators", [])
-        if "numRowsTotal" in op
-    ]
+    state_rows = state_row_counts(progress)
     assert state_rows, progress
     assert max(state_rows) <= n_keys, (max(state_rows), n_keys)
 
@@ -1206,12 +1099,7 @@ def test_curation_admission_stream_eq_batch_multibatch(spark, tmp_path):
     n_xkeys = (
         passing.select(F.md5(F.trim("text"))).distinct().count()
     )
-    state_rows = [
-        op["numRowsTotal"]
-        for pr in progress
-        for op in pr.get("stateOperators", [])
-        if "numRowsTotal" in op
-    ]
+    state_rows = state_row_counts(progress)
     assert state_rows, progress
     assert max(state_rows) <= n_mkeys + n_xkeys, (
         max(state_rows),
