@@ -88,6 +88,60 @@ def _edge_df(docs: DataFrame) -> DataFrame:
     )
 
 
+def _min_label_components(edges: DataFrame, nodes: DataFrame) -> DataFrame:
+    """Connected components of an undirected graph: (node, lbl) with lbl
+    the min node id reachable from node.  ``edges`` (src, dst) holds both
+    directions of every edge; ``nodes`` (node) lists every vertex.
+
+    Min-label propagation with pointer doubling: every round relaxes
+    labels across edges (join edges->labels, min-combine) THEN jumps each
+    label to its label's label (join labels->labels).  Doubling squares
+    effective path length per round, so rounds ~ log2(diameter) instead of
+    diameter -- the difference between 5 rounds and 500 on a long chain.
+    Rounds are lineage-truncated via localCheckpoint (an iterative plan
+    otherwise grows unboundedly) and convergence is a single-scalar
+    sum(label) probe: labels are monotone non-increasing, so an unchanged
+    sum IS the fixpoint, no row-wise diff needed.  Checkpointed labels
+    have no stats, so both joins pin shuffle_hash on the label side
+    (Catalyst would otherwise sort-merge them); at 100 TB each round is
+    two hash-partitioned shuffles on uniform integer keys and the
+    min-agg is map-side combinable.
+    """
+    labels = nodes.select("node", F.col("node").alias("lbl")).localCheckpoint(
+        eager=True
+    )
+    prev_sum = labels.agg(F.sum("lbl")).collect()[0][0]
+    for _ in range(MAX_CC_ROUNDS):
+        # Edge relax: each node offers its label to every neighbor.
+        msgs = edges.join(
+            labels.select(F.col("node").alias("src"), "lbl")
+            .hint("shuffle_hash"),
+            "src",
+        ).select(F.col("dst").alias("node"), "lbl")
+        relaxed = (
+            labels.unionByName(msgs).groupBy("node").agg(F.min("lbl").alias("lbl"))
+        )
+        # Pointer jump: follow lbl -> lbl(lbl) (labels are node ids, so the
+        # lookup always hits; left join guards the self-rooted case).
+        jl = relaxed.alias("l")
+        jp = relaxed.alias("p").hint("shuffle_hash")
+        labels = (
+            jl.join(jp, F.col("l.lbl") == F.col("p.node"), "left")
+            .select(
+                F.col("l.node").alias("node"),
+                F.least(
+                    F.col("l.lbl"), F.coalesce(F.col("p.lbl"), F.col("l.lbl"))
+                ).alias("lbl"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        cur_sum = labels.agg(F.sum("lbl")).collect()[0][0]
+        if cur_sum == prev_sum:
+            break
+        prev_sum = cur_sum
+    return labels
+
+
 @declared(
     "near_dup_components",
     oracle=f"""
@@ -116,20 +170,7 @@ def _edge_df(docs: DataFrame) -> DataFrame:
 )
 def near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive near-dup clustering: each doc labeled with the min doc_id
-    reachable through the dup graph; lowest id is the canonical keeper.
-
-    Min-label propagation with pointer doubling: every round relaxes
-    labels across edges (join edges->labels, min-combine) THEN jumps each
-    label to its label's label (join labels->labels).  Doubling squares
-    effective path length per round, so rounds ~ log2(diameter) instead of
-    diameter -- the difference between 5 rounds and 500 on a long chain.
-    Rounds are lineage-truncated via localCheckpoint (an iterative plan
-    otherwise grows unboundedly) and convergence is a single-scalar
-    sum(label) probe: labels are monotone non-increasing, so an unchanged
-    sum IS the fixpoint, no row-wise diff needed.  At 100 TB each round is
-    two hash-partitioned shuffles on uniform integer keys; the final
-    min-agg is map-side combinable.
-    """
+    reachable through the dup graph; lowest id is the canonical keeper."""
     # doc_id is consumed three times (edge fingerprints, the existence
     # semi-join, the label init); checkpoint the narrow id column once so
     # the corpus is scanned once, not three times.
@@ -142,37 +183,9 @@ def near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint(eager=True)
-
-    labels = docs.select(
-        F.col("doc_id").alias("node"), F.col("doc_id").alias("lbl")
-    ).localCheckpoint(eager=True)
-    prev_sum = labels.agg(F.sum("lbl")).collect()[0][0]
-    for _ in range(MAX_CC_ROUNDS):
-        # Edge relax: each node offers its label to every neighbor.
-        msgs = sym.join(labels, sym.src == labels.node).select(
-            F.col("dst").alias("node"), "lbl"
-        )
-        relaxed = (
-            labels.unionByName(msgs).groupBy("node").agg(F.min("lbl").alias("lbl"))
-        )
-        # Pointer jump: follow lbl -> lbl(lbl) (labels are node ids, so the
-        # lookup always hits; left join guards the self-rooted case).
-        jl = relaxed.alias("l")
-        jp = relaxed.alias("p")
-        labels = (
-            jl.join(jp, F.col("l.lbl") == F.col("p.node"), "left")
-            .select(
-                F.col("l.node").alias("node"),
-                F.least(
-                    F.col("l.lbl"), F.coalesce(F.col("p.lbl"), F.col("l.lbl"))
-                ).alias("lbl"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        cur_sum = labels.agg(F.sum("lbl")).collect()[0][0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
+    labels = _min_label_components(
+        sym, docs.select(F.col("doc_id").alias("node"))
+    )
 
     w = Window.partitionBy("component_id")
     return labels.select(
@@ -767,7 +780,7 @@ def dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance); the oracle skips the blocking and joins all-pairs, which
     is the semantic definition.  Core election is one count over the
     pair stream; core-core components run the pointer-doubling
-    min-label loop (near_dup_components machinery, O(log diameter)
+    min-label loop (_min_label_components, O(log diameter)
     rounds); border points attach to the min in-range core cluster.
     At 100 TB the grid join shuffles on uniform cell keys (density
     skew -> AQE skew split), and the component loop touches only core
@@ -901,35 +914,9 @@ def dbscan_df(
             .select(F.col("ia").alias("src"), F.col("ib").alias("dst"))
             .localCheckpoint(eager=True)
         )
-        labels = cores.select(
-            F.col("vec_id").alias("node"), F.col("vec_id").alias("lbl")
-        ).localCheckpoint(eager=True)
-        prev_sum = labels.agg(F.sum("lbl")).collect()[0][0]
-        for _ in range(MAX_CC_ROUNDS):
-            msgs = edges.join(labels, edges.src == labels.node).select(
-                F.col("dst").alias("node"), "lbl"
-            )
-            relaxed = (
-                labels.unionByName(msgs)
-                .groupBy("node")
-                .agg(F.min("lbl").alias("lbl"))
-            )
-            jl, jp = relaxed.alias("l"), relaxed.alias("p")
-            labels = (
-                jl.join(jp, F.col("l.lbl") == F.col("p.node"), "left")
-                .select(
-                    F.col("l.node").alias("node"),
-                    F.least(
-                        F.col("l.lbl"),
-                        F.coalesce(F.col("p.lbl"), F.col("l.lbl")),
-                    ).alias("lbl"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            cur_sum = labels.agg(F.sum("lbl")).collect()[0][0]
-            if cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
+        labels = _min_label_components(
+            edges, cores.select(F.col("vec_id").alias("node"))
+        )
         comp = labels.select(
             F.col("node").alias("vec_id"),
             F.col("lbl").cast("bigint").alias("cluster_id"),

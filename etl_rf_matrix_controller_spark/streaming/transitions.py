@@ -76,7 +76,7 @@ def _transition_tracker(index: dict, rows, key: str):
     user = rows[key]
     first = user.ne(user.shift())
     prev = rows["event_type"].shift()
-    prev[first] = user[first].map({u: v[2] for u, v in index.items()})
+    prev.loc[first] = user[first].map({u: v[2] for u, v in index.items()})
     tail = rows[user.ne(user.shift(-1))]
     index.update(
         zip(

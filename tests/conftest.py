@@ -1,11 +1,17 @@
 """Shared fixtures: one SparkSession per test run + a DuckDB oracle
 comparator that mirrors the driver's gate (row count + schema + order-
-insensitive value compare)."""
+insensitive value compare), plus the plan facts and the checkpoint-plan
+recorder that tests/test_parity.py and tools/plan_audit.py read."""
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import math
 import os
+import re
+import threading
+from contextlib import contextmanager, nullcontext
 from datetime import date, datetime
 
 import duckdb
@@ -14,7 +20,8 @@ import pytest
 from etl_rf_matrix_controller_spark.session import get_spark
 from etl_rf_matrix_controller_spark.sources.tables import TABLES
 
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+SF_DIR = "/root/testdata/sf0.001"
+MANIFEST = os.path.join(os.path.dirname(__file__), "result_manifest.json")
 
 
 @pytest.fixture(scope="session")
@@ -69,6 +76,7 @@ def canon_value(v):
 
 
 def spark_rows(df):
+    """(sorted column names, canonicalized sorted rows) of one collect."""
     cols = sorted(df.columns)
     return cols, sorted(
         (tuple(canon_value(row[c]) for c in cols) for row in df.collect()),
@@ -97,13 +105,10 @@ def state_row_counts(progress: list) -> list:
     ]
 
 
-def result_hash(df) -> str:
+def rows_hash(cols, rows) -> str:
     """Stable digest of (sorted columns, canonicalized sorted rows) --
     the same canonical form the oracle gate compares, so manifest
-    stability == driver-gate stability (tests/test_result_manifest.py)."""
-    import hashlib
-
-    cols, rows = spark_rows(df)
+    stability == oracle-gate stability (tests/test_parity.py)."""
     h = hashlib.sha256()
     h.update(repr(cols).encode())
     for r in rows:
@@ -111,17 +116,25 @@ def result_hash(df) -> str:
     return h.hexdigest()
 
 
+def result_hash(df) -> str:
+    return rows_hash(*spark_rows(df))
+
+
 def assert_oracle_match(spark_df, duck_con, oracle_sql, name="", duck_ctx=None):
     """Mirror of the driver's correctness gate.  ``duck_ctx`` (optional
     context-manager factory) wraps ONLY the DuckDB execution -- tools/
     gate.py passes its wall-clock watchdog here so a slow SPARK query can
     never be misattributed as a DuckDB oracle timeout."""
-    s_cols, s_rows = spark_rows(spark_df)
-    if duck_ctx is None:
-        d_cols, d_rows = duck_rows(duck_con, oracle_sql)
-    else:
-        with duck_ctx():
-            d_cols, d_rows = duck_rows(duck_con, oracle_sql)
+    spark_result = spark_rows(spark_df)
+    with duck_ctx() if duck_ctx is not None else nullcontext():
+        oracle_result = duck_rows(duck_con, oracle_sql)
+    assert_rows_match(spark_result, oracle_result, name)
+
+
+def assert_rows_match(spark_result, oracle_result, name=""):
+    """Compare the (cols, rows) pairs of spark_rows and duck_rows."""
+    s_cols, s_rows = spark_result
+    d_cols, d_rows = oracle_result
     assert s_cols == d_cols, f"{name}: column mismatch {s_cols} != {d_cols}"
     assert len(s_rows) == len(d_rows), (
         f"{name}: row count {len(s_rows)} != {len(d_rows)}"
@@ -132,3 +145,74 @@ def assert_oracle_match(spark_df, duck_con, oracle_sql, name="", duck_ctx=None):
     assert not mismatches, (
         f"{name}: {len(mismatches)} row mismatches; first 3: {mismatches[:3]}"
     )
+
+
+# -- plan facts -------------------------------------------------------------
+
+# One base table scanned more than this many times in one plan is a
+# repeated scan: at 100 TB each extra pass is a full corpus read.
+SCAN_CEILING = 2
+_SCAN_RE = re.compile(r"Location:.*?/(\w+)\.parquet")
+
+
+def plan_of(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def formatted(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def scanned_tables(fmt: str) -> list[str]:
+    """Base table of every parquet scan in a ``formatted`` explain."""
+    return _SCAN_RE.findall(fmt)
+
+
+def join_offences(plan: str) -> tuple[int, int]:
+    """(SortMergeJoin, CartesianProduct) node counts of a plan string:
+    every join must broadcast, bucket or hash, and no join may be a true
+    cartesian (broadcast nested loops over tiny probe frames are fine)."""
+    return plan.count("SortMergeJoin"), plan.count("CartesianProduct")
+
+
+# -- checkpoint-plan recorder -----------------------------------------------
+# An eager localCheckpoint runs its subtree at call time and leaves only a
+# scan of the materialized rows in the final plan, so a join planned inside
+# a checkpointed frame is invisible there.  The recorder keeps the executed
+# plan of every checkpoint input, per thread, so a pass that builds queries
+# on a thread pool attributes each plan to the query that ran it.
+
+_recording = threading.local()
+
+
+def _install_checkpoint_recorder() -> None:
+    # Queries hold the classic DataFrame subclass; a patch of
+    # pyspark.sql.DataFrame would never be called.
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    original = DataFrame.localCheckpoint
+
+    @functools.wraps(original)
+    def localCheckpoint(self, *args, **kwargs):
+        plans = getattr(_recording, "plans", None)
+        if plans is not None:
+            plans.append(plan_of(self))
+        return original(self, *args, **kwargs)
+
+    DataFrame.localCheckpoint = localCheckpoint
+
+
+_install_checkpoint_recorder()
+
+
+@contextmanager
+def checkpoint_plans():
+    """Yield a list that receives the executed-plan string of every
+    localCheckpoint the calling thread runs inside the block."""
+    _recording.plans = plans = []
+    try:
+        yield plans
+    finally:
+        _recording.plans = None

@@ -18,17 +18,7 @@ from etl_rf_matrix_controller_spark.operators.multimodal import multimodal_meta_
 from etl_rf_matrix_controller_spark.operators.text import doc_token_counts
 from etl_rf_matrix_controller_spark.functions.regex_extract import doc_token_match
 from etl_rf_matrix_controller_spark.operators.aggregates import agg_partial_final
-from tests.conftest import SF_DIR
-
-
-def plan_of(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def formatted(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+from tests.conftest import SF_DIR, formatted, join_offences, plan_of
 
 
 def test_flagship_uses_broadcast_joins(spark):
@@ -70,10 +60,13 @@ def test_token_counts_single_shuffle(spark):
 
 def test_bucketed_join_has_no_exchange(spark, tmp_path):
     """Identically-bucketed tables must join with ZERO shuffles -- the
-    co-location contract write_bucketed promises."""
+    co-location contract write_bucketed promises.  Runs on a new session
+    (shared SparkContext and catalog, its own SQLConf), so the disabled
+    broadcast never reaches queries on the shared one."""
     from etl_rf_matrix_controller_spark.plans.scale import write_bucketed
     from etl_rf_matrix_controller_spark.sources.tables import load_table
 
+    spark = spark.newSession()
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         orders = load_table(spark, SF_DIR, "orders")
@@ -92,7 +85,6 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         assert "SortMergeJoin" in plan, plan
         assert "Exchange" not in plan, f"bucketed join must not shuffle:\n{plan}"
     finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
         spark.sql("DROP TABLE IF EXISTS orders_b")
         spark.sql("DROP TABLE IF EXISTS lineitem_b")
 
@@ -137,141 +129,49 @@ def test_aqe_splits_skewed_join(spark):
     plan records as ``skew=true`` on the join node.  When AQE cannot
     engage (e.g. the join sits under another shuffle-consuming operator),
     plans/scale.py's salted_agg is the manual fallback -- asserted
-    result-equal in test_salted_agg_matches_direct."""
-    saved = {
-        "spark.sql.autoBroadcastJoinThreshold": spark.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold"
-        ),
-        "spark.sql.adaptive.autoBroadcastJoinThreshold": spark.conf.get(
-            "spark.sql.adaptive.autoBroadcastJoinThreshold", None
-        ),
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": spark.conf.get(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes"
-        ),
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": spark.conf.get(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-        ),
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": spark.conf.get(
-            "spark.sql.adaptive.skewJoin.skewedPartitionFactor"
-        ),
-    }
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        # Tuned down so the local hot partition (a few MB) trips the same
-        # detection a multi-GB partition would on a cluster.
-        spark.conf.set(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "1m"
-        )
-        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256k")
-        spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
+    result-equal in test_salted_agg_matches_direct.  Runs on a new
+    session, so its confs never reach queries on the shared one."""
+    spark = spark.newSession()
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    # Tuned down so the local hot partition (a few MB) trips the same
+    # detection a multi-GB partition would on a cluster.
+    spark.conf.set(
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "1m"
+    )
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256k")
+    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
 
-        # 90% of 400k fact rows land on key 0; dim side is uniform.
-        fact = spark.range(0, 400_000).select(
-            F_col("id").alias("v"),
-            (F_col("id") % 101)
-            .alias("m")
-            .cast("long"),
-        )
-        fact = fact.select(
-            F_col("v"),
-            (F_col("v") % 10 < 9).cast("long").alias("hot"),
-        ).select(
-            F_col("v"),
-            ((1 - F_col("hot")) * (F_col("v") % 101)).alias("k"),
-        )
-        dim = spark.range(0, 101).select(
-            F_col("id").alias("k"), (F_col("id") * 2).alias("w")
-        )
-        j = fact.join(dim, "k")
-        # AQE only finalizes the plan on execution (same discipline as
-        # test_whole_stage_codegen_everywhere).
-        assert len(j.collect()) == 400_000
-        plan = plan_of(j)
-        assert "skew=true" in plan, plan
-    finally:
-        for key, val in saved.items():
-            if val is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, val)
-
-
-# Deliberate multi-pass ops exempt from the scan-count ceiling:
-#   pagerank_nations -- the declared 2-iteration unroll re-reads the
-#                      25-row fixed nation dim per iteration by design
-#                      (the production loop is pagerank_loop, which
-#                      checkpoints per round).
-# (set_except left the allowlist in round 4: its EXCEPT/INTERSECT pair
-#  over a shared base table is now one grouped scan, zero joins.)
-SCAN_CEILING = 2
-SCAN_ALLOWLIST = {"pagerank_nations"}
-
-
-def test_suitewide_plan_invariants(spark):
-    """Suite-wide physical-plan invariants, one pass over every declared
-    query (construction is the expensive part -- eager checkpoints run):
-
-    1. No SortMergeJoin (every join must broadcast, bucket, or hash) and
-       no CartesianProduct (broadcast nested loops over tiny probe frames
-       are fine; true cartesians are not).  Locks in the round-2 removal
-       of the suite's only SMJ (preset_apply_merge).
-    2. No base table scanned more than SCAN_CEILING times in one plan
-       (allowlist above for deliberate multi-pass ops): at 100 TB each
-       extra scan is a full corpus read, the regression class the round-3
-       localCheckpoint sweep eliminated.  Note eager localCheckpoints hide
-       their build scan from the final plan -- by construction a
-       checkpoint's subtree runs exactly once, which is the point.
-    """
-    import re
-    from collections import Counter
-    from concurrent.futures import ThreadPoolExecutor
-
-    from etl_rf_matrix_controller_spark.plans import registry
-
-    registry.load_all()
-
-    # Overlapped independent construction (guide §2.6): building +
-    # explaining 411 queries is independent work (the driver-side
-    # queries execute their collects at construction); 8 threads
-    # back-fill each other's job tails and py4j waits (176 -> ~45 s).
-    def inspect(name: str):
-        df = registry.QUERIES[name](spark, SF_DIR)
-        plan = plan_of(df)
-        fmt = formatted(df) if name not in SCAN_ALLOWLIST else ""
-        return name, plan, fmt
-
-    join_offenders = {}
-    scan_offenders = {}
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        for name, plan, fmt in pool.map(
-            inspect, sorted(registry.QUERIES)
-        ):
-            smj = plan.count("SortMergeJoin")
-            cart = plan.count("CartesianProduct")
-            if smj or cart:
-                join_offenders[name] = (smj, cart)
-            if name not in SCAN_ALLOWLIST:
-                counts = Counter(
-                    m.group(1)
-                    for m in re.finditer(
-                        r"Location:.*?/(\w+)\.parquet", fmt
-                    )
-                )
-                over = {
-                    t: c for t, c in counts.items() if c > SCAN_CEILING
-                }
-                if over:
-                    scan_offenders[name] = over
-    assert not join_offenders, f"SMJ/cartesian: {join_offenders}"
-    assert not scan_offenders, f"repeated scans: {scan_offenders}"
+    # 90% of 400k fact rows land on key 0; dim side is uniform.
+    fact = spark.range(0, 400_000).select(
+        F_col("id").alias("v"),
+        (F_col("id") % 101)
+        .alias("m")
+        .cast("long"),
+    )
+    fact = fact.select(
+        F_col("v"),
+        (F_col("v") % 10 < 9).cast("long").alias("hot"),
+    ).select(
+        F_col("v"),
+        ((1 - F_col("hot")) * (F_col("v") % 101)).alias("k"),
+    )
+    dim = spark.range(0, 101).select(
+        F_col("id").alias("k"), (F_col("id") * 2).alias("w")
+    )
+    j = fact.join(dim, "k")
+    # AQE only finalizes the plan on execution (same discipline as
+    # test_whole_stage_codegen_everywhere).
+    assert len(j.collect()) == 400_000
+    plan = plan_of(j)
+    assert "skew=true" in plan, plan
 
 
 def test_driver_side_builder_frames_plan_invariants(spark):
     """The round-10 driver-side rewrites hid their distributed halves
-    behind collect(): the suite-wide invariants above only see a
-    createDataFrame tail for those 10 queries.  Assert the shared
-    builder frames directly (round-10 ADVICE): the fact-scale
+    behind collect(): the per-query invariants of tests/test_parity.py
+    only see a createDataFrame tail for those 10 queries.  Assert the
+    shared builder frames directly (round-10 ADVICE): the fact-scale
     aggregations must stay SMJ-free, cartesian-free, and within the
     scan ceiling."""
     from etl_rf_matrix_controller_spark.operators.behavior import (
@@ -287,6 +187,5 @@ def test_driver_side_builder_frames_plan_invariants(spark):
         "event_transition_counts": event_transition_counts,
         "embedding_gram_matrix": embedding_gram_matrix,
     }.items():
-        plan = plan_of(fn(spark, SF_DIR))
-        assert "SortMergeJoin" not in plan, f"{name}: SMJ appeared"
-        assert "CartesianProduct" not in plan, f"{name}: cartesian"
+        offences = join_offences(plan_of(fn(spark, SF_DIR)))
+        assert offences == (0, 0), f"{name}: (SMJ, cartesian) {offences}"

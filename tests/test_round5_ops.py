@@ -20,6 +20,7 @@ from etl_rf_matrix_controller_spark.operators.dedup import (
     TOK_SPAN_K,
     token_span_pairs_df,
 )
+from tests.conftest import SF_DIR
 
 
 def test_hdr_sketch_merge_identity(spark):
@@ -66,10 +67,7 @@ def test_hdr_bucket_matches_python_grid(spark):
 
 def test_hdr_sketch_error_bound(spark):
     """est_lo_c <= exact_c < est_lo_c + bucket width (~1/16 relative)."""
-    import os
-
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-    rows = hdr_quantile_sketch(spark, sf_dir).collect()
+    rows = hdr_quantile_sketch(spark, SF_DIR).collect()
     assert {r.q_ppm for r in rows} == {500000, 900000, 990000}
     for r in rows:
         assert r.est_lo_c <= r.exact_c, r

@@ -1118,8 +1118,7 @@ def test_concurrent_runs_of_one_stream_query(spark):
     from etl_rf_matrix_controller_spark.streaming.windows import (
         stream_cms_heavy_hitters,
     )
-    from tests.conftest import result_hash
-    from tests.test_result_manifest import MANIFEST
+    from tests.conftest import MANIFEST, result_hash
 
     with open(MANIFEST) as f:
         want = json.load(f)["stream_cms_heavy_hitters"]

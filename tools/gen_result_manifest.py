@@ -2,8 +2,9 @@
 tests/result_manifest.json -- the byte-stability regression net.
 
 Any refactor that silently changes a query's output (row set, schema, or
-a single float bit) fails tests/test_result_manifest.py locally BEFORE
-the driver's next correctness sample lands on it.  Regenerate ONLY when
+a single float bit) fails that query's tests/test_parity.py test
+(``test_oracle_parity[<name>]``) locally BEFORE the driver's next
+correctness sample lands on it.  Regenerate ONLY when
 a result change is deliberate (new query, intentional semantics change),
 and say so in the commit message.
 
@@ -26,12 +27,10 @@ import sys
 sys.path.insert(0, ".")
 sys.path.insert(0, "tests")
 
-from conftest import result_hash  # noqa: E402
+from conftest import MANIFEST, result_hash  # noqa: E402
 
 from etl_rf_matrix_controller_spark.plans import registry  # noqa: E402
 from etl_rf_matrix_controller_spark.session import get_spark  # noqa: E402
-
-MANIFEST = "tests/result_manifest.json"
 
 
 def main() -> None:

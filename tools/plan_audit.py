@@ -1,6 +1,10 @@
 """Plan audit: .explain every declared query and extract the scale-critical
 facts -- scans' ReadSchema width, pushed filters, join strategies, exchange
-counts.  Writes PLANS.md; flags over-reads (scan columns never used).
+counts, and the checkpoints each query runs with the SMJs planned inside
+them.  Writes PLANS.md; flags over-reads (scan columns never used).
+
+The plan facts and the checkpoint recorder are tests/conftest.py's, the
+same ones tests/test_parity.py asserts on.
 
 Usage: python tools/plan_audit.py [sf_dir]
 """
@@ -12,6 +16,16 @@ import sys
 from collections import Counter
 
 sys.path.insert(0, ".")
+sys.path.insert(0, "tests")
+
+from conftest import (  # noqa: E402
+    SCAN_CEILING,
+    checkpoint_plans,
+    formatted,
+    join_offences,
+    plan_of,
+    scanned_tables,
+)
 
 from etl_rf_matrix_controller_spark.plans import registry  # noqa: E402
 from etl_rf_matrix_controller_spark.session import get_spark  # noqa: E402
@@ -39,19 +53,18 @@ TABLE_WIDTHS = {
 }
 
 
-def audit(name: str, df) -> dict:
-    qe = df._jdf.queryExecution()
-    plan = qe.executedPlan().toString()
-    fmt = df._sc._jvm.PythonSQLUtils.explainString(qe, "formatted")
-    scans = []
-    for m in re.finditer(r"Location:.*?/(\w+)\.parquet", fmt):
-        scans.append(m.group(1))
+def audit(df, ckpts: list[str]) -> dict:
+    plan = plan_of(df)
+    fmt = formatted(df)
+    scans = scanned_tables(fmt)
     read_schemas = re.findall(r"ReadSchema: struct<([^>]*)>", fmt)
     pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", fmt)
     return {
         "exchanges": plan.count("Exchange "),
         "bhj": plan.count("BroadcastHashJoin"),
-        "smj": plan.count("SortMergeJoin"),
+        "smj": join_offences(plan)[0],
+        "checkpoints": len(ckpts),
+        "ckpt_smj": sum(join_offences(p)[0] for p in ckpts),
         "scans": [
             {
                 "table": t,
@@ -79,18 +92,25 @@ def main() -> None:
         "Over-read = a scan reading more columns than the query projects;",
         "flagged rows deserve a look, zero-flag rows are pruning-clean.",
         "",
-        "Repeated scan = one base table scanned >2x in a single plan; at",
-        "100 TB each extra pass is a full corpus read (pinned suite-wide by",
-        "tests/test_plans.py's scan-count ceiling).",
+        f"Repeated scan = one base table scanned >{SCAN_CEILING}x in a "
+        "single plan; at",
+        "100 TB each extra pass is a full corpus read (pinned per query by",
+        "tests/test_parity.py's scan-count ceiling).",
         "",
-        "| query | exchanges | BHJ | SMJ | scans (table:cols/width, filter-pushdown) | flags |",
-        "|---|---|---|---|---|---|",
+        "Checkpoints = eager localCheckpoints the query runs while it is",
+        "built, with the SortMergeJoins planned inside them; the final plan",
+        "shows only a scan of each checkpoint's rows.",
+        "",
+        "| query | exchanges | BHJ | SMJ | checkpoints (SMJ inside) "
+        "| scans (table:cols/width, filter-pushdown) | flags |",
+        "|---|---|---|---|---|---|---|",
     ]
     over_reads = 0
     repeated = 0
     for name in sorted(registry.QUERIES):
-        df = registry.QUERIES[name](spark, SF_DIR)
-        a = audit(name, df)
+        with checkpoint_plans() as ckpts:
+            df = registry.QUERIES[name](spark, SF_DIR)
+        a = audit(df, ckpts)
         scan_desc = ", ".join(
             f"{s['table']}:{s['cols']}/{s['width']}{'+f' if s['pushed'] else ''}"
             for s in a["scans"]
@@ -105,16 +125,19 @@ def main() -> None:
                 flags.append(f"full-width scan of {s['table']}")
                 over_reads += 1
         for t, c in sorted(Counter(s["table"] for s in a["scans"]).items()):
-            if c > 2:
+            if c > SCAN_CEILING:
                 flags.append(f"{t} scanned {c}x")
                 repeated += 1
         lines.append(
             f"| {name} | {a['exchanges']} | {a['bhj']} | {a['smj']} "
+            f"| {a['checkpoints']} ({a['ckpt_smj']}) "
             f"| {scan_desc} | {'; '.join(flags) or '—'} |"
         )
     lines.append("")
     lines.append(f"Full-width scans flagged: {over_reads}")
-    lines.append(f"Repeated-scan (>2x) queries flagged: {repeated}")
+    lines.append(
+        f"Repeated-scan (>{SCAN_CEILING}x) queries flagged: {repeated}"
+    )
     with open("PLANS.md", "w") as f:
         f.write("\n".join(lines) + "\n")
     print("\n".join(lines[-12:]))
