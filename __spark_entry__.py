@@ -17,6 +17,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_rf_matrix_controller_spark.plans import registry
+from etl_rf_matrix_controller_spark.session import ENGINE_CONFS
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
@@ -29,22 +30,23 @@ def entry(spark: SparkSession) -> DataFrame:
     (the reference's denormalizing CSV export, etl_controller.py:3283-3301).
     """
     registry.load_all()
-    return registry.QUERIES["routes_csv_denorm"](spark, SMOKE_SF_DIR)
+    return _with_session_defense(registry.QUERIES["routes_csv_denorm"])(
+        spark, SMOKE_SF_DIR
+    )
 
 
 def _with_session_defense(
     fn: Callable[["SparkSession", str], "DataFrame"],
 ) -> Callable[["SparkSession", str], "DataFrame"]:
-    """Wrap a declared query so it self-defends the session confs the
-    oracle parity depends on: UTC timezone (timestamp truncation /
-    epoch math must agree with DuckDB regardless of the caller's TZ)
-    and the legacy nanos conf for the events table.  Both are
-    runtime-settable and idempotent; a caller session that already
-    carries them is untouched."""
+    """Wrap a declared query so the driver's session carries
+    session.ENGINE_CONFS (UTC, long-nanos events reads) before the query
+    runs: the driver boundary is the one place that writes a conf of a
+    session it is given.  Both are runtime-settable and idempotent; a
+    caller session that already carries them is unchanged."""
 
     def wrapped(spark: "SparkSession", sf_dir: str) -> "DataFrame":
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        for key, value in ENGINE_CONFS.items():
+            spark.conf.set(key, value)
         return fn(spark, sf_dir)
 
     return wrapped

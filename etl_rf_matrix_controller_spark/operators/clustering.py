@@ -690,9 +690,6 @@ def kcenter_coreset_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DBSCAN-lite knobs: grid spacing for the planted label clusters, the
 # eps-ball radius (= the blocking cell size), and the core threshold.
 DBSCAN_GRID, DBSCAN_EPS, DBSCAN_MINPTS = 4000, 250, 4
-# Largest point set whose component loop runs under the low-overhead
-# plan posture (AQE off); larger graphs keep AQE's skew handling.
-_DBSCAN_LOW_OVERHEAD_MAX = 200_000
 _DB_OFF = 100000  # shift coords non-negative before integer cell division
 
 _DB_PTS_SQL = f"""
@@ -865,62 +862,41 @@ def dbscan_df(
         .select("ia", "ib")
         .localCheckpoint(eager=True)  # feeds core count, edges, border
     )
-    # Small-graph fast path (round 11): the component loop below runs
-    # ~8 checkpoint/agg actions whose plans are explicitly keyed; with
-    # AQE on, every Exchange in them is its own stage-job, and at test
-    # scale (a few thousand points, 1-5 task stages) the query spent
-    # more wall on the resulting 71 jobs' fixed driver latency than on
-    # compute.  Below the threshold, run the loop under the shared
-    # low-overhead posture (AQE off, right-sized shuffle width); a
-    # corpus-scale graph keeps AQE's skew handling (the pointer join's
-    # label key concentrates as components converge).  pts is
-    # pre-checkpointed per this function's contract, so the count is a
-    # trivial job.
-    from contextlib import nullcontext
-
-    from etl_rf_matrix_controller_spark.plans.scale import (
-        low_overhead_plan_scope,
+    # No plan posture of its own: the loop runs under the session's
+    # confs.  Turning AQE off with a narrow shuffle width here cut the
+    # query from 64 jobs to 28 at sf0.1 but made it slower (in-process
+    # median of 5, local[4]: 5.91 s with that posture, 4.31 s without).
+    cores = (
+        pairs.groupBy("ia")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .filter(F.col("c") >= minpts)
+        .select(F.col("ia").alias("vec_id"))
+        .localCheckpoint(eager=True)  # feeds edges (x2), labels, roles
     )
-
-    spark = pts.sparkSession
-    n_pts = pts.count()
-    scope = (
-        low_overhead_plan_scope(spark, max(8, n_pts // 20000))
-        if n_pts <= _DBSCAN_LOW_OVERHEAD_MAX
-        else nullcontext()
+    # cores/comp/border all grow with the corpus -- broadcasting them
+    # is a driver/executor memory hazard at 100x; shuffle_hash keeps
+    # the stat-less checkpointed frames off SMJ without materializing
+    # them on every executor (the winnow/dbscan pair-join convention).
+    edges = (
+        pairs.filter(F.col("ia") != F.col("ib"))
+        .join(
+            cores.select(F.col("vec_id").alias("ia")).hint("shuffle_hash"),
+            "ia",
+        )
+        .join(
+            cores.select(F.col("vec_id").alias("ib")).hint("shuffle_hash"),
+            "ib",
+        )
+        .select(F.col("ia").alias("src"), F.col("ib").alias("dst"))
+        .localCheckpoint(eager=True)
     )
-    with scope:
-        cores = (
-            pairs.groupBy("ia")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .filter(F.col("c") >= minpts)
-            .select(F.col("ia").alias("vec_id"))
-            .localCheckpoint(eager=True)  # feeds edges (x2), labels, roles
-        )
-        # cores/comp/border all grow with the corpus -- broadcasting them
-        # is a driver/executor memory hazard at 100x; shuffle_hash keeps
-        # the stat-less checkpointed frames off SMJ without materializing
-        # them on every executor (the winnow/dbscan pair-join convention).
-        edges = (
-            pairs.filter(F.col("ia") != F.col("ib"))
-            .join(
-                cores.select(F.col("vec_id").alias("ia")).hint("shuffle_hash"),
-                "ia",
-            )
-            .join(
-                cores.select(F.col("vec_id").alias("ib")).hint("shuffle_hash"),
-                "ib",
-            )
-            .select(F.col("ia").alias("src"), F.col("ib").alias("dst"))
-            .localCheckpoint(eager=True)
-        )
-        labels = _min_label_components(
-            edges, cores.select(F.col("vec_id").alias("node"))
-        )
-        comp = labels.select(
-            F.col("node").alias("vec_id"),
-            F.col("lbl").cast("bigint").alias("cluster_id"),
-        ).localCheckpoint(eager=True)  # feeds border join + final roles
+    labels = _min_label_components(
+        edges, cores.select(F.col("vec_id").alias("node"))
+    )
+    comp = labels.select(
+        F.col("node").alias("vec_id"),
+        F.col("lbl").cast("bigint").alias("cluster_id"),
+    ).localCheckpoint(eager=True)  # feeds border join + final roles
     border = (
         pairs.filter(F.col("ia") != F.col("ib"))
         .join(

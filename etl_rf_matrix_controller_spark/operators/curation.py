@@ -1184,27 +1184,29 @@ K_COVER = 4  # greedy max-coverage picks
 
 def _cover_round_sql(r: int) -> str:
     """One unrolled greedy round: marginal gains vs cov{r-1}, pick the
-    (gain DESC, doc_id) winner, extend the covered-gram set."""
+    (gain DESC, doc_id) winner, extend the covered-gram set.  Every
+    round CTE is MATERIALIZED: DuckDB would otherwise inline the earlier
+    rounds at each reference and re-evaluate them exponentially."""
     prev_cov = f"cov{r - 1}"
     prev_picks = f"picks{r - 1}"
     return f"""
-    cand{r} AS (
+    cand{r} AS MATERIALIZED (
       SELECT g.doc_id, CAST(count(*) AS BIGINT) AS gain
       FROM grams g
       WHERE g.doc_id NOT IN (SELECT doc_id FROM {prev_picks})
         AND NOT EXISTS (SELECT 1 FROM {prev_cov} c WHERE c.gram = g.gram)
       GROUP BY g.doc_id
     ),
-    pick{r} AS (
+    pick{r} AS MATERIALIZED (
       SELECT CAST({r} AS BIGINT) AS pick_order, doc_id, gain
       FROM cand{r} ORDER BY gain DESC, doc_id LIMIT 1
     ),
-    cov{r} AS (
+    cov{r} AS MATERIALIZED (
       SELECT gram FROM {prev_cov}
       UNION
       SELECT g.gram FROM grams g JOIN pick{r} p ON p.doc_id = g.doc_id
     ),
-    picks{r} AS (
+    picks{r} AS MATERIALIZED (
       SELECT doc_id FROM {prev_picks}
       UNION ALL SELECT doc_id FROM pick{r}
     )"""
@@ -1214,7 +1216,7 @@ def _cover_round_sql(r: int) -> str:
     "max_coverage_greedy",
     oracle=f"""
     WITH corpus AS (SELECT doc_id, text FROM documents),
-    grams AS (
+    grams AS MATERIALIZED (
       SELECT doc_id, g.gram
       FROM (
         SELECT doc_id,

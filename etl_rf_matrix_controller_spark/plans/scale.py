@@ -34,32 +34,6 @@ def write_bucketed(
     )
 
 
-from contextlib import contextmanager
-
-
-@contextmanager
-def low_overhead_plan_scope(spark, width: int):
-    """Small-data job posture (round 11, guide §2.2/§2.6): shuffle
-    width right-sized to the data in scope (not the cluster-wide conf)
-    and AQE off -- plans in these scopes are already explicitly
-    partitioned, so AQE has nothing to coalesce or re-plan, but it
-    turns every Exchange into its own stage-job whose fixed driver
-    latency dominates when the data is KB-scale (measured ~20
-    jobs/micro-batch in streaming ingest, 71 jobs in dbscan's label
-    loop).  Callers gate entry on a measured size signal (batch_width
-    params, row counts), so corpus-scale runs keep AQE's skew/coalesce
-    wins; confs restore on exit."""
-    before_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    before_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(width))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", before_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", before_sp)
-
-
 def adaptive_state_shards(spark, per_core: int = 4, floor: int = 32) -> int:
     """Shard count for applyInPandasWithState group keys, derived from
     the session's parallelism instead of a constant (guide §2: make

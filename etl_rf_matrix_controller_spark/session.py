@@ -25,6 +25,17 @@ import os
 
 from pyspark.sql import SparkSession
 
+# The session confs every query depends on, defined once: a UTC session
+# timezone (timestamp truncation and epoch math must agree with DuckDB
+# whatever the caller's timezone) and long-nanos reads of events.parquet's
+# TIMESTAMP(NANOS) ``ts`` (normalized in sources/tables.py).  get_spark
+# builds every session with them; __spark_entry__ pins them on a foreign
+# session before a query runs; no query writes them.
+ENGINE_CONFS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
 
 def get_spark(
     app_name: str = "etl-rf-matrix-controller-spark",
@@ -50,7 +61,7 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=ENGINE_CONFS)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -61,9 +72,6 @@ def get_spark(
         # this on, the winnow selection windows read distribution AND
         # ordering straight off the scan: zero Exchange, zero Sort.
         .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-        # testdata events.parquet carries TIMESTAMP(NANOS); Spark reads it
-        # as long-nanos, normalized to microsecond timestamps in load_table
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.python.daemon.module",

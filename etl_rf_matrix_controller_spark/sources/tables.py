@@ -18,6 +18,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from etl_rf_matrix_controller_spark.session import ENGINE_CONFS
+
 TABLES = (
     "region",
     "nation",
@@ -40,19 +42,6 @@ BROADCAST_SAFE = ("region", "nation", "supplier")
 _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
 
-def set_events_read_confs(spark: SparkSession) -> None:
-    """Session confs required to read events.parquet's TIMESTAMP(NANOS) `ts`.
-
-    Self-defending: the caller's session (e.g. the driver's) may not carry
-    these; both are runtime-settable.  The UTC pin matters for the
-    timestamp_ntz shape: the NTZ wall time is only the epoch instant (what
-    DuckDB reports) when the session timezone is UTC -- a foreign non-UTC
-    session would otherwise silently shift every event by its TZ offset.
-    """
-    spark.conf.set(_NANOS_CONF, "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-
-
 def normalize_events_ts(df: DataFrame) -> DataFrame:
     """Normalize the `ts` column of an events scan (batch OR stream) to the
     session-TZ ``timestamp`` type, whatever shape this Spark read it as:
@@ -64,13 +53,23 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
       micros-truncated NTZ (ignoring nanosAsLong).  NTZ forbids
       cast-to-long (epoch-seconds operators rely on it) and streaming
       watermarks reject it (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE); with the
-      session pinned to UTC (set_events_read_confs) the cast is exact.
+      session pinned to UTC the cast is exact.
 
     One shared path for both readers so the next Spark quirk can't diverge
     them again (round-1 lesson: the batch fix missed the streaming reader).
+    It reads the session's confs and never writes them: a session that
+    lacks session.ENGINE_CONFS raises here.
     """
-    ts_type = dict(df.dtypes).get("ts")
     from pyspark.sql import functions as F
+
+    have = {k: df.sparkSession.conf.get(k, None) for k in ENGINE_CONFS}
+    if have != ENGINE_CONFS:
+        raise RuntimeError(
+            f"events reads need the session confs {ENGINE_CONFS}, this "
+            f"session has {have}: build it with session.get_spark, or run "
+            "the query through __spark_entry__.queries()"
+        )
+    ts_type = dict(df.dtypes).get("ts")
 
     if ts_type == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -136,8 +135,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ReadSchema)."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    if name == "events":
-        set_events_read_confs(spark)
     df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = normalize_events_ts(df)

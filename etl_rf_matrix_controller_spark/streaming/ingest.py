@@ -67,12 +67,6 @@ from etl_rf_matrix_controller_spark.streaming.neardup import (
 EXACT_BAND = -1  # reserved band id for the exact-content tier
 
 
-# micro-batch bodies run under the shared small-data job posture
-# (AQE off + batch-width shuffles; see plans/scale.py)
-from etl_rf_matrix_controller_spark.plans.scale import (
-    low_overhead_plan_scope as _microbatch_confs,
-)
-
 # Bucket count for the admission index, right-sized to its corpus (the
 # CLAUDE.md rule: buckets follow corpus scale).  The admission base is
 # ~2.5 band rows per doc, far below the gram indexes' ~250x fan-out, so
@@ -479,16 +473,17 @@ def stream_ingest_to_index(
                 allow_protected=allow_protected,
             )
 
-    with _microbatch_confs(
-        spark, batch_width or spark.sparkContext.defaultParallelism
-    ):
-        q = (
-            docs_stream.writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", checkpoint_path)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    # The drain runs under the session's confs.  AQE off with a
+    # batch-width shuffle here cut stream_index_ingest_unification from
+    # 63 jobs to 25 at sf0.1 but not its time (in-process median of 5,
+    # local[4]: 9.58 s with that posture, 9.07 s without).
+    q = (
+        docs_stream.writeStream.foreachBatch(ingest)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     for df in scratch:
         df.unpersist()
 
@@ -840,37 +835,32 @@ def stream_index_ingest_unification(
     # restore it with ONE Exchange so the twin probe runs the same
     # single-Exchange layout as the batches (round 11)
     audit_caches: list[DataFrame] = []
-    with _microbatch_confs(spark, ADMBAND_N_BUCKETS):
-        # the audit runs the same batch-scaled single-Exchange layout
-        # as the drain's micro-batches: same conf posture (round 11)
-        night_bands = night_bands.repartition(
-            ADMBAND_N_BUCKETS, "band", "bkey"
-        ).cache()
-        audit_caches.append(night_bands)
-        twin, _ = probe_and_retain(
-            night_bands, [base], cap, caches=audit_caches
+    night_bands = night_bands.repartition(
+        ADMBAND_N_BUCKETS, "band", "bkey"
+    ).cache()
+    audit_caches.append(night_bands)
+    twin, _ = probe_and_retain(night_bands, [base], cap, caches=audit_caches)
+    twin = twin.cache()
+    audit_caches.append(twin)
+    both = (
+        served.alias("s")
+        .hint("shuffle_hash")
+        .join(
+            twin.alias("t"),
+            (F.col("s.band") == F.col("t.band"))
+            & (F.col("s.bkey") == F.col("t.bkey"))
+            & (F.col("s.doc_id") == F.col("t.doc_id")),
         )
-        twin = twin.cache()
-        audit_caches.append(twin)
-        both = (
-            served.alias("s")
-            .hint("shuffle_hash")
-            .join(
-                twin.alias("t"),
-                (F.col("s.band") == F.col("t.band"))
-                & (F.col("s.bkey") == F.col("t.bkey"))
-                & (F.col("s.doc_id") == F.col("t.doc_id")),
-            )
-        )
-        # the three scalar counts in ONE job (tagged union of aggregates)
-        cnt = F.count(F.lit(1)).alias("c")
-        cnts = {
-            r["k"]: r["c"]
-            for r in served.agg(cnt).withColumn("k", F.lit("served"))
-            .unionByName(twin.agg(cnt).withColumn("k", F.lit("twin")))
-            .unionByName(both.agg(cnt).withColumn("k", F.lit("both")))
-            .collect()
-        }
+    )
+    # the three scalar counts in ONE job (tagged union of aggregates)
+    cnt = F.count(F.lit(1)).alias("c")
+    cnts = {
+        r["k"]: r["c"]
+        for r in served.agg(cnt).withColumn("k", F.lit("served"))
+        .unionByName(twin.agg(cnt).withColumn("k", F.lit("twin")))
+        .unionByName(both.agg(cnt).withColumn("k", F.lit("both")))
+        .collect()
+    }
     audit = bool(cnts["served"] == cnts["twin"] == cnts["both"])
     for df in audit_caches + stream_bands:
         df.unpersist()

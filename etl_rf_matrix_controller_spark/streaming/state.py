@@ -40,7 +40,6 @@ from pyspark.sql.window import Window
 from etl_rf_matrix_controller_spark.sources.tables import (
     normalize_events_ts,
     parquet_schema,
-    set_events_read_confs,
 )
 from etl_rf_matrix_controller_spark.streaming.keyed_state import (
     apply_keyed_state,
@@ -345,7 +344,6 @@ def stream_state_ttl_expiry(
     after a batch completes), which is itself documented behavior worth
     pinning.
     """
-    set_events_read_confs(spark)
     stream = (
         spark.readStream.schema(parquet_schema(spark, events_dir))
         .option("maxFilesPerTrigger", "1")

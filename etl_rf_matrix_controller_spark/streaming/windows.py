@@ -34,7 +34,6 @@ from etl_rf_matrix_controller_spark.sources.tables import (
     load_table,
     normalize_events_ts,
     parquet_schema,
-    set_events_read_confs,
 )
 
 
@@ -230,7 +229,6 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet, routed through the SAME ts
     normalizer as the batch reader (sources.tables.normalize_events_ts) so
     the two can never diverge on a Spark parquet-timestamp quirk again."""
-    set_events_read_confs(spark)
     schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     stream = spark.readStream.schema(schema).parquet(
         f"{sf_dir}", pathGlobFilter="events.parquet"

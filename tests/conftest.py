@@ -1,7 +1,8 @@
 """Shared fixtures: one SparkSession per test run + a DuckDB oracle
 comparator that mirrors the driver's gate (row count + schema + order-
 insensitive value compare), plus the plan facts and the checkpoint-plan
-recorder that tests/test_parity.py and tools/plan_audit.py read."""
+recorder that tests/test_parity.py and tools/plan_audit.py read, and the
+conf-write recorder that tests/test_parity.py reads."""
 
 from __future__ import annotations
 
@@ -216,3 +217,43 @@ def checkpoint_plans():
         yield plans
     finally:
         _recording.plans = None
+
+
+# -- conf-write recorder ----------------------------------------------------
+# No query writes a conf of the session it is given: the suite runs queries
+# on 8 threads of one session, so a write would reach every query planned
+# meanwhile.  The recorder keeps, per thread, every RuntimeConfig write the
+# thread makes on one watched session.
+
+
+def _install_conf_recorder() -> None:
+    from pyspark.sql.conf import RuntimeConfig
+
+    def recorded(original):
+        @functools.wraps(original)
+        def write(self, *args):
+            watch = getattr(_recording, "conf_watch", None)
+            if watch is not None and self._jconf.equals(watch[0]):
+                watch[1].append((original.__name__, *args))
+            return original(self, *args)
+
+        return write
+
+    RuntimeConfig.set = recorded(RuntimeConfig.set)
+    RuntimeConfig.unset = recorded(RuntimeConfig.unset)
+
+
+_install_conf_recorder()
+
+
+@contextmanager
+def conf_writes(session):
+    """Yield a list that receives ``("set", key, value)`` or ``("unset",
+    key)`` for every write the calling thread makes on ``session``'s conf
+    inside the block."""
+    writes = []
+    _recording.conf_watch = (session._jsparkSession.conf(), writes)
+    try:
+        yield writes
+    finally:
+        _recording.conf_watch = None

@@ -60,19 +60,16 @@ def test_queries_self_defend_session_timezone(spark, duck):
     """The driver runs queries() in ITS session, whose timezone we don't
     control; the entry-point wrapper must pin UTC (and the nanos conf) so
     timestamp truncation agrees with the DuckDB oracle from any caller.
-    Simulated here by poisoning the session TZ before the call."""
+    Simulated here by a new session whose TZ is poisoned before the call."""
     import __spark_entry__ as e
     from tests.conftest import SF_DIR, assert_oracle_match
 
     qs, osql = e.queries(), e.oracle_sql()
-    old = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-    try:
-        for name in ("distinct_users_daily", "tumbling_hour_counts"):
-            assert_oracle_match(qs[name](spark, SF_DIR), duck, osql[name], name=name)
-        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", old)
+    foreign = spark.newSession()
+    foreign.conf.set("spark.sql.session.timeZone", "America/New_York")
+    for name in ("distinct_users_daily", "tumbling_hour_counts"):
+        assert_oracle_match(qs[name](foreign, SF_DIR), duck, osql[name], name=name)
+    assert foreign.conf.get("spark.sql.session.timeZone") == "UTC"
 
 
 def test_engine_curation_facade(spark):

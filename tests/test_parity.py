@@ -15,7 +15,9 @@ oracle on its own cursor.  Each query's own test then checks:
    where Catalyst falls back to SMJ);
 4. no base table scanned more than SCAN_CEILING times in the final plan
    (SCAN_ALLOWLIST below for deliberate multi-pass ops).  A checkpoint's
-   subtree runs exactly once, which is the point of checkpointing.
+   subtree runs exactly once, which is the point of checkpointing;
+5. no write to a conf of the session the query was given (the other
+   queries of the pass plan under that session's confs meanwhile).
 
 Queries are independent, index publishes are atomic with thread-unique
 staging (plans/gram_index.py) and registration races re-resolve, so the
@@ -38,6 +40,7 @@ from tests.conftest import (
     SF_DIR,
     assert_rows_match,
     checkpoint_plans,
+    conf_writes,
     duck_rows,
     formatted,
     join_offences,
@@ -67,11 +70,12 @@ class Built:
     plan: str = ""
     fmt: str = ""
     checkpoint_plans: list = field(default_factory=list)
+    conf_writes: list = field(default_factory=list)
     error: Exception | None = None
 
 
 def _build(spark, duck, name: str) -> Built:
-    with checkpoint_plans() as ckpts:
+    with checkpoint_plans() as ckpts, conf_writes(spark) as writes:
         try:
             df = registry.QUERIES[name](spark, SF_DIR)
             plan = plan_of(df)
@@ -83,7 +87,7 @@ def _build(spark, duck, name: str) -> Built:
                     oracle = duck_rows(cur, registry.ORACLES[name])
         except Exception as exc:  # re-raised by the query's own test
             return Built(error=exc)
-    return Built(result, oracle, plan, fmt, ckpts)
+    return Built(result, oracle, plan, fmt, ckpts, writes)
 
 
 @pytest.fixture(scope="module")
@@ -112,6 +116,9 @@ def test_oracle_parity(built, manifest, name):
     b = built[name]
     if b.error is not None:
         raise b.error
+    assert not b.conf_writes, (
+        f"{name}: wrote confs of the session it was given: {b.conf_writes}"
+    )
     offences = {
         label: join_offences(plan)
         for label, plan in [("final plan", b.plan)]

@@ -16,7 +16,6 @@ from etl_rf_matrix_controller_spark.sources.tables import (
     load_table,
     normalize_events_ts,
     parquet_schema,
-    set_events_read_confs,
 )
 from tests.conftest import SF_DIR
 
@@ -26,13 +25,22 @@ def _next_job_id(spark) -> int:
 
 
 def test_load_table_schema_matches_inference(spark):
-    set_events_read_confs(spark)  # the confs load_table("events") reads under
     for name in TABLES:
         fresh = spark.read.parquet(f"{SF_DIR}/{name}.parquet")
         if name == "events":
             fresh = normalize_events_ts(fresh)
         assert load_table(spark, SF_DIR, name).schema == fresh.schema, name
     assert dict(load_table(spark, SF_DIR, "events").dtypes)["ts"] == "timestamp"
+
+
+def test_events_read_checks_engine_confs(spark):
+    """An events read on a session without the engine confs raises,
+    naming get_spark, and leaves the session's confs as they were."""
+    foreign = spark.newSession()
+    foreign.conf.set("spark.sql.session.timeZone", "America/New_York")
+    with pytest.raises(RuntimeError, match="get_spark"):
+        load_table(foreign, SF_DIR, "events")
+    assert foreign.conf.get("spark.sql.session.timeZone") == "America/New_York"
 
 
 @pytest.mark.parametrize("name", ["orders", "events"])

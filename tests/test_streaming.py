@@ -589,7 +589,6 @@ def test_watermark_drop_metrics_and_result(spark, tmp_path):
     from etl_rf_matrix_controller_spark.sources.tables import (
         load_table,
         normalize_events_ts,
-        set_events_read_confs,
     )
     from etl_rf_matrix_controller_spark.streaming.windows import _tumbling_agg
 
@@ -618,7 +617,6 @@ def test_watermark_drop_metrics_and_result(spark, tmp_path):
     for age, f in zip((200, 100, 0), order):
         os.utime(os.path.join(src, f), (now - age, now - age))
 
-    set_events_read_confs(spark)
     batch = spark.read.parquet(src)
     stream = (
         spark.readStream.schema(batch.schema)
