@@ -1106,12 +1106,25 @@ def test_curation_admission_stream_eq_batch_multibatch(spark, tmp_path):
     )
 
 
+CONCURRENT_RUNS_LIMIT_S = 240
+
+
 def test_concurrent_runs_of_one_stream_query(spark):
     """Four threads run one memory-sink streaming query on the shared
     session at once.  Each run must hash to the manifest entry, and no run
-    may leave its sink's temp view in the catalog."""
+    may leave its sink's temp view in the catalog.
+
+    The runs take a few seconds; they get CONCURRENT_RUNS_LIMIT_S.  Past
+    that the test stops every active stream and fails with the streams'
+    status and the Python stacks of the runs still going, instead of
+    holding up the rest of the suite (the runs are daemon threads)."""
     import json
-    from concurrent.futures import ThreadPoolExecutor
+    import sys
+    import threading
+    import time
+    import traceback
+
+    import pytest
 
     from etl_rf_matrix_controller_spark.streaming.windows import (
         stream_cms_heavy_hitters,
@@ -1125,12 +1138,42 @@ def test_concurrent_runs_of_one_stream_query(spark):
         return {t.name for t in spark.catalog.listTables() if t.isTemporary}
 
     before = temp_views()
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        hashes = list(
-            pool.map(
-                lambda _: result_hash(stream_cms_heavy_hitters(spark, SF_DIR)),
-                range(4),
-            )
+    hashes, errors = [None] * 4, []
+
+    def run(i):
+        try:
+            hashes[i] = result_hash(stream_cms_heavy_hitters(spark, SF_DIR))
+        except Exception as exc:  # re-raised below
+            errors.append(exc)
+
+    runs = [threading.Thread(target=run, args=(i,), daemon=True) for i in range(4)]
+    for t in runs:
+        t.start()
+    deadline = time.monotonic() + CONCURRENT_RUNS_LIMIT_S
+    for t in runs:
+        t.join(max(0.0, deadline - time.monotonic()))
+    stuck = [t for t in runs if t.is_alive()]
+    if stuck:
+        frames = sys._current_frames()
+        report = [
+            "".join(traceback.format_stack(frames[t.ident]))
+            for t in stuck
+            if t.ident in frames
+        ]
+
+        def stop_streams():
+            for q in spark.streams.active:
+                report.append(f"{q.name}: {q.status}")
+                q.stop()
+
+        stopper = threading.Thread(target=stop_streams, daemon=True)
+        stopper.start()
+        stopper.join(30)
+        pytest.fail(
+            f"{len(stuck)} of 4 runs still going after "
+            f"{CONCURRENT_RUNS_LIMIT_S} s:\n" + "\n".join(report)
         )
+    if errors:
+        raise errors[0]
     assert hashes == [want] * 4
     assert temp_views() <= before
