@@ -2478,39 +2478,61 @@ def winnow_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pair join runs over the ~2/(w+1) selected sample instead of
     every gram (4x less join input at w=4, tunable), with identical
     blocking shape to ngram_jaccard_pairs (inverted index on the
-    fingerprint, count per pair, threshold).  The fingerprint frame
-    feeds both join sides: checkpointed once, shuffle-hash pinned.
+    fingerprint, count per pair, threshold).  The selection is laid
+    out once per corpus as an fp-bucketed index (winnow_selection_index)
+    that feeds both join sides, shuffle-hash pinned.
 
     Hot-key protection: a fingerprint shared by d docs emits d^2 pair
     rows, and boilerplate-common fingerprints grow d linearly with the
     corpus -- the one O(df^2) scale-killer in the suite's gram joins.
     Fingerprints with document frequency > WINNOW_FP_DF_CAP are dropped
-    BEFORE the join (one window count over the same fp shuffle the join
-    needs anyway); high-df fingerprints carry no discriminative signal
+    BEFORE the join (one window count over the index's fp buckets, which
+    the join reads too); high-df fingerprints carry no discriminative signal
     for the shared_fps >= {WINNOW_PAIR_MIN} threshold, and the cap
     bounds any single fingerprint's pair fan-out at CAP^2 regardless of
     corpus size.  Mirrored in the oracle (fpd/rare CTEs, materialized
     so DuckDB does not re-inline the document-scale chain per leg).
     """
-    return winnow_fp_pairs(
-        winnow_select_fps_df(winnow_gram_index(spark, sf_dir))
+    return winnow_fp_pairs(winnow_selection_index(spark, sf_dir, "char"))
+
+
+def winnow_selection_index(
+    spark: SparkSession, sf_dir: str, unit: str
+) -> DataFrame:
+    """Persistent bucketBy(N, fp).sortBy(fp, doc_id) distinct (doc_id, fp)
+    winnow selection of one unit ("char" or "token"), built once per
+    corpus from that unit's doc-bucketed hash stream: the pair
+    detector's df window and fp self-join read their distribution and
+    order straight off the scan, so no query re-runs the selection."""
+    kind, grams = {
+        "char": ("win8sel", winnow_gram_index),
+        "token": ("wintoksel", token_winnow_gram_index),
+    }[unit]
+    return ensure_bucketed_index(
+        spark,
+        sf_dir,
+        kind,
+        lambda s, d: winnow_select_fps_df(grams(s, d))
+        .select("doc_id", "fp")
+        .distinct(),
+        ["fp"],
+        version="v1",
+        sort_cols=["fp", "doc_id"],
     )
 
 
-def winnow_fp_pairs(fps: DataFrame) -> DataFrame:
-    """Shared winnow pair detector over a selection (doc_id, fp, ...):
-    distinct (doc_id, fp) -> df-capped at WINNOW_FP_DF_CAP -> fp
+def winnow_fp_pairs(sel: DataFrame) -> DataFrame:
+    """Shared winnow pair detector over a fingerprint-bucketed selection
+    index (distinct doc_id, fp): df-capped at WINNOW_FP_DF_CAP -> fp
     self-join -> pairs sharing >= WINNOW_PAIR_MIN fingerprints, for the
-    char and token units alike."""
-    # Hot-fingerprint cap: window df count rides the fp-hash shuffle the
-    # self-join needs anyway; > CAP fingerprints never reach the join.
+    char and token units alike.  Both the df window and the join are
+    co-located on the index's fp buckets; the only Exchange is the pair
+    aggregation."""
+    # Hot-fingerprint cap: > CAP fingerprints never reach the join.
     fps = (
-        fps.select("doc_id", "fp")
-        .distinct()
-        .withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("fp")))
+        sel.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("fp")))
         .filter(F.col("df") <= WINNOW_FP_DF_CAP)
         .select("doc_id", "fp")
-        .localCheckpoint(eager=False)  # feeds both sides of the pair join
     )
     a, b = fps.alias("a"), fps.alias("b")
     return (
@@ -2690,16 +2712,13 @@ def token_winnow_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale discipline is the char detector's, through the one shared
     winnow_fp_pairs (the round-5 weak item): the fingerprint frame is
     df-capped at {WINNOW_FP_DF_CAP} docs BEFORE the self-join (one
-    window count riding the fp shuffle the join needs anyway), bounding
-    any fingerprint's pair fan-out at CAP^2 regardless of corpus size;
-    checkpointed once to feed both join sides, shuffle-hash pinned (no
-    SMJ on the stat-less frame).  The oracle materializes the selection
+    window count over the fp-bucketed selection index the join reads
+    too), bounding any fingerprint's pair fan-out at CAP^2 regardless of
+    corpus size; shuffle-hash pinned.  The oracle materializes the selection
     chain and both postings legs so DuckDB cannot re-inline the
     corpus-scale subquery per leg.
     """
-    return winnow_fp_pairs(
-        winnow_select_fps_df(token_winnow_gram_index(spark, sf_dir))
-    )
+    return winnow_fp_pairs(winnow_selection_index(spark, sf_dir, "token"))
 
 
 SNM_WINDOW = 2  # neighbors compared per sorted position

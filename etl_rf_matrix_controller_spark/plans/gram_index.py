@@ -21,6 +21,11 @@ Mechanics:
     re-registers with ``CREATE TABLE ... CLUSTERED BY ... LOCATION`` in
     milliseconds instead of rebuilding (bucket ids live in the file NAMES,
     which is why re-declaring over the same location is sound).
+  * The bucket count comes from the source parquet's size,
+    ``max(1, ceil(bytes / BUCKET_BYTES))`` (:func:`source_n_buckets`),
+    and is part of the table name; a base and its delta legs share one
+    source, so they share one count and stay co-located.  Callers that
+    pass ``n_buckets=`` keep their own count.
   * The build repartitions on the bucket keys with numPartitions ==
     numBuckets first, so each bucket lands in ONE file and Spark's read
     side keeps the sortBy order -- the consuming SortMergeJoin then needs
@@ -36,6 +41,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import math
 import os
 from typing import Callable
 
@@ -44,16 +50,22 @@ from pyspark.sql import functions as F
 
 INDEX_ROOT_ENV = "SPARK_GRAFT_INDEX_DIR"
 DEFAULT_INDEX_ROOT = "/tmp/spark_graft_gram_index"
-N_BUCKETS_ENV = "SPARK_GRAFT_GRAM_BUCKETS"
-DEFAULT_N_BUCKETS = 32
+# Source parquet bytes per index bucket.  Sweep at sf0.1 (documents
+# 0.59 MB; 29 declared queries over a gram_idx_ table, in-process, 4
+# cores, median of 3 after 1 warm-up, one process per count), summed
+# seconds: 1 bucket 68.3, 2 52.3, 4 46.1, 8 47.4, 16 49.9, 32 49.6.
+# The pair self-joins and the containment/jaccard probes gain most from
+# fewer buckets (ngram_jaccard_pairs 7.8 -> 6.5 s at 4); the postings
+# and IVF queries gain a little more at 1-2 but the big pair joins then
+# run on 1-2 cores.  The sweep read the winnow census 1.8 s at 4
+# buckets against 1.0 s at 32; interleaved in one process (median of 7
+# after a warm-up) it is 0.93 against 0.87 s, and the char pair probe
+# 0.65 against 0.87 s.  So about 4 buckets per 0.6 MB of source.
+BUCKET_BYTES = 160 << 10
 
 
 def index_root() -> str:
     return os.environ.get(INDEX_ROOT_ENV, DEFAULT_INDEX_ROOT)
-
-
-def default_n_buckets() -> int:
-    return int(os.environ.get(N_BUCKETS_ENV, str(DEFAULT_N_BUCKETS)))
 
 
 def corpus_fingerprint(sf_dir: str, table: str = "documents") -> str:
@@ -66,6 +78,16 @@ def corpus_fingerprint(sf_dir: str, table: str = "documents") -> str:
     except OSError:
         raw = os.path.abspath(path)
     return hashlib.md5(raw.encode()).hexdigest()[:10]
+
+
+def source_n_buckets(sf_dir: str, table: str = "documents") -> int:
+    """Bucket count of an index over ``table``: one bucket per
+    BUCKET_BYTES of the source parquet, ``max(1, ceil(bytes / B))``."""
+    try:
+        size = os.path.getsize(os.path.join(sf_dir, f"{table}.parquet"))
+    except OSError:
+        size = 0
+    return max(1, math.ceil(size / BUCKET_BYTES))
 
 
 def _ddl_of(df: DataFrame) -> str:
@@ -294,10 +316,9 @@ def ensure_bucketed_index(
     over the existing location) -> full build (one shuffle on the bucket
     keys, paid once per corpus per builder version).
     """
-    n_buckets = n_buckets or default_n_buckets()
+    n_buckets = n_buckets or source_n_buckets(sf_dir, source_table)
     sort_cols = sort_cols or bucket_cols
-    tag = corpus_fingerprint(sf_dir, source_table)
-    table = f"gram_idx_{kind}_{version}_{tag}_b{n_buckets}"
+    table = _base_table_name(sf_dir, kind, version, n_buckets, source_table)
     loc = os.path.join(index_root(), table)
     # resolve the currently-served generation (post-compaction this is
     # `<table>__g<N>`; the manifest flip is atomic, so a racing
@@ -502,7 +523,7 @@ def append_index_delta(
     new serving generation (idempotent by batch_id) and the orphan leg
     is retired for the grace-period prune.  Loops until the publish
     lands on a generation that is still serving."""
-    n_buckets = n_buckets or default_n_buckets()
+    n_buckets = n_buckets or source_n_buckets(sf_dir, source_table)
     sort_cols = sort_cols or bucket_cols
     logical = _base_table_name(sf_dir, kind, version, n_buckets, source_table)
     logical_loc = os.path.join(index_root(), logical)
@@ -596,7 +617,7 @@ def index_delta_frames(
     shares the base's bucketing, so leg<->leg joins on the bucket keys
     are co-located) and union the RESULTS -- a union of scans erases
     the distribution Catalyst needs."""
-    n_buckets = n_buckets or default_n_buckets()
+    n_buckets = n_buckets or source_n_buckets(sf_dir, source_table)
     logical = _base_table_name(sf_dir, kind, version, n_buckets, source_table)
     out: list[DataFrame] = []
     for loc in _delta_locs(_serving_loc(os.path.join(index_root(), logical))):
@@ -666,7 +687,7 @@ def compact_index(
         )
     import time
 
-    n_buckets = n_buckets or default_n_buckets()
+    n_buckets = n_buckets or source_n_buckets(sf_dir, source_table)
     sort_cols = sort_cols or bucket_cols
     table = _base_table_name(sf_dir, kind, version, n_buckets, source_table)
     loc = os.path.join(index_root(), table)
@@ -733,8 +754,8 @@ def compact_when_due(
     with compaction amortized over K batch-scaled appends.  The default
     K=8 keeps worst-case probe wall within ~2x of a one-leg probe at
     the measured per-leg cost."""
-    n_buckets = kw.get("n_buckets") or default_n_buckets()
     source_table = kw.get("source_table", "documents")
+    n_buckets = kw.get("n_buckets") or source_n_buckets(sf_dir, source_table)
     logical = _base_table_name(sf_dir, kind, version, n_buckets, source_table)
     serving = _serving_loc(os.path.join(index_root(), logical))
     if len(_delta_locs(serving)) < max_deltas:

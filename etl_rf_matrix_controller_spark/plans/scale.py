@@ -34,26 +34,6 @@ def write_bucketed(
     )
 
 
-def adaptive_state_shards(spark, per_core: int = 4, floor: int = 32) -> int:
-    """Shard count for applyInPandasWithState group keys, derived from
-    the session's parallelism instead of a constant (guide §2: make
-    partitioning scale-adaptive, never a constant tuned for one
-    machine).  Entity-keyed state ops shard entities into group keys;
-    results are shard-count-INVARIANT (entities/buckets are processed
-    independently inside a shard), but the pandas per-GROUP overhead
-    (~1-2 ms each) is not: the former fixed 1024 shards cost ~1-2 s per
-    micro-batch at local core counts, while a 1000-core cluster wants
-    thousands of shards for parallelism.  per_core x cores keeps every
-    core busy with a few groups; the floor guards tiny test sessions.
-
-    Called only by streaming/keyed_state.py.  The count is not
-    persisted: state checkpointed under one count would be misrouted
-    under another, but no sharded op takes a durable checkpointLocation
-    -- all drain through run_stream_to_memory's temporary checkpoint --
-    so no shard-keyed state outlives its session."""
-    return max(per_core * spark.sparkContext.defaultParallelism, floor)
-
-
 def collect_bounded(df: DataFrame, bound: int, what: str) -> list:
     """Driver-side collect with a hard cardinality guard (guide §5: the
     driver does no data work).  The driver-side iteration rewrites

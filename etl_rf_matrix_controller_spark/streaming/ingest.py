@@ -747,9 +747,24 @@ def stream_index_ingest_unification(
     bands shuffle (one probe-side Exchange per leg), the delta write is
     batch-scaled, and the morning probe is the standard
     zero-Exchange-per-leg bucketed join.
+
+    The staging files, stream source, checkpoint and records sink live
+    in one temporary directory, removed before the call returns; the
+    returned frame reads none of them.
     """
+    import shutil
     import tempfile
 
+    tmp = tempfile.mkdtemp(prefix="spark_graft_ingest_")
+    try:
+        return _ingest_unification(spark, sf_dir, tmp)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _ingest_unification(
+    spark: SparkSession, sf_dir: str, tmp: str
+) -> DataFrame:
     from etl_rf_matrix_controller_spark.plans.gram_index import (
         index_delta_frames,
     )
@@ -762,7 +777,6 @@ def stream_index_ingest_unification(
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     nights = _ingest_nights(docs)
 
-    tmp = tempfile.mkdtemp(prefix="spark_graft_ingest_")
     src = os.path.join(tmp, "stream")
     os.makedirs(src)
     stamp = 1700000000
@@ -905,6 +919,8 @@ def stream_index_ingest_unification(
             .alias("n_q_rejected"),
         )
     )
+    # the records sink is removed on return: read its (at most 3) rows now
+    rec_stats = spark.createDataFrame(rec_stats.collect(), rec_stats.schema)
     return (
         leg_stats.join(F.broadcast(rec_stats), "night", "left")
         .select(

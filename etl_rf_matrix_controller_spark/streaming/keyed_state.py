@@ -6,10 +6,10 @@ its per-group overhead dominates when entities are many and rows per
 entity few: keying the near-dup band index by raw bucket key made ~140k
 singleton groups at sf0.1 and cost 30.8 s, against 2 s sharded.  So
 entities are hashed into a bounded number of shards
-(plans/scale.py::adaptive_state_shards) and the SHARD is the group key;
-each shard's state row holds its entities' states as parallel arrays --
-one array of entity keys plus one array per per-entity state field
-(parallel primitive arrays are the cheapest Arrow round-trip).
+(:func:`state_shards`) and the SHARD is the group key; each shard's
+state row holds its entities' states as parallel arrays -- one array of
+entity keys plus one array per per-entity state field (parallel
+primitive arrays are the cheapest Arrow round-trip).
 
 The adapter owns everything but the fold:
   * the ``pmod(xxhash64(key), shards)`` column and the
@@ -28,12 +28,14 @@ lifts a fold over ONE entity's rows into such a fold.  Results are
 shard-count-invariant: every entity is folded alone, over its rows in
 ``order``, whatever shard it lands in (tests/test_keyed_state.py).
 
-Restart stability: the shard count follows the session's parallelism,
-so state checkpointed under one count would be misrouted under another.
-No op here takes a durable ``checkpointLocation`` -- every drain runs
-through windows.py::run_stream_to_memory's temporary checkpoint -- so no
-shard-keyed state outlives its session.  Persist the count beside the
-checkpoint when an op first gets a durable one.
+Restart stability: the shard count follows the session's
+``spark.sql.shuffle.partitions`` (:func:`state_shards`), so state
+checkpointed under one count would be misrouted under another.  No op
+here takes a durable ``checkpointLocation`` -- every drain runs through
+windows.py::run_stream_to_memory's temporary checkpoint, created and
+read in one session -- so the count never outlives its session.
+Persist the count beside the checkpoint when an op first gets a
+durable one.
 
 The one direct ``applyInPandasWithState`` call left is
 state.py::stream_state_ttl_expiry: its ``EventTimeTimeout`` is per
@@ -49,7 +51,20 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import ArrayType, StructField, StructType
 
-from etl_rf_matrix_controller_spark.plans.scale import adaptive_state_shards
+
+def state_shards(spark) -> int:
+    """Shard count: twice the number of state stores the stateful
+    operator gets (``spark.sql.shuffle.partitions``), not a multiple of
+    the core count.  Groups inside one store partition run one after
+    another in one Python worker, so shards far beyond the store count
+    add per-group pandas cost and no parallelism.  Twice, not once:
+    the store of a shard id is Murmur3 of the id modulo the store
+    count, so with one shard per store two ids often share a store and
+    another store sits idle.  Measured at sf0.1 on 4 cores (4 stores;
+    the five keyed-state drains, in-process, median of 5 after a
+    warm-up, interleaved): 4 shards 11.82 s, 8 shards 10.86 s, 32
+    shards 11.74 s summed, and 8 was the fastest on each drain."""
+    return 2 * int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 def per_entity(step: Callable) -> Callable:
@@ -107,7 +122,7 @@ def apply_keyed_state(
         if out:
             yield pd.DataFrame.from_records(out, columns=names)
 
-    shards = adaptive_state_shards(rows.sparkSession)
+    shards = state_shards(rows.sparkSession)
     return (
         rows.withColumn("shard", F.pmod(F.xxhash64(key), F.lit(shards)))
         .groupBy("shard")

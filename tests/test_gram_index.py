@@ -34,7 +34,7 @@ from etl_rf_matrix_controller_spark.plans.gram_index import (
     corpus_fingerprint,
     index_root,
 )
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, checkpoint_plans
 from tests.test_plans import plan_of
 
 
@@ -159,6 +159,70 @@ def test_winnow_selection_zero_exchange_zero_sort(spark):
         assert "Sort " not in plan, plan
         assert "Bucketed: true" in plan, plan
         assert plan.count("Window") == 2, plan
+
+
+def test_winnow_pair_probe_one_exchange_no_checkpoint(spark):
+    """The winnow pair detector probes each unit's fp-bucketed selection
+    index: the df window and the fp self-join read their distribution
+    and order off two bucketed scans, so the only Exchange is the pair
+    aggregation and nothing is checkpointed."""
+    from etl_rf_matrix_controller_spark.operators.dedup import (
+        winnow_fp_pairs,
+        winnow_selection_index,
+    )
+
+    for unit in ("char", "token"):
+        sel = winnow_selection_index(spark, SF_DIR, unit)
+        with checkpoint_plans() as ckpts:
+            plan = plan_of(winnow_fp_pairs(sel))
+        assert ckpts == [], ckpts
+        assert plan.count("Exchange") == 1, plan
+        assert plan.count("Bucketed: true") == 2, plan
+        assert "ShuffledHashJoin" in plan, plan
+
+
+def test_bucket_count_follows_source_size(spark, monkeypatch, tmp_path):
+    """An index's bucket count is max(1, ceil(bytes / BUCKET_BYTES)) of
+    its source parquet: a larger source gets more buckets, and a delta
+    leg keeps its base's count so the legs stay co-located."""
+    from etl_rf_matrix_controller_spark.plans import gram_index as gi
+
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
+
+    def rows(s, d):
+        return s.range(40).select(F.col("id").alias("k"))
+
+    def meta_buckets(table):
+        loc = os.path.join(str(tmp_path / "idx"), table)
+        with open(os.path.join(loc, "_graft_meta.json")) as fh:
+            return json.load(fh)["n_buckets"]
+
+    counts = {}
+    for name, size in (("small", 100), ("large", 3 * gi.BUCKET_BYTES + 1)):
+        sf = tmp_path / name
+        sf.mkdir()
+        (sf / "documents.parquet").write_bytes(b"\0" * size)
+        kind = f"bkrule{name}"
+        base = gi.ensure_bucketed_index(
+            spark, str(sf), kind, rows, ["k"], version="v1"
+        )
+        delta = gi.append_index_delta(
+            spark, str(sf), kind, rows, ["k"], version="v1", batch_id="b1"
+        )
+        want = max(1, -(-size // gi.BUCKET_BYTES))
+        assert gi.source_n_buckets(str(sf)) == want
+        assert meta_buckets(base.inputFiles()[0].split("/")[-2]) == want
+        assert meta_buckets(delta.inputFiles()[0].split("/")[-2]) == want
+        counts[name] = want
+    assert counts["large"] > counts["small"], counts
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    for sub in ("etl_rf_matrix_controller_spark", "tools"):
+        for dirpath, _, files in os.walk(os.path.join(root, sub)):
+            for f in files:
+                if f.endswith(".py"):
+                    with open(os.path.join(dirpath, f)) as fh:
+                        assert "SPARK_GRAFT_GRAM_BUCKETS" not in fh.read(), f
 
 
 def test_token_gram_build_no_hash_exchange_no_sort(spark):
@@ -287,7 +351,7 @@ def test_delta_append_equals_rebuild_and_compacts(spark, monkeypatch, tmp_path):
     )
     delta_loc = base_loc + "__dt1"
     # (b) batch-scaled write: the delta holds only the ~20%-of-corpus
-    # batch's postings (at sf0.001 the 32 per-file parquet footers floor
+    # batch's postings (at sf0.001 the per-file parquet footers floor
     # the BYTES, so the row count is the scale-invariant check) and the
     # base files were not touched
     assert 0 < _du(delta_loc) < base_bytes, (_du(delta_loc), base_bytes)
@@ -749,7 +813,9 @@ def test_append_racing_compaction_rehomes_orphan(spark, monkeypatch, tmp_path):
     assert {tuple(r) for r in got.collect()} == want
 
     # the orphan (old-generation __db2 leg) is retired, not deleted
-    table = gi._base_table_name(SF_DIR, kind, version, 32, "documents")
+    table = gi._base_table_name(
+        SF_DIR, kind, version, gi.source_n_buckets(SF_DIR), "documents"
+    )
     man = gi._read_manifest(os.path.join(str(tmp_path), table))
     retired = {e["path"] for e in man["retired"]}
     assert f"{table}__db2" in retired, retired

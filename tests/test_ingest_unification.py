@@ -477,3 +477,26 @@ def test_stream_ingest_compacts_mid_stream(spark, monkeypatch, tmp_path):
     assert {tuple(r) for r in served.collect()} == {
         tuple(r) for r in one_shot_retained(all_docs, CAP).collect()
     }
+
+
+def test_unification_leaves_no_temp_dir(spark, monkeypatch, tmp_path):
+    """stream_index_ingest_unification stages its stream source,
+    checkpoint and records sink in one temporary directory and removes
+    it before it returns; the frame it returns still hashes to the
+    manifest."""
+    import json
+    import tempfile
+
+    from etl_rf_matrix_controller_spark.streaming.ingest import (
+        stream_index_ingest_unification,
+    )
+    from tests.conftest import MANIFEST, result_hash
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    out = stream_index_ingest_unification(spark, SF_DIR)
+    assert not [
+        n for n in os.listdir(tmp_path) if n.startswith("spark_graft_ingest_")
+    ]
+    with open(MANIFEST) as f:
+        want = json.load(f)["stream_index_ingest_unification"]
+    assert result_hash(out) == want

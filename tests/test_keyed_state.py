@@ -37,10 +37,8 @@ def test_results_are_shard_count_invariant(spark, monkeypatch):
     session's default count; the state rows show each count took
     effect."""
     results = {}
-    for n in (1, 7, keyed_state.adaptive_state_shards(spark)):
-        monkeypatch.setattr(
-            keyed_state, "adaptive_state_shards", lambda _, n=n: n
-        )
+    for n in (1, 7, keyed_state.state_shards(spark)):
+        monkeypatch.setattr(keyed_state, "state_shards", lambda _, n=n: n)
         progress: list = []
         partials = stream_transitions(
             _events_stream(spark, SF), spark, progress
@@ -62,10 +60,25 @@ def test_results_are_shard_count_invariant(spark, monkeypatch):
     assert all(r == first for r in rest)
 
 
+def test_shard_count_follows_the_state_store_count(spark, monkeypatch):
+    """The default shard count is twice the stateful operator's
+    partition count, spark.sql.shuffle.partitions, whatever the core
+    count."""
+    stores = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert keyed_state.state_shards(spark) == 2 * stores
+    monkeypatch.setattr(
+        type(spark.sparkContext),
+        "defaultParallelism",
+        property(lambda _: 8 * stores),
+    )
+    assert spark.sparkContext.defaultParallelism == 8 * stores
+    assert keyed_state.state_shards(spark) == 2 * stores
+
+
 def test_per_entity_fold_keeps_one_state_row_per_shard(spark):
     """The per-user EMA fold, run through the adapter on more users than
     shards, holds at most one state row per shard."""
-    shards = keyed_state.adaptive_state_shards(spark)
+    shards = keyed_state.state_shards(spark)
     events = _events_stream(spark, SF).select(
         "user_id", "ts", "event_id", "value"
     )

@@ -781,7 +781,7 @@ def test_transition_partials_bounded_by_pairs_not_events(spark):
     """The state function counts transitions itself: the sink holds at
     most one (prev, cur, n) row per shard and type pair, far fewer than
     the events it folded -- never one row per event."""
-    from etl_rf_matrix_controller_spark.plans.scale import adaptive_state_shards
+    from etl_rf_matrix_controller_spark.streaming.keyed_state import state_shards
     from etl_rf_matrix_controller_spark.streaming.transitions import (
         stream_transitions,
     )
@@ -792,7 +792,7 @@ def test_transition_partials_bounded_by_pairs_not_events(spark):
     n_types = events.select("event_type").distinct().count()
     partials = stream_transitions(_events_stream(spark, SF_DIR), spark)
     n_partials = partials.count()
-    assert n_partials <= adaptive_state_shards(spark) * n_types**2
+    assert n_partials <= state_shards(spark) * n_types**2
     assert 2 * n_partials < n_events, (n_partials, n_events)
     assert partials.agg(F.sum("n")).first()[0] == (
         n_events - events.select("user_id").distinct().count()
