@@ -944,7 +944,7 @@ def order_fully_shipped_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Both aggregations are partial-aggregable and the fact-fact join
     hashes on the order key -- at 100 TB orders and lineitem co-bucket
-    on that key (plans/scale.py posture) and the join is co-located.
+    on that key and the join is co-located.
     """
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate"

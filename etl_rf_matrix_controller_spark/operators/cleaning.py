@@ -149,14 +149,16 @@ def ngram_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = dup_corpus(spark, sf_dir).repartition(
         spark.sparkContext.defaultParallelism
     )
+    # the word array is a column before the lambda reads it: a split
+    # inside the lambda re-runs once per gram
     gram_list = F.expr(
-        f"array_distinct(transform(sequence(1, greatest(size(split(trim(text),"
-        f" ' ')) - {NGRAM_N - 1}, 1)), i -> array_join(slice(split(trim(text),"
-        f" ' '), i, {NGRAM_N}), ' ')))"
+        f"array_distinct(transform(sequence(1, greatest(size(t) - {NGRAM_N - 1},"
+        f" 1)), i -> array_join(slice(t, i, {NGRAM_N}), ' ')))"
     )
     b = hash_bucket(F.col("doc_id"))
     grams = (
-        corpus.select(
+        corpus.select("doc_id", F.split(F.trim("text"), " ").alias("t"))
+        .select(
             "doc_id",
             F.when(b < 80, "train").when(b < 90, "val").otherwise("test").alias(
                 "split"

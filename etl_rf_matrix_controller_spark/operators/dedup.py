@@ -3027,7 +3027,7 @@ def prefix_filter_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def prefix_filter_pairs_df(spark: SparkSession, corpus: DataFrame) -> DataFrame:
     """Core of prefix_filter_jaccard_pairs over an arbitrary (doc_id,
     text) frame -- exposed for the tools/stress.py scale-slope probe."""
-    t = F.split(F.trim("text"), " ")
+    t = F.col("t")  # projected first: a split in the lambda runs per element
     sh_arr = F.array_distinct(
         F.transform(
             F.sequence(F.lit(1), F.size(t) - 2),
@@ -3041,6 +3041,7 @@ def prefix_filter_pairs_df(spark: SparkSession, corpus: DataFrame) -> DataFrame:
     )
     toksets = (
         corpus.repartition(spark.sparkContext.defaultParallelism)
+        .select("doc_id", F.split(F.trim("text"), " ").alias("t"))
         .filter(F.size(t) >= 3)
         .select("doc_id", sh_arr.alias("toks"))
         .localCheckpoint(eager=True)

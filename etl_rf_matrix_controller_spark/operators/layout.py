@@ -232,48 +232,6 @@ def write_zordered(ev: DataFrame, path: str, n_files: int = 8) -> None:
     )
 
 
-def compact_parquet(
-    spark: SparkSession,
-    in_dir: str,
-    out_dir: str,
-    target_file_bytes: int = 128 << 20,
-    sort_cols: list[str] | None = None,
-) -> int:
-    """Small-files compaction (the OPTIMIZE maintenance pass): rewrite a
-    fragmented parquet directory into ~target-sized files and return the
-    output file count.
-
-    Streaming sinks and incremental loads fragment a table into
-    thousands of tiny files; at 100 TB that is a scan-planning and
-    NameNode/listing disaster (every file is an open + a footer read).
-    The compactor sizes the output from the INPUT's real bytes (driver
-    -side listing -- metadata only, no data read), then does one shuffle:
-    ``repartitionByRange`` over ``sort_cols`` when given, so clustering
-    (and therefore min/max row-group skipping, see write_zordered)
-    SURVIVES compaction -- a plain repartition would destroy the layout
-    the skipping depends on; round-robin only when no ordering is asked
-    for.
-    """
-    import math
-    import os
-
-    total = 0
-    for root, _dirs, files in os.walk(in_dir):
-        for f in files:
-            if f.endswith(".parquet"):
-                total += os.path.getsize(os.path.join(root, f))
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(in_dir)
-    if sort_cols:
-        out = df.repartitionByRange(n_files, *sort_cols).sortWithinPartitions(
-            *sort_cols
-        )
-    else:
-        out = df.repartition(n_files)
-    out.write.mode("overwrite").parquet(out_dir)
-    return n_files
-
-
 # Broadcast advisor sizing: per-row payload estimate = string bytes +
 # 8 bytes per numeric column; threshold mirrors Spark's default
 # spark.sql.autoBroadcastJoinThreshold (10 MB).

@@ -918,8 +918,7 @@ def join_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows run over per-key count frames (key-space-sized, not
     row-sized).  skew_pct_of_avg = max_n * n_keys * 100 DIV total is
     exact integer arithmetic: 100 means perfectly uniform, 10_000 means
-    the hottest key is 100x average -- the salting threshold in
-    plans/scale.py keys off exactly this ratio.
+    the hottest key is 100x average.
     """
     orders = load_table(spark, sf_dir, "orders").select(
         F.lit("orders.o_custkey").alias("key_col"), F.col("o_custkey").alias("k")

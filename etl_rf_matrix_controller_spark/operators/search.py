@@ -1183,7 +1183,7 @@ def phrase_query_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     you'd persist bucketed by phrase hash (plans/gram_index.py holds
     that machinery for the gram family)."""
     docs = load_table(spark, sf_dir, "documents")
-    t = F.split(F.trim("text"), " ")
+    t = F.col("t")  # projected first: a split in the lambda runs per element
     tgs = F.transform(
         F.sequence(F.lit(1), F.size(t) - 2),
         lambda i: F.struct(
@@ -1198,6 +1198,7 @@ def phrase_query_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     occ = (
         docs.repartition(spark.sparkContext.defaultParallelism)
+        .select("doc_id", F.split(F.trim("text"), " ").alias("t"))
         .filter(F.size(t) >= 3)
         .select("doc_id", F.explode(tgs).alias("r"))
         .select("doc_id", F.col("r.ph").alias("ph"), F.col("r.pos").alias("pos"))

@@ -793,90 +793,6 @@ def tokenizer_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def bpe_merge_loop(
-    words: DataFrame, n_merges: int = 5
-) -> tuple[list[tuple[str, str, int]], DataFrame]:
-    """Iterated BPE training loop: run ``n_merges`` successive merges over
-    a word-frequency table -- the generalization of the declared
-    single-step ``bpe_merge_pair_counts`` (which computes merge #1's
-    candidate ranking), mirroring ``pagerank_loop``'s shape
-    (operators/graph.py): localCheckpoint per iteration to truncate
-    lineage, one driver-side scalar collect per round (the winning pair).
-
-    ``words`` is DataFrame[token: string, cnt: bigint].  Returns the
-    ordered merge list [(left, right, pair_count), ...] and the final
-    symbolized vocabulary DataFrame[token, cnt, syms: array<string>].
-
-    Merge semantics pin the reference BPE algorithm (Sennrich et al.
-    2016): per iteration the corpus-weighted most-frequent adjacent
-    symbol pair wins (ties break lexicographically on the pair); the
-    winning pair is replaced greedily LEFT-TO-RIGHT within every word,
-    so "xxxx" under merge (x,x) becomes [xx, xx], never [x, xx, x] --
-    implemented as an in-row sequential fold, the same
-    left-fold-determinism rule every float fold in this repo follows,
-    applied to list building.
-
-    Scale posture: everything after the initial word-count aggregation is
-    VOCAB-sized, independent of corpus size (the reason real BPE trainers
-    operate on the word table): each iteration fans out O(vocab x
-    word_len) pair rows, partial-aggregates map-side, and ships exactly
-    one row to the driver.
-    """
-    syms = F.expr(
-        "transform(sequence(1, length(token)), i -> substring(token, i, 1))"
-    )
-    vocab = words.select("token", "cnt", syms.alias("syms")).localCheckpoint(
-        eager=True
-    )
-    merges: list[tuple[str, str, int]] = []
-    for _ in range(n_merges):
-        pairs = vocab.filter(F.size("syms") >= 2).select(
-            "cnt",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, size(syms) - 2),"
-                    " i -> struct(syms[i] AS l, syms[i + 1] AS r))"
-                )
-            ).alias("p"),
-        )
-        top = (
-            pairs.groupBy("p.l", "p.r")
-            .agg(F.sum("cnt").cast("bigint").alias("pair_count"))
-            .orderBy(F.desc("pair_count"), F.asc("l"), F.asc("r"))
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        left, right, pair_count = top[0].l, top[0].r, top[0].pair_count
-        merges.append((left, right, int(pair_count)))
-        # Greedy left-to-right merge of (left, right) in every word: a
-        # sequential fold appends each symbol unless it completes the
-        # winning pair with the current last element, in which case the
-        # two collapse into one merged symbol.  A freshly merged symbol
-        # is the concatenated string, so it can only seed ANOTHER merge
-        # when it literally equals `left` -- exactly the non-overlapping
-        # left-to-right pass of reference BPE.
-        merged = F.expr(
-            "aggregate(syms, CAST(array() AS array<string>), (acc, s) ->"
-            " IF(size(acc) > 0 AND element_at(acc, -1) = {l} AND s = {r},"
-            "    concat(slice(acc, 1, size(acc) - 1),"
-            "           array(concat({l}, {r}))),"
-            "    concat(acc, array(s))))".format(
-                l=_sql_str(left), r=_sql_str(right)
-            )
-        )
-        vocab = vocab.select("token", "cnt", merged.alias("syms")).localCheckpoint(
-            eager=True
-        )
-    return merges, vocab
-
-
-def _sql_str(s: str) -> str:
-    """SQL single-quoted string literal (symbols come from corpus text)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
 @declared(
     "doc_char_gini",
     oracle="""
@@ -1581,7 +1497,7 @@ def kn_continuation_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary-bounded rollups and a scalar cross join; the corpus is
     scanned once, everything after the first agg is vocab-sized."""
     docs = load_table(spark, sf_dir, "documents")
-    t = F.split(F.trim("text"), " ")
+    t = F.col("t")  # projected first: a split in the lambda runs per element
     bgs = F.transform(
         F.sequence(F.lit(1), F.size(t) - 1),
         lambda i: F.struct(
@@ -1591,6 +1507,7 @@ def kn_continuation_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     types = (
         docs.repartition(spark.sparkContext.defaultParallelism)
+        .select(F.split(F.trim("text"), " ").alias("t"))
         .filter(F.size(t) >= 2)
         .select(F.explode(bgs).alias("r"))
         .select("r.prev", "r.cur")

@@ -6,10 +6,9 @@ sub-linear shape in the suite: every query over the gram family rebuilt a
 (207 s, disk-bandwidth-bound).  At 100 TB that per-query shuffle IS the
 bill.  The fix is physical design, not a new algorithm: write the postings
 ONCE as a parquet table ``bucketBy(N, <join keys>).sortBy(<join keys>)``
-(the zero-exchange machinery already proven by plans/scale.py +
-tests/test_plans.py::test_bucketed_join_has_no_exchange), then every
-consuming query scans the bucketed table and joins bucket-to-bucket with
-ZERO Exchange: cost per query = one columnar scan + per-bucket local joins.
+(identically bucketed sides co-locate), then every consuming query scans
+the bucketed table and joins bucket-to-bucket with ZERO Exchange: cost
+per query = one columnar scan + per-bucket local joins.
 
 Mechanics:
   * Table identity = (kind, fingerprint of the corpus parquet, builder

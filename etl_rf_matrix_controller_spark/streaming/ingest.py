@@ -76,6 +76,18 @@ EXACT_BAND = -1  # reserved band id for the exact-content tier
 ADMBAND_N_BUCKETS = 8
 
 
+def _release(frames: list[DataFrame]) -> None:
+    """Free each frame's blocks.  ``unpersist()`` reaches only the cache
+    manager; a localCheckpoint's blocks belong to the RDD under its
+    LogicalRDD plan, so that RDD is unpersisted directly.  Call only
+    once nothing reads the frames again."""
+    for df in frames:
+        df.unpersist()
+        plan = df._jdf.queryExecution().logical()
+        if plan.nodeName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+
+
 def admission_rows(passing: DataFrame, width: int | None = None) -> DataFrame:
     """(doc_id, band, bkey) state rows for quality-PASSING docs: the
     MinHash bands plus the exact tier as reserved band -1 keyed by the
@@ -390,10 +402,11 @@ def stream_ingest_to_index(
     # no build latency inside the trigger
     admission_index_base(spark, sf_dir, kind=kind, version=version, cap=cap)
 
-    # per-run cache handles (width barriers + multi-consumer probe
-    # intermediates); unpersisted after the stream drains.  Bands go to
-    # the caller's bands_sink instead when provided -- the caller owns
-    # their lifetime (the audit reads them post-drain).
+    # per-run cache and checkpoint handles (width barriers +
+    # multi-consumer probe intermediates); released after the stream
+    # drains.  Bands go to the caller's bands_sink instead when provided
+    # -- the caller owns their lifetime (the audit reads them
+    # post-drain).
     scratch: list[DataFrame] = []
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
@@ -422,6 +435,7 @@ def stream_ingest_to_index(
             .withColumn("q_ok", quality_keep_col())
             .localCheckpoint()
         )
+        scratch.append(flagged)
         q_records = flagged.filter(~F.col("q_ok")).select(
             F.lit("q").alias("kind"),
             F.lit(None).cast("long").alias("doc_a"),
@@ -484,126 +498,7 @@ def stream_ingest_to_index(
         .start()
     )
     q.awaitTermination()
-    for df in scratch:
-        df.unpersist()
-
-
-def stream_append_to_index(
-    rows_stream: DataFrame,
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    kind: str,
-    version: str,
-    bucket_cols: list[str],
-    batch_rows: "Callable[[DataFrame], DataFrame]",
-    checkpoint_path: str,
-    n_buckets: int | None = None,
-    sort_cols: list[str] | None = None,
-    source_table: str = "documents",
-    max_deltas: int | None = None,
-    allow_protected: bool = False,
-) -> None:
-    """Generic streaming appender for ANY persistent bucketed index
-    (round-10 verdict task #3): a streamed corpus should feed search
-    and ANN, not just admission.  Per micro-batch, ``batch_rows``
-    transforms the batch frame into index rows (token postings, IVF
-    assignments, gram postings, ...) and the rows publish as a bucketed
-    delta leg via :func:`plans.gram_index.append_index_delta` --
-    identical layout, identical batch-id namespace (``s<NNN>``), and
-    identical idempotency (atomic publish keyed by batch id; a retry or
-    re-drain re-registers instead of re-writing) as a batch append of
-    the same rows.  When the stream drains, the on-disk index holds
-    EXACTLY what batch `append_index_delta` calls over the same batches
-    would have written, and the next morning's probes serve
-    base ∪ stream-written legs with the standard zero-Exchange-per-leg
-    discipline.
-
-    Unlike the admission path (:func:`stream_ingest_to_index`), there
-    is no cross-batch probe: postings/IVF appends are pure per-batch
-    transformations (IVF encodes against the base's centroids --
-    codebooks retrain rarely; the closure captures them), so each
-    trigger costs one batch-scaled transform + one batch-scaled
-    bucketed write.  ``max_deltas`` wires in the same compact-at-K
-    policy the admission loop uses."""
-    from etl_rf_matrix_controller_spark.plans.gram_index import (
-        append_index_delta,
-        compact_when_due,
-    )
-
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        rows = batch_rows(batch_df)
-        append_index_delta(
-            spark,
-            sf_dir,
-            kind,
-            lambda s, d: rows,
-            bucket_cols,
-            version=version,
-            batch_id=f"s{batch_id:03d}",
-            n_buckets=n_buckets,
-            sort_cols=sort_cols,
-            source_table=source_table,
-        )
-        if max_deltas is not None:
-            compact_when_due(
-                spark, sf_dir, kind, bucket_cols, version=version,
-                max_deltas=max_deltas, n_buckets=n_buckets,
-                sort_cols=sort_cols, source_table=source_table,
-                allow_protected=allow_protected,
-            )
-
-    q = (
-        rows_stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def batch_postings_rows(batch_df: DataFrame) -> DataFrame:
-    """(token, doc_id, tf) postings of one ingest batch -- the same
-    tokenization the persistent term-postings index base uses
-    (operators/search.py), so stream-written legs are
-    drop-in unionable with it."""
-    return (
-        batch_df.select(
-            "doc_id",
-            F.explode(F.split(F.trim("text"), " ")).alias("token"),
-        )
-        .filter(F.col("token") != "")
-        .groupBy("token", "doc_id")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-    )
-
-
-def make_ivf_batch_encoder(
-    cents: DataFrame,
-) -> "Callable[[DataFrame], DataFrame]":
-    """IVF encoder closure over the BASE corpus's centroid frame:
-    each batch's (vec_id, embedding) rows are assigned to their nearest
-    centroid (broadcast -- the centroid set is ~1% of the corpus) and
-    emitted as (cent_id, vec_id, embedding) list rows, matching the
-    persistent flat-IVF index layout (operators/similarity.py).
-    Codebooks/centroids retrain rarely in production; streamed appends
-    encode with the current ones, same as batch appends."""
-    from etl_rf_matrix_controller_spark.operators.similarity import _sq_dist
-
-    def encode(batch_df: DataFrame) -> DataFrame:
-        dist = _sq_dist(F.col("embedding"), F.col("ce"))
-        w = Window.partitionBy("vec_id").orderBy(
-            dist.asc(), F.col("cent_id").asc()
-        )
-        return (
-            batch_df.select("vec_id", "embedding")
-            .crossJoin(F.broadcast(cents))
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("cent_id", "vec_id", "embedding")
-        )
-
-    return encode
+    _release(scratch)
 
 
 # Three ingest nights with doc_ids increasing across nights (arrival
@@ -876,8 +771,7 @@ def _ingest_unification(
         .collect()
     }
     audit = bool(cnts["served"] == cnts["twin"] == cnts["both"])
-    for df in audit_caches + stream_bands:
-        df.unpersist()
+    _release(audit_caches + stream_bands)
 
     # ONE tagged aggregation over all legs (round 11): the former
     # union-of-3-agg-branches plan ran one agg subtree per leg (3+

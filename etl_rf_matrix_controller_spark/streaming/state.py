@@ -443,207 +443,3 @@ def stream_holt_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _last_emission(tbl, "event_type", "n_events").select(
         "event_type", "n_days", "level", "trend", "forecast_next"
     )
-
-
-TWAP_STATE_SCHEMA = StructType(
-    [
-        StructField("last_t", LongType()),
-        StructField("last_v", LongType()),
-        StructField("wsum", LongType()),
-        StructField("total_s", LongType()),
-        StructField("n_intervals", LongType()),
-    ]
-)
-TWAP_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_intervals", LongType()),
-        StructField("total_s", LongType()),
-        StructField("twap", DoubleType()),
-    ]
-)
-
-
-def _update_twap(user, prev, rows):
-    """Per-user time-weighted-average state: carry (last_t, last_v) plus
-    the exact integer accumulators (wsum, total_s, n_intervals) -- O(1)
-    state per key.  Each arriving event closes the held interval
-    [last_t, t) at value last_v, exactly the lead() window the batch
-    operator uses.  wsum stays in int64: durations telescope to the
-    user's time SPAN, so wsum <= span * max_scaled_value (~3e13 for a
-    year at value 100) -- exact, and exactly representable when cast to
-    double for the final division."""
-    last_t, last_v, wsum, total_s, n_iv = prev or (None, None, 0, 0, 0)
-    for t, v in zip(rows["t_s"].tolist(), rows["v_s"].tolist()):
-        if last_t is not None:
-            dur = t - last_t
-            wsum += last_v * dur
-            total_s += dur
-            n_iv += 1
-        last_t, last_v = t, v
-    state = (last_t, last_v, wsum, total_s, n_iv)
-    if total_s <= 0:
-        return state, []
-    twap = float(wsum) / (float(total_s) * 10000.0)
-    return state, [(user, n_iv, total_s, twap)]
-
-
-def stream_twap_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful streaming op: per-user time-weighted average as
-    sharded keyed state (update mode, availableNow); the final
-    per-key emission is comparable bit-for-bit to
-    operators.behavior.time_weighted_avg_value -- epoch seconds and the
-    scaled integer value are computed JVM-side before the stream enters
-    Python, the accumulators are exact integers, and the one float
-    division happens once at emission with identical operands."""
-    events = _events_stream(spark, sf_dir).select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.unix_timestamp("ts").alias("t_s"),
-        F.round(F.col("value") * 10000).cast("long").alias("v_s"),
-    )
-    updates = apply_keyed_state(
-        events, "user_id", ("ts", "event_id"), per_entity(_update_twap),
-        TWAP_OUTPUT_SCHEMA, TWAP_STATE_SCHEMA,
-    )
-    tbl = run_stream_to_memory(updates, spark, "update")
-    return _last_emission(tbl, "user_id", "n_intervals").select(
-        "user_id", "n_intervals", "total_s", "twap"
-    )
-
-
-BALANCE_STATE_SCHEMA = StructType(
-    [
-        StructField("bal", LongType()),
-        StructField("clamps", LongType()),
-        StructField("n", LongType()),
-    ]
-)
-BALANCE_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_rows", LongType()),
-        StructField("balance_s", LongType()),
-        StructField("n_clamps", LongType()),
-    ]
-)
-
-
-def _update_balance(user, prev, rows):
-    """Clamped-balance fold (max(0, bal + delta) per step, counting clamp
-    hits) over (ts, event_id)-ordered integer deltas; state is three
-    int64 scalars per key.  All-integer arithmetic, so the streaming fold
-    is bit-identical to the batch F.aggregate fold and the oracle's
-    recursive CTE regardless of how rows split across micro-batches --
-    the state carries everything the remaining fold needs."""
-    bal, clamps, n = prev or (0, 0, 0)
-    for d in rows["d"].tolist():
-        if bal + d < 0:
-            bal, clamps = 0, clamps + 1
-        else:
-            bal += d
-        n += 1
-    return (bal, clamps, n), [(user, n, bal, clamps)]
-
-
-def stream_clamped_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of operators.behavior.clamped_running_balance: the
-    per-user zero-clamped credit balance as an O(1)-state streaming fold
-    (the shape that scales where the batch collect_list cannot -- a
-    year-long event stream never materializes per-user arrays here).
-    Returns the final per-key emission for the batch==stream contract
-    test."""
-    events = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type").isin("purchase", "error"))
-        .select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.when(
-                F.col("event_type") == "purchase",
-                F.round(F.col("value") * 10000).cast("long"),
-            )
-            .otherwise(-F.round(F.col("value") * 10000).cast("long"))
-            .alias("d"),
-        )
-    )
-    updates = apply_keyed_state(
-        events, "user_id", ("ts", "event_id"), per_entity(_update_balance),
-        BALANCE_OUTPUT_SCHEMA, BALANCE_STATE_SCHEMA,
-    )
-    tbl = run_stream_to_memory(updates, spark, "update")
-    return _last_emission(tbl, "user_id", "n_rows").select(
-        "user_id", "balance_s", "n_clamps"
-    )
-
-
-def _cms_schemas():
-    from pyspark.sql.types import ArrayType
-
-    state = StructType(
-        [
-            StructField("counts", ArrayType(LongType())),
-            StructField("n_seen", LongType()),
-        ]
-    )
-    output = StructType(
-        [
-            StructField("row_id", LongType()),
-            StructField("n_seen", LongType()),
-            StructField("counts", ArrayType(LongType())),
-        ]
-    )
-    return state, output
-
-
-def _update_cms(row_id, prev, rows):
-    """Count-min-sketch row as streaming state: one int64 cell array per
-    sketch row, incremented per event -- the mergeable-sketch property
-    demonstrated IN the state store (cell-wise addition commutes with
-    micro-batching, so the final cells are bit-equal to the batch
-    build no matter how rows split across batches)."""
-    import hashlib
-
-    from etl_rf_matrix_controller_spark.operators.aggregates import CMS_CELLS
-
-    counts, n_seen = prev or ([0] * CMS_CELLS, 0)
-    counts = list(counts)
-    for uid in rows["user_id"].tolist():
-        h = hashlib.md5(f"{row_id}_{uid}".encode()).hexdigest()[:8]
-        counts[int(h, 16) % CMS_CELLS] += 1
-        n_seen += 1
-    return (counts, n_seen), [(row_id, n_seen, counts)]
-
-
-def stream_cms_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of the cms_heavy_hitters sketch BUILD: each sketch
-    row's cell array lives in the keyed state store and grows by
-    cell-wise increments per micro-batch -- O(CMS_CELLS) state per key,
-    constant per event, the sketch-in-state pattern that replaces a
-    full keyed shuffle at 100 TB.  Returns the final (row_id, cell, c)
-    frame for non-zero cells, directly comparable to the batch build
-    (tests/test_streaming.py pins cells bit-equal)."""
-    from etl_rf_matrix_controller_spark.operators.aggregates import CMS_ROWS
-
-    state_schema, output_schema = _cms_schemas()
-    events = _events_stream(spark, sf_dir).select(
-        "user_id",
-        F.explode(F.sequence(F.lit(0), F.lit(CMS_ROWS - 1))).alias("rid"),
-    ).select("user_id", F.col("rid").cast("long").alias("row_id"))
-    updates = apply_keyed_state(
-        events, "row_id", (), per_entity(_update_cms), output_schema,
-        state_schema,
-    )
-    tbl = run_stream_to_memory(updates, spark, "update")
-    return (
-        _last_emission(tbl, "row_id", "n_seen")
-        .select("row_id", F.posexplode("counts").alias("cell", "c"))
-        .filter(F.col("c") > 0)
-        .select(
-            "row_id",
-            F.col("cell").cast("bigint").alias("cell"),
-            F.col("c").cast("bigint").alias("c"),
-        )
-    )

@@ -347,27 +347,6 @@ def interval_join_outer(errors: DataFrame, clicks: DataFrame) -> DataFrame:
     ).select("error_id", "user_id", "error_ts", "c_id")
 
 
-def sliding_window_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T1 sliding variant under real Structured Streaming."""
-    events = _events_stream(spark, sf_dir).withWatermark("ts", "1 day")
-    agg = (
-        events.groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            int_round_scaled(
-                F.sum(F.round(F.col("value") * 10000).cast("bigint")), 2
-            ).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-    return run_stream_to_memory(agg, spark)
-
-
 def _severity_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Static severity dimension: distinct event types classified by a
     deterministic rule.  Stands in for the operational lookup table

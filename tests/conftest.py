@@ -178,6 +178,35 @@ def join_offences(plan: str) -> tuple[int, int]:
     return plan.count("SortMergeJoin"), plan.count("CartesianProduct")
 
 
+_LAMBDA_RE = re.compile(r"lambdafunction\(")
+_SPLIT_RE = re.compile(r"(?<!\w)(?:split|regexp_\w+)\(")
+
+
+def _call_args(s: str, start: int) -> str:
+    """The text from ``start`` (just past an open paren) to its match."""
+    depth = 1
+    for i in range(start, len(s)):
+        depth += {"(": 1, ")": -1}.get(s[i], 0)
+        if not depth:
+            return s[start:i]
+    return s[start:]
+
+
+def invariant_lambda_calls(plan: str) -> set[str]:
+    """``split``/``regexp_*`` calls inside a higher-order-function lambda
+    whose arguments name no lambda variable.  Spark does not hoist them:
+    such a call re-runs once per array element; project its value into
+    a column before the lambda reads it."""
+    calls = set()
+    for lam in _LAMBDA_RE.finditer(plan):
+        body = _call_args(plan, lam.end())
+        for call in _SPLIT_RE.finditer(body):
+            args = _call_args(body, call.end())
+            if "lambda " not in args:
+                calls.add(f"{call.group()}{args})")
+    return calls
+
+
 # -- checkpoint-plan recorder -----------------------------------------------
 # An eager localCheckpoint runs its subtree at call time and leaves only a
 # scan of the materialized rows in the final plan, so a join planned inside

@@ -5,13 +5,16 @@ SURVEY.md's status line all stale against the registry because a late commit
 added queries without rerunning the generators.  This test makes that class
 of drift a pytest failure: register a query -> regenerate the artifacts
 (tools/gen_result_manifest.py, tools/gen_operators_md.py,
-tools/plan_audit.py) or the suite goes red.
+tools/plan_audit.py) or the suite goes red.  The package surface is pinned
+the same way: a public def nothing calls must be declared, used, or named
+in an allowlist with its reason.
 
-Pure string/JSON compares — no SparkSession is started.
+Pure string/JSON/AST compares — no SparkSession is started.
 """
 
 from __future__ import annotations
 
+import ast
 import json
 import re
 from pathlib import Path
@@ -122,3 +125,106 @@ def test_bench_base_covers_registry() -> None:
     assert not extra, (
         f"BENCH_BASE.json has {len(extra)} stale queries: {extra[:10]}"
     )
+
+
+# Public top-level defs of the package that are neither @declared nor
+# referenced in code outside tests/, grouped by why they stay.
+SURFACE_ALLOWLIST = {
+    "SURVEY-named capability": {
+        # keyed state (SURVEY §2 "stateful streaming upsert", TTL expiry)
+        "stream_ema_user_value",
+        "stream_holt_daily_value",
+        "stream_latest_state",
+        "stream_state_ttl_expiry",
+        "stream_route_state_from_frames",
+        # batch==stream twins (SURVEY §2 streaming items)
+        "tumbling_hour_counts_stream",
+        "session_windows_stream",
+        "interval_join_clicks_stream",
+        "interval_join_outer",
+        "interval_join_full",
+        "stream_static_enriched_counts_stream",
+        "dedup_stream_within_watermark",
+        # foreachBatch MERGE sink
+        "run_merge_stream",
+    },
+    "reference implementation": {
+        # frame forms the index paths are compared against
+        "substring_span_pairs_df",
+        "token_span_pairs_df",
+        "token_winnow_fps_df",
+        "batch_admission_counts",
+    },
+    "distributed fallback": {
+        # the loops collect_bounded's error message points to
+        "pagerank_loop",
+        "lpa_step",
+        "sssp_fixed",
+    },
+    "reference I/O": {
+        "write_zordered",
+        "load_config",
+        "save_config",
+        "int_keyed_names",
+        "detect_csv_schema",
+        "detect_matrix_config",
+    },
+}
+
+
+def _code_refs(tree: ast.Module) -> set[tuple[str | None, str]]:
+    """(enclosing top-level def or None, name) for every Name, attribute
+    and import alias in ``tree`` -- code references only, so a name in
+    a docstring or comment does not count."""
+    refs = set()
+    for top in tree.body:
+        owner = getattr(top, "name", None)
+        for n in ast.walk(top):
+            if isinstance(n, ast.Name):
+                refs.add((owner, n.id))
+            elif isinstance(n, ast.Attribute):
+                refs.add((owner, n.attr))
+            elif isinstance(n, (ast.Import, ast.ImportFrom)):
+                refs.update((owner, a.name.rsplit(".", 1)[-1]) for a in n.names)
+    return refs
+
+
+def test_package_surface_is_declared_used_or_allowlisted() -> None:
+    """Every public top-level function or class in the package is
+    @declared, referenced in code by a .py file outside tests/ (its own
+    body excluded), or allowlisted above.  An operator only its own tests
+    call is surface without a contract: delete it, or name its reason."""
+    pkg = REPO / "etl_rf_matrix_controller_spark"
+    sources = [
+        p for p in REPO.rglob("*.py")
+        if not {"tests", "__pycache__"} & set(p.relative_to(REPO).parts)
+    ]
+    declared = {(fn.__module__, fn.__name__) for fn in registry.QUERIES.values()}
+    defs, refs = [], {}
+    for path in sources:
+        tree = ast.parse(path.read_text())
+        for owner, name in _code_refs(tree):
+            refs.setdefault(name, set()).add((path, owner))
+        if pkg not in path.parents:
+            continue
+        module = ".".join(path.relative_to(REPO).with_suffix("").parts)
+        defs += [
+            (path, module, n.name)
+            for n in tree.body
+            if isinstance(n, (ast.FunctionDef, ast.ClassDef))
+            and not n.name.startswith("_")
+        ]
+    allowed = set().union(*SURFACE_ALLOWLIST.values())
+    unclaimed = sorted(
+        f"{module}.{name}"
+        for path, module, name in defs
+        if (module, name) not in declared
+        and name not in allowed
+        and not refs.get(name, set()) - {(path, name)}
+    )
+    assert not unclaimed, (
+        f"{len(unclaimed)} public defs are neither declared, used outside "
+        f"tests/, nor allowlisted: {unclaimed}"
+    )
+    stale = sorted(allowed - {name for _, _, name in defs})
+    assert not stale, f"allowlisted names no longer defined: {stale}"

@@ -255,186 +255,6 @@ def test_stream_rerun_is_idempotent(spark, monkeypatch, tmp_path):
     }
 
 
-def test_stream_postings_and_ivf_legs_equal_batch_append(
-    spark, monkeypatch, tmp_path
-):
-    """Round-10 verdict task #3: a streamed corpus feeds the SEARCH and
-    ANN indexes, not just admission.  Three micro-batch nights drain
-    through stream_append_to_index twice -- once as token postings, once
-    as IVF assignments -- and the stream-written delta legs hold exactly
-    the rows batch append_index_delta calls over the same nights write
-    (same layout, same batch-id namespace).  Morning probes serve
-    base ∪ stream legs: a query term / query vector finds streamed docs
-    through bucketed-scan legs."""
-    from etl_rf_matrix_controller_spark.operators.similarity import _sq_dist
-    from etl_rf_matrix_controller_spark.plans.gram_index import (
-        append_index_delta,
-        ensure_bucketed_index,
-        index_delta_frames,
-    )
-    from etl_rf_matrix_controller_spark.sources.tables import load_table
-    from etl_rf_matrix_controller_spark.streaming.ingest import (
-        batch_postings_rows,
-        make_ivf_batch_encoder,
-        stream_append_to_index,
-    )
-
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path))
-    docs, nights = _nights(spark)
-
-    # ---- postings: stream drain ----
-    kind_s, kind_b, ver = "r10postS", "r10postB", "v1"
-    kwp = dict(
-        version=ver, sort_cols=["token", "doc_id"], n_buckets=8
-    )
-    ensure_bucketed_index(
-        spark, SF_DIR, kind_s,
-        lambda s, d: batch_postings_rows(docs), ["token"], **kwp,
-    )
-    src = str(tmp_path / "poststream")
-    _stage_stream_files(spark, nights, src)
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    stream_append_to_index(
-        stream, spark, SF_DIR, kind=kind_s, bucket_cols=["token"],
-        batch_rows=batch_postings_rows,
-        checkpoint_path=str(tmp_path / "ckpt_post"), **kwp,
-    )
-    # ---- postings: batch twin under a sibling kind ----
-    ensure_bucketed_index(
-        spark, SF_DIR, kind_b,
-        lambda s, d: batch_postings_rows(docs), ["token"], **kwp,
-    )
-    for i, night in enumerate(nights):
-        append_index_delta(
-            spark, SF_DIR, kind_b,
-            lambda s, d, n=night: batch_postings_rows(n), ["token"],
-            batch_id=f"s{i:03d}", **kwp,
-        )
-    legs_s = index_delta_frames(
-        spark, SF_DIR, kind_s, version=ver, n_buckets=8
-    )
-    legs_b = index_delta_frames(
-        spark, SF_DIR, kind_b, version=ver, n_buckets=8
-    )
-    assert len(legs_s) == 3 and len(legs_b) == 3
-    for ls, lb in zip(legs_s, legs_b):  # per-leg, not just in union
-        assert {tuple(r) for r in ls.collect()} == {
-            tuple(r) for r in lb.collect()
-        }
-
-    # morning probe: a night-1 token ('zznew') resolves through a
-    # stream-written bucketed leg
-    term_hits = None
-    base_post = ensure_bucketed_index(
-        spark, SF_DIR, kind_s,
-        lambda s, d: batch_postings_rows(docs), ["token"], **kwp,
-    )
-    for leg in [base_post] + legs_s:
-        h = leg.filter(F.col("token") == "zznew")
-        term_hits = h if term_hits is None else term_hits.unionByName(h)
-    hit_ids = {r.doc_id for r in term_hits.collect()}
-    assert hit_ids and all(i >= 4000000 for i in hit_ids)
-    # the leg side of a morning probe JOIN is a bucketed scan (a pure
-    # filter scan legitimately drops bucketing -- no join to feed)
-    probe = spark.createDataFrame([("zznew",)], "token string")
-    plan = plan_of(
-        probe.alias("q")
-        .hint("shuffle_hash")
-        .join(legs_s[0].alias("i"), "token")
-    )
-    assert "Bucketed: true" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
-
-    # ---- IVF: stream drain over embedding nights ----
-    emb = load_table(spark, SF_DIR, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    cents = (
-        emb.filter(F.col("vec_id") % 100 == 0)
-        .select(
-            F.col("vec_id").alias("cent_id"), F.col("embedding").alias("ce")
-        )
-        .localCheckpoint(eager=True)
-    )
-    enights = [
-        emb.filter(F.col("vec_id") % 25 == m).select(
-            (F.col("vec_id") + (m + 1) * 100000).alias("vec_id"),
-            "embedding",
-        )
-        for m in (7, 8, 9)
-    ]
-    kind_vs, kind_vb = "r10ivfS", "r10ivfB"
-    kwv = dict(
-        version=ver, sort_cols=["cent_id", "vec_id"], n_buckets=8,
-        source_table="embeddings",
-    )
-    encode = make_ivf_batch_encoder(cents)
-    ensure_bucketed_index(
-        spark, SF_DIR, kind_vs, lambda s, d: encode(emb), ["cent_id"],
-        **kwv,
-    )
-    vsrc = str(tmp_path / "ivfstream")
-    _stage_stream_files(spark, enights, vsrc)
-    vstream = (
-        spark.readStream.schema("vec_id bigint, embedding array<float>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(vsrc)
-    )
-    stream_append_to_index(
-        vstream, spark, SF_DIR, kind=kind_vs, bucket_cols=["cent_id"],
-        batch_rows=encode, checkpoint_path=str(tmp_path / "ckpt_ivf"),
-        **kwv,
-    )
-    ensure_bucketed_index(
-        spark, SF_DIR, kind_vb, lambda s, d: encode(emb), ["cent_id"],
-        **kwv,
-    )
-    for i, night in enumerate(enights):
-        append_index_delta(
-            spark, SF_DIR, kind_vb,
-            lambda s, d, n=night: encode(n), ["cent_id"],
-            batch_id=f"s{i:03d}", **kwv,
-        )
-    vlegs_s = index_delta_frames(
-        spark, SF_DIR, kind_vs, version=ver, n_buckets=8,
-        source_table="embeddings",
-    )
-    vlegs_b = index_delta_frames(
-        spark, SF_DIR, kind_vb, version=ver, n_buckets=8,
-        source_table="embeddings",
-    )
-    assert len(vlegs_s) == 3 and len(vlegs_b) == 3
-    key = lambda r: (r["cent_id"], r["vec_id"])  # noqa: E731
-    for ls, lb in zip(vlegs_s, vlegs_b):
-        assert sorted(map(key, ls.collect())) == sorted(
-            map(key, lb.collect())
-        )
-
-    # morning ANN probe: a streamed vector's verbatim copy is found in
-    # its centroid's list through a stream-written leg
-    q = emb.filter(F.col("vec_id") % 25 == 7).limit(1).collect()[0]
-    qcent = (
-        cents.select(
-            "cent_id", _sq_dist(F.lit(q.embedding), F.col("ce")).alias("d")
-        )
-        .orderBy("d", "cent_id")
-        .limit(1)
-        .collect()[0]
-        .cent_id
-    )
-    found = set()
-    for leg in vlegs_s:
-        found |= {
-            r.vec_id
-            for r in leg.filter(F.col("cent_id") == qcent).collect()
-        }
-    assert q.vec_id + 800000 in found, (q.vec_id, qcent, sorted(found)[:5])
-
-
 def test_stream_ingest_compacts_mid_stream(spark, monkeypatch, tmp_path):
     """compact-at-K wired into the ingest loop: with max_deltas=2 the
     fold happens mid-stream (manifest flip to __g1), the next batch
@@ -482,8 +302,10 @@ def test_stream_ingest_compacts_mid_stream(spark, monkeypatch, tmp_path):
 def test_unification_leaves_no_temp_dir(spark, monkeypatch, tmp_path):
     """stream_index_ingest_unification stages its stream source,
     checkpoint and records sink in one temporary directory and removes
-    it before it returns; the frame it returns still hashes to the
-    manifest."""
+    it before it returns.  It also frees every block it persisted: its
+    caches and its localCheckpoint frames (the per-batch quality flags
+    and bands), whose blocks ``unpersist()`` alone never reaches.  The
+    frame it returns still hashes to the manifest."""
     import json
     import tempfile
 
@@ -492,11 +314,17 @@ def test_unification_leaves_no_temp_dir(spark, monkeypatch, tmp_path):
     )
     from tests.conftest import MANIFEST, result_hash
 
+    def persistent_rdds():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    before = persistent_rdds()
     out = stream_index_ingest_unification(spark, SF_DIR)
     assert not [
         n for n in os.listdir(tmp_path) if n.startswith("spark_graft_ingest_")
     ]
+    assert persistent_rdds() - before == set()
     with open(MANIFEST) as f:
         want = json.load(f)["stream_index_ingest_unification"]
     assert result_hash(out) == want
+

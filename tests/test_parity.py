@@ -17,7 +17,10 @@ oracle on its own cursor.  Each query's own test then checks:
    (SCAN_ALLOWLIST below for deliberate multi-pass ops).  A checkpoint's
    subtree runs exactly once, which is the point of checkpointing;
 5. no write to a conf of the session the query was given (the other
-   queries of the pass plan under that session's confs meanwhile).
+   queries of the pass plan under that session's confs meanwhile);
+6. no loop-invariant ``split``/``regexp_*`` call inside a
+   higher-order-function lambda, in the final plan or a checkpointed
+   intermediate (Spark re-runs it once per array element).
 
 Queries are independent, index publishes are atomic with thread-unique
 staging (plans/gram_index.py) and registration races re-resolve, so the
@@ -43,6 +46,7 @@ from tests.conftest import (
     conf_writes,
     duck_rows,
     formatted,
+    invariant_lambda_calls,
     join_offences,
     plan_of,
     rows_hash,
@@ -126,6 +130,13 @@ def test_oracle_parity(built, manifest, name):
         if any(join_offences(plan))
     }
     assert not offences, f"{name}: (SMJ, cartesian) counts: {offences}"
+    invariant = set().union(
+        *map(invariant_lambda_calls, [b.plan, *b.checkpoint_plans])
+    )
+    assert not invariant, (
+        f"{name}: loop-invariant calls inside a lambda (project them into "
+        f"a column first): {sorted(invariant)}"
+    )
     over = {
         t: c for t, c in Counter(scanned_tables(b.fmt)).items()
         if c > SCAN_CEILING

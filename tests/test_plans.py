@@ -9,9 +9,6 @@ it's the plan you'd want').
 from __future__ import annotations
 
 from pyspark.sql.functions import col as F_col
-from pyspark.sql.functions import count as F_count
-from pyspark.sql.functions import lit as F_lit
-from pyspark.sql.functions import sum as F_sum
 
 from etl_rf_matrix_controller_spark.operators.joins import routes_csv_denorm
 from etl_rf_matrix_controller_spark.operators.multimodal import multimodal_meta_only
@@ -58,59 +55,6 @@ def test_token_counts_single_shuffle(spark):
     assert n_exchanges <= 1, f"expected <=1 shuffle, saw {n_exchanges}:\n{plan}"
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Identically-bucketed tables must join with ZERO shuffles -- the
-    co-location contract write_bucketed promises.  Runs on a new session
-    (shared SparkContext and catalog, its own SQLConf), so the disabled
-    broadcast never reaches queries on the shared one."""
-    from etl_rf_matrix_controller_spark.plans.scale import write_bucketed
-    from etl_rf_matrix_controller_spark.sources.tables import load_table
-
-    spark = spark.newSession()
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        orders = load_table(spark, SF_DIR, "orders")
-        lineitem = load_table(spark, SF_DIR, "lineitem").select(
-            F_col("l_orderkey"), F_col("l_quantity")
-        )
-        write_bucketed(orders, "orders_b", "o_orderkey", 4)
-        write_bucketed(
-            lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
-            "lineitem_b",
-            "o_orderkey",
-            4,
-        )
-        j = spark.table("orders_b").join(spark.table("lineitem_b"), "o_orderkey")
-        plan = plan_of(j)
-        assert "SortMergeJoin" in plan, plan
-        assert "Exchange" not in plan, f"bucketed join must not shuffle:\n{plan}"
-    finally:
-        spark.sql("DROP TABLE IF EXISTS orders_b")
-        spark.sql("DROP TABLE IF EXISTS lineitem_b")
-
-
-def test_salted_agg_matches_direct(spark):
-    """Salting must not change results -- only the shuffle layout."""
-    from etl_rf_matrix_controller_spark.plans.scale import salted_agg
-    from etl_rf_matrix_controller_spark.sources.tables import load_table
-
-    li = load_table(spark, SF_DIR, "lineitem")
-    direct = {
-        (r.l_returnflag, round(r.s, 2), r.n)
-        for r in li.groupBy("l_returnflag")
-        .agg(
-            F_sum("l_quantity").alias("s"),
-            F_count(F_lit(1)).alias("n"),
-        )
-        .collect()
-    }
-    salted = {
-        (r.l_returnflag, round(r.sum_l_quantity, 2), r.n_rows)
-        for r in salted_agg(li, "l_returnflag", "l_quantity").collect()
-    }
-    assert direct == salted
-
-
 def test_whole_stage_codegen_everywhere(spark):
     """Scalar projections must run inside WholeStageCodegen spans.  AQE
     only materializes codegen stages in the final plan, so execute first."""
@@ -126,10 +70,7 @@ def test_aqe_splits_skewed_join(spark):
     rows.  With broadcast disabled (the 100 TB posture -- both sides too
     big to ship) the join shuffles on the skewed key; AQE must detect the
     oversized partition at runtime and split it, which the final adaptive
-    plan records as ``skew=true`` on the join node.  When AQE cannot
-    engage (e.g. the join sits under another shuffle-consuming operator),
-    plans/scale.py's salted_agg is the manual fallback -- asserted
-    result-equal in test_salted_agg_matches_direct.  Runs on a new
+    plan records as ``skew=true`` on the join node.  Runs on a new
     session, so its confs never reach queries on the shared one."""
     spark = spark.newSession()
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

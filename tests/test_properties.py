@@ -200,31 +200,6 @@ def test_substring_spans_match_bruteforce(spark, texts):
     assert got == _ref_spans(docs, 3, _tokens), (texts, got)
 
 
-word_tables = st.dictionaries(
-    st.text(alphabet="abc", min_size=1, max_size=6),
-    st.integers(min_value=1, max_value=9),
-    min_size=1,
-    max_size=6,
-)
-
-
-@given(words=word_tables)
-@SETTINGS
-def test_bpe_merge_loop_matches_reference_random(spark, words):
-    """bpe_merge_loop == the plain-Python Sennrich reference for any
-    small word-frequency table (3 merges; ties and overlap runs arise
-    naturally from the tiny alphabet)."""
-    from etl_rf_matrix_controller_spark.operators.text import bpe_merge_loop
-    from tests.test_round4_ops import _ref_bpe
-
-    ref_merges, ref_vocab = _ref_bpe(dict(words), 3)
-    df = spark.createDataFrame(list(words.items()), "token string, cnt bigint")
-    merges, vocab = bpe_merge_loop(df, n_merges=3)
-    assert merges == ref_merges, (words, merges, ref_merges)
-    got = {r.token: list(r.syms) for r in vocab.collect()}
-    assert got == ref_vocab, (words, got, ref_vocab)
-
-
 # ---- round-4 continuation properties ----------------------------------
 
 

@@ -1,5 +1,5 @@
-"""Round-4 operator edge semantics: the iterated BPE merge loop against a
-plain-Python reference, and substring-span dedup on crafted overlap cases.
+"""Round-4 operator edge semantics: substring-span dedup on crafted
+overlap cases.
 """
 
 from __future__ import annotations
@@ -7,74 +7,6 @@ from __future__ import annotations
 from etl_rf_matrix_controller_spark.operators.dedup import (
     substring_span_pairs_df,
 )
-from etl_rf_matrix_controller_spark.operators.text import bpe_merge_loop
-
-
-def _ref_bpe(word_counts: dict[str, int], n: int):
-    """Reference BPE (Sennrich et al. 2016): most-frequent adjacent pair,
-    lexicographic tiebreak, greedy left-to-right non-overlapping merge."""
-    vocab = {w: list(w) for w in word_counts}
-    merges = []
-    for _ in range(n):
-        pc: dict[tuple[str, str], int] = {}
-        for w, cnt in word_counts.items():
-            s = vocab[w]
-            for i in range(len(s) - 1):
-                pc[(s[i], s[i + 1])] = pc.get((s[i], s[i + 1]), 0) + cnt
-        if not pc:
-            break
-        (left, right), c = min(pc.items(), key=lambda kv: (-kv[1], kv[0]))
-        merges.append((left, right, c))
-        for w, s in vocab.items():
-            out, i = [], 0
-            while i < len(s):
-                if i + 1 < len(s) and s[i] == left and s[i + 1] == right:
-                    out.append(left + right)
-                    i += 2
-                else:
-                    out.append(s[i])
-                    i += 1
-            vocab[w] = out
-    return merges, vocab
-
-
-def test_bpe_merge_loop_matches_reference(spark):
-    # Corpus chosen to force: a clear first merge, a tie broken
-    # lexicographically, and a later merge whose left symbol is itself a
-    # merged token (multi-char), plus an overlap run ("aaaa").
-    word_counts = {
-        "aaaa": 3,
-        "abab": 2,
-        "banana": 4,
-        "bandana": 1,
-        "na": 5,
-    }
-    ref_merges, ref_vocab = _ref_bpe(word_counts, 6)
-
-    words = spark.createDataFrame(
-        list(word_counts.items()), "token string, cnt bigint"
-    )
-    merges, vocab = bpe_merge_loop(words, n_merges=6)
-    assert merges == ref_merges, (merges, ref_merges)
-    got = {r.token: list(r.syms) for r in vocab.collect()}
-    assert got == ref_vocab, (got, ref_vocab)
-
-
-def test_bpe_merge_loop_overlap_greedy(spark):
-    # "xxxx" under merge (x, x) must become [xx, xx] (non-overlapping
-    # left-to-right), never [x, xx, x] or a chained [xxx, x].
-    words = spark.createDataFrame([("xxxx", 1)], "token string, cnt bigint")
-    merges, vocab = bpe_merge_loop(words, n_merges=1)
-    assert merges == [("x", "x", 3)]  # 3 adjacent pairs counted pre-merge
-    assert [list(r.syms) for r in vocab.collect()] == [["xx", "xx"]]
-
-
-def test_bpe_merge_loop_stops_when_dry(spark):
-    # Single-char words have no pairs: the loop must stop early, not spin.
-    words = spark.createDataFrame([("a", 9), ("b", 4)], "token string, cnt bigint")
-    merges, vocab = bpe_merge_loop(words, n_merges=5)
-    assert merges == []
-    assert {r.token for r in vocab.collect()} == {"a", "b"}
 
 
 def _spans(df):

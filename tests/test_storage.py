@@ -77,61 +77,6 @@ def test_corrupt_json_records_tolerated(spark, tmp_path):
     assert len(bad) == 1 and "not json" in bad[0]._corrupt_record
 
 
-def test_compaction_preserves_rows_and_clustering(spark, tmp_path):
-    """compact_parquet collapses a fragmented table into the computed
-    file count, keeps every row, and (with sort_cols) leaves the output
-    range-clustered so footer min/max skipping still works."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    from etl_rf_matrix_controller_spark.operators.layout import compact_parquet
-    from etl_rf_matrix_controller_spark.sources.tables import load_table
-
-    frag = str(tmp_path / "frag")
-    compacted = str(tmp_path / "compacted")
-    ev = load_table(spark, SF_DIR, "events").select("event_id", "user_id")
-    ev.repartition(60).write.parquet(frag)
-
-    def parquet_files(d):
-        return [
-            os.path.join(r, f)
-            for r, _, fs in os.walk(d)
-            for f in fs
-            if f.endswith(".parquet")
-        ]
-
-    assert len(parquet_files(frag)) == 60
-    frag_bytes = sum(os.path.getsize(f) for f in parquet_files(frag))
-    target = frag_bytes // 4  # force ~5 output files from 60
-    n = compact_parquet(spark, frag, compacted, target, sort_cols=["user_id"])
-    files = parquet_files(compacted)
-    assert len(files) == n <= 6
-
-    # No row lost, none duplicated.
-    a = spark.read.parquet(frag).collect()
-    b = spark.read.parquet(compacted).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
-    # Clustering survived: per-file user_id ranges are pairwise disjoint
-    # (range partitioning), so a point predicate touches ONE file.
-    ranges = []
-    for f in files:
-        md = pq.read_metadata(f)
-        lo = min(
-            md.row_group(i).column(1).statistics.min
-            for i in range(md.num_row_groups)
-        )
-        hi = max(
-            md.row_group(i).column(1).statistics.max
-            for i in range(md.num_row_groups)
-        )
-        ranges.append((lo, hi))
-    ranges.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2, ranges
-
-
 def test_training_shard_export_manifest_is_verifiable(spark, tmp_path):
     """Shard export: partition layout matches (lang, pack_bin), manifest
     totals equal the source packing, and per-shard content fingerprints

@@ -30,19 +30,6 @@ def test_tumbling_batch_eq_stream(spark):
     )
 
 
-def test_sliding_batch_eq_stream(spark):
-    from etl_rf_matrix_controller_spark.streaming.windows import (
-        sliding_window_counts,
-        sliding_window_counts_stream,
-    )
-
-    _assert_same(
-        sliding_window_counts(spark, SF_DIR),
-        sliding_window_counts_stream(spark, SF_DIR),
-        "sliding_window_counts",
-    )
-
-
 def test_session_batch_eq_stream(spark):
     _assert_same(
         session_windows(spark, SF_DIR),
@@ -797,91 +784,6 @@ def test_transition_partials_bounded_by_pairs_not_events(spark):
     assert partials.agg(F.sum("n")).first()[0] == (
         n_events - events.select("user_id").distinct().count()
     )
-
-
-def test_twap_batch_eq_stream(spark):
-    """Per-user time-weighted average (applyInPandasWithState) == the
-    batch lead()-window integral, bit-exact: epoch seconds and value
-    scaling happen JVM-side, the held-interval accumulators are exact
-    int64, and the single float division uses identical operands."""
-    from etl_rf_matrix_controller_spark.operators.behavior import (
-        time_weighted_avg_value,
-    )
-    from etl_rf_matrix_controller_spark.streaming.state import (
-        stream_twap_user_value,
-    )
-
-    _assert_same(
-        time_weighted_avg_value(spark, SF_DIR),
-        stream_twap_user_value(spark, SF_DIR),
-        "time_weighted_avg_value",
-    )
-
-
-def test_clamped_balance_batch_eq_stream(spark):
-    """Clamped-balance fold (all-integer state) == batch array fold,
-    exactly: the clamp is history-erasing, so this only holds if the
-    stream applies deltas in the same (ts, event_id) order and carries
-    complete (bal, clamps) state across micro-batches."""
-    from etl_rf_matrix_controller_spark.operators.behavior import (
-        clamped_running_balance,
-    )
-    from etl_rf_matrix_controller_spark.streaming.state import (
-        stream_clamped_balance,
-    )
-
-    _assert_same(
-        clamped_running_balance(spark, SF_DIR).select(
-            "user_id", "balance_s", "n_clamps"
-        ),
-        stream_clamped_balance(spark, SF_DIR),
-        "clamped_running_balance",
-    )
-
-
-def test_cms_cells_batch_eq_stream(spark):
-    """The count-min sketch built as streaming keyed state (cell-wise
-    increments per micro-batch) is bit-equal to the batch one-pass
-    build -- the mergeability property that makes sketches the right
-    streaming state at scale."""
-    from pyspark.sql import functions as F
-
-    from etl_rf_matrix_controller_spark.operators.aggregates import (
-        CMS_CELLS,
-        CMS_ROWS,
-    )
-    from etl_rf_matrix_controller_spark.streaming.state import stream_cms_cells
-
-    ev = load_table(spark, SF_DIR, "events").select("user_id")
-    cell = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "_",
-                        F.col("row_id").cast("string"),
-                        F.col("user_id").cast("string"),
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % CMS_CELLS
-    )
-    batch = (
-        ev.select(
-            "user_id",
-            F.explode(F.sequence(F.lit(0), F.lit(CMS_ROWS - 1))).alias("rid"),
-        )
-        .select("user_id", F.col("rid").cast("long").alias("row_id"))
-        .select("row_id", cell.alias("cell"))
-        .groupBy("row_id", "cell")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    )
-    _assert_same(batch, stream_cms_cells(spark, SF_DIR), "cms_cells")
 
 
 def test_stream_hdr_clamp_folds_nonpositive_into_v1(spark, tmp_path):
